@@ -1,18 +1,21 @@
 """Expected outputs: the registry's DuckDB oracles, and the comparison.
 
-The oracles run in a small pool of spawned, low-priority processes
-while the Spark session starts and the inputs stage, so neither their
-CPU nor their memory is counted as the engine's.
+The oracles run in two low-priority child processes (this file run as a
+script) while the Spark session starts and the inputs stage, so neither
+their CPU nor their memory is counted as the engine's. They are plain
+``subprocess`` children, waited for or killed by ``Oracles.stop``:
+nothing of them outlives the benchmark.
 """
 
 from __future__ import annotations
 
-import datetime
 import decimal
+import json
 import math
-import multiprocessing
 import os
-from concurrent.futures import ProcessPoolExecutor
+import pickle
+import subprocess
+import sys
 
 import duckdb
 
@@ -66,37 +69,77 @@ def parquet_sql(path: str, select: str = "*") -> str:
     return f"SELECT {select} FROM read_parquet('{path}/*.parquet')"
 
 
-def _oracle(scratch: str, data_dir: str, tables: list[str], sql: str) -> tuple:
-    con = _connect(scratch, data_dir, tables)
+class Oracles:
+    """The named registry oracles over the tables in ``data_dir``,
+    computed in ``workers`` child processes; ``oracles[q]`` is the
+    (columns, rows) of query ``q``, and raises if it could not be
+    computed."""
+
+    def __init__(self, scratch: str, data_dir: str, tables, names, workers: int = 2):
+        from capex_data_pipeline_spark.registry import ORACLES
+
+        self._procs, self._outs, self._results = [], [], {}
+        for i in range(workers):
+            chunk = {q: ORACLES[q] for q in list(names)[i::workers]}
+            if not chunk:
+                continue
+            job = os.path.join(scratch, f"oracles{i}.json")
+            out = os.path.join(scratch, f"oracles{i}.pkl")
+            with open(job, "w", encoding="utf-8") as fh:
+                json.dump({"scratch": scratch, "data_dir": data_dir,
+                           "tables": list(tables), "queries": chunk}, fh)
+            self._procs.append(subprocess.Popen(
+                [sys.executable, os.path.abspath(__file__), job, out],
+                stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+            ))
+            self._outs.append(out)
+
+    def wait(self) -> None:
+        for p in self._procs:
+            p.wait()
+
+    def stop(self) -> None:
+        """Kill any oracle still running, and wait for each."""
+        for p in self._procs:
+            if p.poll() is None:
+                p.kill()
+            p.wait()
+
+    def __getitem__(self, q: str) -> tuple:
+        if not self._results:
+            self.wait()
+            for out in self._outs:
+                if os.path.exists(out):
+                    with open(out, "rb") as fh:
+                        self._results.update(pickle.load(fh))
+        if q not in self._results:
+            raise RuntimeError(f"oracle {q} was not computed")
+        return self._results[q]
+
+
+def _oracle_main(job_path: str, out_path: str) -> None:
+    os.nice(10)
+    with open(job_path, encoding="utf-8") as fh:
+        job = json.load(fh)
+    con = _connect(job["scratch"], job["data_dir"], job["tables"])
     try:
-        return _fetch(con, sql)
+        results = {q: _fetch(con, sql) for q, sql in job["queries"].items()}
     finally:
         con.close()
-
-
-def oracle_pool() -> ProcessPoolExecutor:
-    return ProcessPoolExecutor(
-        max_workers=2,
-        mp_context=multiprocessing.get_context("spawn"),
-        initializer=os.nice,
-        initargs=(10,),
-    )
-
-
-def start_oracles(pool, scratch: str, data_dir: str, tables, names) -> dict:
-    """Submit each named registry oracle over the tables in ``data_dir``;
-    returns {query: future of (columns, rows)}."""
-    from capex_data_pipeline_spark.registry import ORACLES
-
-    return {q: pool.submit(_oracle, scratch, data_dir, list(tables), ORACLES[q])
-            for q in names}
+    with open(out_path + ".tmp", "wb") as fh:
+        pickle.dump(results, fh)
+    os.replace(out_path + ".tmp", out_path)
 
 
 def check_outputs(scratch: str, tasks: list, expected: dict) -> list:
     """Compare each ``(name, sql over written outputs, oracle query)``."""
     con = _connect(scratch)
     try:
-        return [compare(name, _fetch(con, sql), expected[q].result())
+        return [compare(name, _fetch(con, sql), expected[q])
                 for name, sql, q in tasks]
     finally:
         con.close()
+
+
+if __name__ == "__main__":
+    _oracle_main(*sys.argv[1:])

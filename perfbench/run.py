@@ -27,15 +27,17 @@ import time
 T0 = time.time()
 
 import argparse  # noqa: E402
+import contextlib  # noqa: E402
+import ctypes  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
+import signal  # noqa: E402
 import statistics  # noqa: E402
 import subprocess  # noqa: E402
 import sys  # noqa: E402
 import traceback  # noqa: E402
 import uuid  # noqa: E402
-from concurrent.futures import wait  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -63,6 +65,7 @@ SPAN_FIELDS = {"wall_s": "s", "jobs": "count", "task_s": "s", "driver_gap_s": "s
 EXTRA_LAYER_METRICS = {
     "registry.build_ms": "ms",
     "registry.exec_ms": "ms",
+    "registry.query_p50_ms": "ms",
     "registry.jobs_per_query": "count",
     "registry.tasks_per_query": "count",
     "cache.tracked_after": "count",
@@ -79,7 +82,6 @@ END_TO_END = {
     "setup_s": "s",
     "wall_s": "s",
     "rows_per_s": "rows/s",
-    "query_p50_ms": "ms",
 }
 #: staging repetitions whose median is the staging part of setup_s
 STAGE_REPS = 3
@@ -163,6 +165,43 @@ def stop_spark(spark) -> None:
         proc.wait()
 
 
+def become_subreaper() -> None:
+    """Adopt orphaned descendants (such as Python workers the JVM forks),
+    so that ``reap_children`` can stop them before this process exits."""
+    with contextlib.suppress(OSError, AttributeError):
+        ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)  # PR_SET_CHILD_SUBREAPER
+
+
+def child_pids() -> list[int]:
+    me, pids = str(os.getpid()), []
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat", encoding="ascii", errors="replace") as fh:
+                ppid = fh.read().rsplit(")", 1)[1].split()[1]
+        except (OSError, IndexError):
+            continue
+        if ppid == me:
+            pids.append(int(d))
+    return pids
+
+
+def reap_children(grace_s: float = 10) -> None:
+    """Stop every process still left under this one and wait for each:
+    SIGTERM, then SIGKILL once ``grace_s`` has passed."""
+    deadline = time.time() + grace_s
+    while pids := child_pids():
+        sig = signal.SIGTERM if time.time() < deadline else signal.SIGKILL
+        for pid in pids:
+            with contextlib.suppress(ProcessLookupError):
+                os.kill(pid, sig)
+        time.sleep(0.1)
+        for pid in pids:
+            with contextlib.suppress(ChildProcessError):
+                os.waitpid(pid, os.WNOHANG)
+
+
 def stage(wl, ctx, rep: int) -> None:
     import datagen
 
@@ -201,6 +240,7 @@ def layer_metrics(wl, ctx, ops: list[int], host: dict, rss_kb: int) -> dict:
             s.wall_s for q in queries for s in q if s.name == "registry.build")
         m["registry.exec_ms"] = 1000 * med(
             s.wall_s for q in queries for s in q if s.name == "registry.exec")
+        m["registry.query_p50_ms"] = 1000 * med(q[0].wall_s for q in queries)
         m["registry.jobs_per_query"] = statistics.mean(
             sum(s.jobs for s in q) for q in queries)
         m["registry.tasks_per_query"] = statistics.mean(
@@ -225,7 +265,7 @@ def layer_metrics(wl, ctx, ops: list[int], host: dict, rss_kb: int) -> dict:
 def run_workload(wl, args, host, scratch, failures: list) -> tuple[dict, dict]:
     """Set up, time and check one workload; returns (metrics, record)."""
     import datagen
-    from expected import oracle_pool, start_oracles
+    from expected import Oracles
     from spans import Tracer, attribute
     from workloads import Context
 
@@ -234,15 +274,14 @@ def run_workload(wl, args, host, scratch, failures: list) -> tuple[dict, dict]:
     # computed on the side while the session starts and inputs stage
     expected_dir = os.path.join(scratch, "expected")
     rows = datagen.generate(expected_dir, args.seed, wl.sf, wl.n_docs)
-    pool = oracle_pool()
-    expected = start_oracles(pool, scratch, expected_dir, rows, wl.oracles())
+    expected = Oracles(scratch, expected_dir, rows, wl.oracles())
     tracer = Tracer()
     event_dir = os.path.join(scratch, "eventlog") if args.trace else None
     try:
         with tracer.span("session.get_spark"):
             spark = start_spark(scratch, host, event_dir)
     except BaseException:
-        pool.shutdown(cancel_futures=True)
+        expected.stop()
         raise
     session_s = time.time() - t
     record = {"workload": wl.name, "seed": args.seed, "spark": spark.version}
@@ -260,7 +299,7 @@ def run_workload(wl, args, host, scratch, failures: list) -> tuple[dict, dict]:
                 wl.warmup(ctx)
         warm_s = time.time() - t
         t = time.time()
-        wait(expected.values())
+        expected.wait()
         oracle_wait_s = time.time() - t
         setup_s = session_s + statistics.median(stage_s) + warm_s + oracle_wait_s
 
@@ -285,7 +324,7 @@ def run_workload(wl, args, host, scratch, failures: list) -> tuple[dict, dict]:
             spark.sparkContext._gateway.proc.pid)
     finally:
         stop_spark(spark)
-        pool.shutdown(cancel_futures=True)
+        expected.stop()
 
     # outputs were written to files: check them with the JVM gone
     if walls:
@@ -315,7 +354,6 @@ def run_workload(wl, args, host, scratch, failures: list) -> tuple[dict, dict]:
             "setup_s": setup_s,
             "wall_s": wall,
             "rows_per_s": record["input_rows"] / wall,
-            "query_p50_ms": 1000 * statistics.median(lat),
         }
         units = END_TO_END
     record["attempted"] = attempted
@@ -347,6 +385,7 @@ def main() -> int:
     else:
         ap.error(f"--workload must be one of {sorted(WORKLOADS)}")
 
+    become_subreaper()
     host = host_info()
     scratch = os.path.join(ROOT, ".perfbench_scratch", uuid.uuid4().hex)
     os.environ["TMPDIR"] = os.path.join(scratch, "tmp")
@@ -362,6 +401,7 @@ def main() -> int:
             attempted += record["attempted"]
             records.append(record)
     finally:
+        reap_children()
         shutil.rmtree(scratch, ignore_errors=True)
         parent = os.path.dirname(scratch)
         if os.path.isdir(parent) and not os.listdir(parent):

@@ -23,6 +23,20 @@ def _spec() -> dict:
         return json.load(fh)
 
 
+def _session_pids(sid: int) -> list[int]:
+    """Processes (zombies too) still in session ``sid``."""
+    pids = []
+    for d in os.listdir("/proc"):
+        try:
+            with open(f"/proc/{d}/stat", encoding="ascii", errors="replace") as fh:
+                fields = fh.read().rsplit(")", 1)[1].split()
+        except (OSError, IndexError):
+            continue
+        if int(fields[3]) == sid:
+            pids.append(int(d))
+    return pids
+
+
 def test_benchmark_json_matches_run_tables():
     spec = _spec()
     assert {m["name"]: m["unit"] for m in spec["end_to_end"]} == run.END_TO_END
@@ -35,12 +49,16 @@ def test_benchmark_json_matches_run_tables():
 
 
 def test_smoke_runs_every_workload_with_checks():
-    p = subprocess.run(
+    # its own session, so that anything it leaves running can be found
+    p = subprocess.Popen(
         [sys.executable, os.path.join(HERE, "run.py"), "--smoke"],
-        cwd=ROOT, capture_output=True, text=True, timeout=900,
+        cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        start_new_session=True,
     )
-    assert p.returncode == 0, p.stderr[-4000:]
-    record, result = (json.loads(line) for line in p.stdout.strip().split("\n")[-2:])
+    stdout, stderr = p.communicate(timeout=900)
+    assert p.returncode == 0, stderr[-4000:]
+    assert _session_pids(p.pid) == []
+    record, result = (json.loads(line) for line in stdout.strip().split("\n")[-2:])
     assert result["correct"] and result["failed"] == 0
     assert [r["workload"] for r in record["runs"]] == [w["name"] for w in _spec()["workloads"]]
     for r in record["runs"]:

@@ -41,6 +41,25 @@ def noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def touch_operators(ctx: Context) -> None:
+    """The warm-up: a full warm-up operation would not fit the run
+    budget, so touch the common physical operators (scan, join,
+    aggregate, window, parquet write) once instead; the timed operation
+    then pays its own plans' compilation but not the JVM's first-use
+    costs."""
+    from pyspark.sql.window import Window
+
+    from capex_data_pipeline_spark.sources.parquet import read_table
+
+    o = read_table(ctx.spark, ctx.data_dir, "orders")
+    li = read_table(ctx.spark, ctx.data_dir, "lineitem")
+    per_cust = li.join(o, li["l_orderkey"] == o["o_orderkey"]).groupBy(
+        "o_custkey").agg(F.sum("l_extendedprice"), F.countDistinct("l_partkey"))
+    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"))
+    noop(o.withColumn("rn", F.row_number().over(w)).filter("rn <= 3"))
+    per_cust.write.parquet(ctx.out_dir("warmup"))
+
+
 # ------------------------------------------------------------ workloads
 
 
@@ -96,21 +115,7 @@ class CapexEtl(Workload):
         return ctx.rows["orders"]
 
     def warmup(self, ctx: Context) -> None:
-        # a full warm-up operation would not fit the run budget: touch
-        # the common physical operators (scan, join, aggregate, window,
-        # parquet write) once instead, so the timed operation pays its
-        # own plans' compilation but not the JVM's first-use costs
-        from pyspark.sql.window import Window
-
-        from capex_data_pipeline_spark.sources.parquet import read_table
-
-        o = read_table(ctx.spark, ctx.data_dir, "orders")
-        li = read_table(ctx.spark, ctx.data_dir, "lineitem")
-        per_cust = li.join(o, li["l_orderkey"] == o["o_orderkey"]).groupBy(
-            "o_custkey").agg(F.sum("l_extendedprice"), F.countDistinct("l_partkey"))
-        w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"))
-        noop(o.withColumn("rn", F.row_number().over(w)).filter("rn <= 3"))
-        per_cust.write.parquet(ctx.out_dir("warmup"))
+        touch_operators(ctx)
 
     def run_once(self, ctx: Context, i: int) -> list[float]:
         from capex_data_pipeline_spark import cache
@@ -196,41 +201,34 @@ class CapexEtl(Workload):
         ], expected) + [_released(ctx)]
 
 
-#: the registry's sub-second builders behind the reference's dashboard
-#: views (the SURVEY section 2 operators), plus the exact Jaccard
-#: self-join (q161), the one compute-bound query; with the tables each
-#: one scans
+#: registry builders behind the reference's dashboard views (SURVEY
+#: section 2 operators: filter, broadcast and semi joins, pivot, top-k and
+#: dedup windows, composite key, reconciliation, rollup, running
+#: analytics), plus the exact Jaccard self-join (q161), the one
+#: compute-bound query; with the tables each one scans. Eleven of the
+#: registry's 21 sub-second builders: each costs about 2 s cold in a
+#: fresh JVM, and all 21 would put an invocation well over a minute.
 DASHBOARD = {
     "q01_status_filter": ["orders"],
-    "q02_regex_filter": ["part"],
-    "q03_isin_filter": ["customer"],
-    "q04_normalize_map": ["part"],
-    "q05_conditional_recat": ["part"],
     "q06_broadcast_dim_join": ["customer", "nation", "region"],
     "q07_semi_join": ["lineitem", "orders"],
     "q09_pivot_sum": ["lineitem"],
-    "q10_summary_report": ["orders"],
-    "q11_profile": ["orders", "events"],
     "q14_topk_per_group": ["orders"],
     "q15_dedup_first": ["events"],
-    "q16_set_ops": ["orders", "customer"],
     "q19_composite_key": ["lineitem"],
-    "q20_priority_score": ["orders"],
     "q21_amount_reconcile": ["orders", "lineitem"],
-    "q22_set_agg_compare": ["orders"],
-    "q23_validation_metrics": ["orders", "customer"],
     "q28_rollup_subtotals": ["orders"],
     "q54_running_analytics": ["orders"],
     "q161_jaccard_join": ["documents"],
-    "q207_cube_aggregate": ["orders"],
 }
 #: q161's builder is the dedup layer's jaccard_similarity_join
 JACCARD = "q161_jaccard_join"
 
 
 def _dashboard_pass(ctx: Context, i: int, out: dict) -> list[float]:
-    """Build and write every dashboard query once, in seeded order;
-    returns the latency of each (builder call through the write)."""
+    """Build and write every dashboard query in seeded order, each twice
+    back to back; returns the latency of each second run (builder call
+    through the write)."""
     from capex_data_pipeline_spark.registry import QUERIES
 
     span = ctx.tracer.span
@@ -238,16 +236,23 @@ def _dashboard_pass(ctx: Context, i: int, out: dict) -> list[float]:
     random.Random(f"{ctx.seed}-{i}").shuffle(names)
     lat = []
     for q in names:
-        out[q] = ctx.out_dir(q)
         jaccard = q == JACCARD
-        with span("registry.query") as s:
-            with span("registry.build"), \
-                    span("dedup.jaccard.build") if jaccard else nullcontext():
-                df = QUERIES[q](ctx.spark, ctx.data_dir)
-            with span("registry.exec"), \
-                    span("dedup.jaccard.exec") if jaccard else nullcontext():
-                df.write.parquet(out[q])
-        lat.append(s.wall_s)
+        # the first run pays the query's cold cost (planning, code
+        # generation, first use of its operators), which a warm-up pass
+        # would double within the run budget; the second is the warm
+        # refresh a long-lived dashboard serves, a steadier sample.
+        # q161 is compute-bound and runs once: it counts in wall_s only
+        for warm in (False,) if jaccard else (False, True):
+            out[q] = ctx.out_dir(q)
+            with span("registry.query" if warm else "registry.first") as s:
+                with span("registry.build"), \
+                        span("dedup.jaccard.build") if jaccard else nullcontext():
+                    df = QUERIES[q](ctx.spark, ctx.data_dir)
+                with span("registry.exec"), \
+                        span("dedup.jaccard.exec") if jaccard else nullcontext():
+                    df.write.parquet(out[q])
+            if warm:
+                lat.append(s.wall_s)
     return lat
 
 
@@ -294,10 +299,7 @@ class DashboardAndState(Workload):
         return scanned + ctx.rows["lineitem"]
 
     def warmup(self, ctx: Context) -> None:
-        # one untimed pass: the timed pass then measures each query warm,
-        # as a long-lived dashboard serves it (the CC half stays cold: a
-        # warm-up of it too would not fit the run budget)
-        _dashboard_pass(ctx, -1, {})
+        touch_operators(ctx)
 
     def run_once(self, ctx: Context, i: int) -> list[float]:
         from capex_data_pipeline_spark import cache
