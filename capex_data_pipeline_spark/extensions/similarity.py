@@ -202,7 +202,7 @@ def ivf_build(
     balance at sqrt(N)), never below 16. A FIXED small cell count does
     NOT scale: at 400k vectors, 16 cells means every probe scans 1/16
     of the corpus and IVF measured SLOWER than brute force
-    (docs/SCALE.md r7 --stress-ann); sqrt-sizing is the fix.
+    (docs/SCALE.md, round 7); sqrt-sizing is the fix.
 
     ``assign='arrow'`` (default) runs the assignment as a batched
     numpy matmul (see :func:`_arrow_topcells`); ``'expr'`` uses the

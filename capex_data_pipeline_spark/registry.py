@@ -27,13 +27,18 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+#: registered queries that ``bench.py`` does not time: sub-second basics
+#: and UI-surface analogs whose plans are subsets of a headline query
+NON_HEADLINE: set[str] = set()
 
 
-def query(name: str, sql: str | None = None):
+def query(name: str, sql: str | None = None, headline: bool = True):
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
         if sql is not None:
             ORACLES[name] = sql
+        if not headline:
+            NON_HEADLINE.add(name)
         return fn
 
     return deco
@@ -99,6 +104,7 @@ def q02_regex_filter(spark, sf_dir):
     FROM customer
     WHERE lower(trim(c_mktsegment)) NOT IN ('building', 'machinery')
     """,
+    headline=False,
 )
 def q03_isin_filter(spark, sf_dir):
     """F3/F5 analog: case-insensitive IN-set exclusion
@@ -127,6 +133,7 @@ def q03_isin_filter(spark, sf_dir):
       count(*) AS n
     FROM part GROUP BY 1
     """,
+    headline=False,
 )
 def q04_normalize_map(spark, sf_dir):
     """P1 analog: upper/trim + exact-value mapping table
@@ -154,6 +161,7 @@ def q04_normalize_map(spark, sf_dir):
            THEN 'RECLASSIFIED' ELSE p_type END AS category
     FROM part
     """,
+    headline=False,
 )
 def q05_conditional_recat(spark, sf_dir):
     """P2 analog: conditional category overwrite with an exempt-item
@@ -180,6 +188,7 @@ def q05_conditional_recat(spark, sf_dir):
              trim(coalesce(l_returnflag, ''))) AS strict_key
     FROM lineitem
     """,
+    headline=False,
 )
 def q19_composite_key(spark, sf_dir):
     """P6/P7 analog: strict + robust composite keys
@@ -207,6 +216,7 @@ def q19_composite_key(spark, sf_dir):
        + CASE WHEN o_totalprice > 100000 THEN 10 ELSE 0 END) AS priority
     FROM orders
     """,
+    headline=False,
 )
 def q20_priority_score(spark, sf_dir):
     """P8 analog: indicator arithmetic (process_capex.py:1020-1023)."""
@@ -379,6 +389,7 @@ def q10_summary_report(spark, sf_dir):
     SELECT 'dup_keys', user_id || '|' || event_type, count(*)
     FROM events GROUP BY user_id, event_type HAVING count(*) > 1
     """,
+    headline=False,
 )
 def q11_profile(spark, sf_dir):
     """A4 + A5 analog in one profile query: exact distinct counts
@@ -515,6 +526,7 @@ def q22_set_agg_compare(spark, sf_dir):
             ELSE 0 END, 4) AS f1
     FROM m
     """,
+    headline=False,
 )
 def q23_validation_metrics(spark, sf_dir):
     """A8 analog: key-set precision/recall/F1 (process_capex.py:1573-1595)
@@ -626,6 +638,7 @@ def q15_dedup_first(spark, sf_dir):
       SELECT o_custkey FROM orders
     )
     """,
+    headline=False,
 )
 def q16_set_ops(spark, sf_dir):
     """U1 + U2 + U3 analogs in one query, tagged by op: vertical concat
@@ -669,6 +682,7 @@ def q16_set_ops(spark, sf_dir):
     FROM orders
     GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
     """,
+    headline=False,
 )
 def q28_rollup_subtotals(spark, sf_dir):
     """Hierarchical subtotals via ROLLUP — beyond the reference's four
@@ -695,6 +709,7 @@ def q28_rollup_subtotals(spark, sf_dir):
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                  ROWS UNBOUNDED PRECEDING)
     """,
+    headline=False,
 )
 def q54_running_analytics(spark, sf_dir):
     """Analytic window functions (running sum, lag, ntile) — absent from

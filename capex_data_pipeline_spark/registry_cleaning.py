@@ -98,6 +98,7 @@ _IDRUN = r"\b(?:[0-9]{4}([- ][0-9]{4}){2,3}|[0-9]{13,19})\b"
       ) AS redacted_md5
     FROM aug
     """,
+    headline=False,
 )
 def q63_pii_redaction(spark, sf_dir):
     """PII audit + redaction over the (deterministically augmented)
@@ -209,6 +210,7 @@ def q64_repetition_metrics(spark, sf_dir):
            len(lines) AS n_lines, len(k2) AS n_kept
     FROM dd
     """,
+    headline=False,
 )
 def q65_line_filter(spark, sf_dir):
     """C4-style line-level boilerplate filter: keep lines with ≥3
@@ -242,6 +244,7 @@ def q65_line_filter(spark, sf_dir):
     SELECT domain, count(*) AS n_urls, count(DISTINCT doc_id) AS n_docs
     FROM d GROUP BY 1
     """,
+    headline=False,
 )
 def q66_domain_stats(spark, sf_dir):
     """Per-domain URL statistics (mention count + distinct citing
@@ -381,6 +384,7 @@ def q68_tfidf_topk(spark, sf_dir):
     FROM documents d JOIN f USING (lang)
     WHERE CAST(('0x' || substr(md5('s0|' || coalesce(CAST(doc_id AS VARCHAR), '<null>')), 1, 8)) AS BIGINT) / 4294967296.0 < f.frac
     """,
+    headline=False,
 )
 def q69_mixture_sample(spark, sf_dir):
     """Temperature-based mixture rebalancing (corpus.mixture_sample,
@@ -451,6 +455,7 @@ def q70_unigram_logprob(spark, sf_dir):
     FROM tf JOIN vocab USING (term), s
     GROUP BY doc_id
     """,
+    headline=False,
 )
 def q71_importance_weights(spark, sf_dir):
     """DSIR-style importance weights (corpus.importance_weights): mean
@@ -485,6 +490,7 @@ def q71_importance_weights(spark, sf_dir):
            sum(k) AS sum_k, round(avg(k), 4) AS avg_k, max(k) AS max_k
     FROM p GROUP BY 1
     """,
+    headline=False,
 )
 def q72_json_props_stats(spark, sf_dir):
     """Schema-on-read over the semi-structured events.props JSON
@@ -530,6 +536,7 @@ def q72_json_props_stats(spark, sf_dir):
            min(n_chars) AS min_chars, max(n_chars) AS max_chars
     FROM documents GROUP BY 1
     """,
+    headline=False,
 )
 def q73_length_percentiles(spark, sf_dir):
     """Corpus profile: exact interpolated length percentiles per

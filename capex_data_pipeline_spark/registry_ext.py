@@ -56,6 +56,7 @@ _TAG_DIM = [("spark", "ENGINE"), ("stream", "FLOW"), ("vector", "MATH"), ("windo
       END AS tag
     FROM documents
     """,
+    headline=False,
 )
 def q24_regex_fallback_join(spark, sf_dir):
     """J1b analog: first-match whole-word regex lookup against a small
@@ -89,6 +90,7 @@ def q24_regex_fallback_join(spark, sf_dir):
                     'avoid','cancel','cancelled','drop','skip']))) > 0 AS flag_scan
     FROM tok
     """,
+    headline=False,
 )
 def q25_negation_flags(spark, sf_dir):
     """U2 as a corpus operator: negation-aware word flags. The oracle
@@ -279,6 +281,7 @@ def q32_simhash(spark, sf_dir):
     )
     SELECT * FROM scored WHERE jaccard >= 0.1
     """,
+    headline=False,
 )
 def q33_ngram_jaccard(spark, sf_dir):
     """EXACT word-3-gram Jaccard as the re-rank stage over MinHash-LSH
@@ -361,6 +364,7 @@ def q34_cosine_topk(spark, sf_dir):
     )
     SELECT * FROM scored WHERE cosine >= 0.3
     """,
+    headline=False,
 )
 def q35_embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicates: banded SRP-LSH candidates
@@ -416,6 +420,7 @@ def q35_embedding_neardup(spark, sf_dir):
            coalesce(b.bregion, f.fregion, 'Unknown') AS Region
     FROM branch b LEFT JOIN (SELECT * FROM fb WHERE rn = 1) f USING (o_orderkey)
     """,
+    headline=False,
 )
 def q92_capex_zone_join(spark, sf_dir):
     """J1+J1b verified cross-engine on the synthesized capex input: the
@@ -513,7 +518,7 @@ def _synth_pipeline(spark, sf_dir: str, **cfg_kwargs):
     return res
 
 
-@query("q27_analytics_dims", q27_analytics_oracle_sql())
+@query("q27_analytics_dims", q27_analytics_oracle_sql(), headline=False)
 def q27_analytics_dims(spark, sf_dir):
     """A3 (app.py:344-365): the three per-dimension count/sum/mean
     summaries (Zone, normalized category, request function) over the
@@ -537,7 +542,7 @@ def q27_analytics_dims(spark, sf_dir):
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 
-@query("q94_explain_exclusion", q94_explain_oracle_sql())
+@query("q94_explain_exclusion", q94_explain_oracle_sql(), headline=False)
 def q94_explain_exclusion(spark, sf_dir):
     """U3: explain_exclusion_reason (process_capex.py:385-499) applied
     to every synth raw row — the on-the-fly rule re-derivation, quirks
@@ -598,7 +603,7 @@ def q90_capex_pipeline(spark, sf_dir):
     )
 
 
-@query("q91_capex_audit", q91_audit_oracle_sql())
+@query("q91_capex_audit", q91_audit_oracle_sql(), headline=False)
 def q91_capex_audit(spark, sf_dir):
     """The exclusion-audit lineage table for q90's run (replaces the
     reference's global EXCLUSION_REASONS dict): one row per fully
@@ -793,6 +798,7 @@ def q36_ann_lsh(spark, sf_dir):
      AND epoch_us(r.ts) >= epoch_us(l.ts)
      AND epoch_us(r.ts) <= epoch_us(l.ts) + 3600000000
     """,
+    headline=False,
 )
 def q55_attribution_join(spark, sf_dir):
     """Event-to-event interval join (view -> purchase attribution
@@ -813,6 +819,7 @@ def q55_attribution_join(spark, sf_dir):
     FROM (SELECT DISTINCT event_id, ts, user_id, event_type, value
           FROM (SELECT * FROM events UNION ALL SELECT * FROM events))
     """,
+    headline=False,
 )
 def q56_dedup_replayed_stream(spark, sf_dir):
     """Batch analog of streaming.windows.stream_dedup: a replayed
@@ -868,6 +875,7 @@ def q50_tumbling_window(spark, sf_dir):
     WHERE ts >= wstart AND ts < wstart + INTERVAL '1 hour'
     GROUP BY 1, 2, 3
     """,
+    headline=False,
 )
 def q51_sliding_window(spark, sf_dir):
     """Sliding windows (1 hour / 30 min): each event lands in two
@@ -940,6 +948,7 @@ def q53_user_activity(spark, sf_dir):
            sha256(text) AS sha
     FROM documents
     """,
+    headline=False,
 )
 def q60_binary_meta(spark, sf_dir):
     """Binary-column metadata derivation (payload bytes, sha-256) —
@@ -957,6 +966,7 @@ def q60_binary_meta(spark, sf_dir):
            1 + octet_length(encode(text)) % 4 AS n_frames
     FROM documents
     """,
+    headline=False,
 )
 def q61_multimodal_decode(spark, sf_dir):
     """mapInPandas decode plumbing (deterministic fake decoder standing
@@ -976,6 +986,7 @@ def q61_multimodal_decode(spark, sf_dir):
              AS frame_idx
     FROM documents
     """,
+    headline=False,
 )
 def q62_frame_sample(spark, sf_dir):
     """Frame-sampling plumbing: one row per sampled frame index."""
@@ -1111,6 +1122,7 @@ def q39_corpus_curation(spark, sf_dir):
     )
     SELECT labeled_lang, detected, count(*) AS n FROM decided GROUP BY 1, 2
     """,
+    headline=False,
 )
 def q40_lang_id(spark, sf_dir):
     """Marker-word language ID vs the labeled lang column (confusion
@@ -1153,6 +1165,7 @@ def q40_lang_id(spark, sf_dir):
       2) AS quality_score
     FROM m
     """,
+    headline=False,
 )
 def q41_quality_score(spark, sf_dir):
     """Document quality features + composite score (length, punctuation,
@@ -1205,6 +1218,7 @@ def q42_token_count(spark, sf_dir):
         i -> md5(array_to_string(({_WORDS})[i:i+7], ' ')))) AS rolling_fp
     FROM documents
     """,
+    headline=False,
 )
 def q43_fingerprint(spark, sf_dir):
     """Document fingerprints: exact (md5 of normalized text) + rolling
@@ -1300,6 +1314,7 @@ def q44_doc_chunks(spark, sf_dir):
            CAST(start % 64 AS BIGINT) AS pack_pos
     FROM packed
     """,
+    headline=False,
 )
 def q46_pack_chunks(spark, sf_dir):
     """Sequence packing over q44's chunks: concat-then-split layout per
@@ -1330,6 +1345,7 @@ def q46_pack_chunks(spark, sf_dir):
     GROUP BY term
     HAVING count(DISTINCT doc_id) >= 3
     """,
+    headline=False,
 )
 def q49_term_stats(spark, sf_dir):
     """Vocabulary statistics (inverted-index-lite): per normalized word
@@ -1403,6 +1419,7 @@ def q47_contamination(spark, sf_dir):
     )
     SELECT doc_id, source FROM ranked WHERE rn <= 10
     """,
+    headline=False,
 )
 def q48_group_sample(spark, sf_dir):
     """Exactly-10-per-source deterministic sample: rows ranked within
@@ -1428,6 +1445,7 @@ def q48_group_sample(spark, sf_dir):
                         WHEN 'src1' THEN 0.5
                         ELSE 0.25 END
     """,
+    headline=False,
 )
 def q45_stratified_sample(spark, sf_dir):
     """Deterministic per-source sampling (keep all of src0, half of

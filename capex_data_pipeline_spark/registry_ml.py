@@ -1130,7 +1130,7 @@ def q172_ivfpq_ann(spark, sf_dir):
     assignments, probes, all 4 codebooks (init + 2 unrolled Lloyd
     rounds), codes, per-query LUTs, ADC ranks, the shortlist, and the
     exact re-rank value-exact. Recall vs exact cosine is measured on
-    q147's judge via bench --stress-ann."""
+    q147's judge (docs/SCALE.md, round 10)."""
     from capex_data_pipeline_spark.extensions.similarity import ivfpq_topk
 
     emb = _t(spark, sf_dir, "embeddings")

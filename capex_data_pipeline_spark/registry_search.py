@@ -106,6 +106,7 @@ def q95_bm25_topk(spark, sf_dir):
              AS psi_contrib
     FROM counts, totals
     """,
+    headline=False,
 )
 def q96_distribution_drift(spark, sf_dir):
     """PSI drift over the source mix (analytics.distribution_drift,
@@ -269,6 +270,7 @@ def q58_static_enrich(spark, sf_dir):
            n_violations = 0 AS passed
     FROM rep
     """,
+    headline=False,
 )
 def q98_quality_report(spark, sf_dir):
     """Declarative data-quality gate (quality.quality_report): five

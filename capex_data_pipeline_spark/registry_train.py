@@ -5747,7 +5747,7 @@ def _q251_state(spark, sf_dir) -> str:
     executes in-query every time). First call in a session pays the
     6-table cell build ONCE; every later q251 call — and bench reps
     2..n — reads the bucketed state table only, so the benched
-    median is PLANNING time (the --stress-advisor 7.4s shape)."""
+    median is PLANNING time (7.4 s at sf0.1 vs 16.5 s direct)."""
     import os
 
     from capex_data_pipeline_spark.extensions.state import (

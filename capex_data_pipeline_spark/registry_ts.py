@@ -195,6 +195,7 @@ _DECOMPOSED = " cafe\u0301 creme\u0300"
            len(nfc_normalize(t)) AS n_chars_after
     FROM aug
     """,
+    headline=False,
 )
 def q80_unicode_normalize(spark, sf_dir):
     """Unicode NFC canonicalization (cleaning.normalize_unicode, the
@@ -263,6 +264,7 @@ _SAMPLE_HASH = (
       FROM assigned
     ) WHERE rn <= 10
     """,
+    headline=False,
 )
 def q78_cluster_sample(spark, sf_dir):
     """Cluster-balanced diversity sampling
@@ -301,6 +303,7 @@ def q78_cluster_sample(spark, sf_dir):
     )
     SELECT doc_id, lang, n_chars FROM ranked WHERE rn <= 30
     """,
+    headline=False,
 )
 def q81_weighted_sample(spark, sf_dir):
     """Deterministic weighted sampling without replacement
@@ -339,6 +342,7 @@ def q81_weighted_sample(spark, sf_dir):
            ns = 1 AS is_session_start
     FROM o
     """,
+    headline=False,
 )
 def q82_sessionize(spark, sf_dir):
     """Gap-based sessionization (analytics.sessionize): a 30-minute
@@ -416,6 +420,7 @@ def q83_robust_zscore(spark, sf_dir):
            round(c.n_active / s.cohort_size::DOUBLE, 6) AS retention
     FROM counts c JOIN sizes s USING (cohort)
     """,
+    headline=False,
 )
 def q84_cohort_retention(spark, sf_dir):
     """Weekly cohort retention triangle (analytics.cohort_retention):
@@ -509,6 +514,7 @@ def q85_funnel(spark, sf_dir):
            count(DISTINCT user_id) AS n_users
     FROM events GROUP BY 1
     """,
+    headline=False,
 )
 def q86_jsonl_roundtrip(spark, sf_dir):
     """JSONL sink -> source round-trip under the driver's value gate
@@ -610,6 +616,7 @@ def q87_bigram_pmi(spark, sf_dir):
     WINDOW w AS (PARTITION BY user_id ORDER BY ts
                  RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
     """,
+    headline=False,
 )
 def q88_rolling_window(spark, sf_dir):
     """Trailing 1-hour per-user aggregates on every event
@@ -654,6 +661,7 @@ _W89 = [((i * 2654435761) % 1001) - 500 for i in range(64)]
            )), 0) > 0 AS keep
     FROM w, wts
     """,
+    headline=False,
 )
 def q89_linear_classifier(spark, sf_dir):
     """Hashed bag-of-words linear classifier inference
@@ -695,6 +703,7 @@ def q89_linear_classifier(spark, sf_dir):
     SELECT l_returnflag, measure, round(sum(v), 2) AS total, count(*) AS n
     FROM m GROUP BY 1, 2
     """,
+    headline=False,
 )
 def q26_unpivot_melt(spark, sf_dir):
     """Wide-to-long reshaping with the native unpivot (melt) operator —
@@ -805,6 +814,7 @@ def q18_fuzzy_match(spark, sf_dir):
     FROM chg
     WINDOW w2 AS (PARTITION BY user_id ORDER BY ts)
     """,
+    headline=False,
 )
 def q08_scd2(spark, sf_dir):
     """Slowly-changing-dimension type-2 history
@@ -845,6 +855,7 @@ def q08_scd2(spark, sf_dir):
            count(*) AS n, round(sum(l_quantity), 2) AS qty
     FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
     """,
+    headline=False,
 )
 def q13_cube(spark, sf_dir):
     """CUBE grouping sets (completing the q28 ROLLUP surface): all
@@ -880,6 +891,7 @@ def q13_cube(spark, sf_dir):
            (list(t ORDER BY cnt DESC, t ASC))[1] AS top_type
     FROM c GROUP BY user_id
     """,
+    headline=False,
 )
 def q17_type_count_map(spark, sf_dir):
     """Per-key map-style aggregation: each user's event-type histogram
@@ -933,6 +945,7 @@ def q17_type_count_map(spark, sf_dir):
      AND epoch_us(r.ts) >= epoch_us(l.ts)
      AND epoch_us(r.ts) <= epoch_us(l.ts) + 3600000000
     """,
+    headline=False,
 )
 def q57_attribution_outer(spark, sf_dir):
     """LEFT OUTER interval join, batch form (streaming's
@@ -982,6 +995,7 @@ def q57_attribution_outer(spark, sf_dir):
     FROM bucketed b, tot t
     GROUP BY b.bucket, t.tn, t.tv
     """,
+    headline=False,
 )
 def q12_share_report(spark, sf_dir):
     """Top-3 + OTHER share report: event types ranked by volume, the
@@ -1048,7 +1062,7 @@ _Q29_SQL = """
     """
 
 
-@query("q29_correlated_subquery", _Q29_SQL)
+@query("q29_correlated_subquery", _Q29_SQL, headline=False)
 def q29_correlated_subquery(spark, sf_dir):
     """SQL-API surface: a correlated scalar subquery (orders 50% above
     the customer's own average) plus a correlated EXISTS (any line with

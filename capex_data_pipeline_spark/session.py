@@ -18,6 +18,15 @@ from pyspark.sql import SparkSession
 _DEFAULT_LOCAL_SHUFFLE_PARTITIONS = "32"
 
 
+def _default_driver_memory() -> str:
+    """A quarter of the host's physical memory (MemTotal on Linux): a
+    local master runs the whole engine inside the driver JVM, and the
+    rest of the host is shared (other JVMs, Python workers, the page
+    cache)."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(total_mb // 4, 1024)}m"
+
+
 def get_spark(
     app_name: str = "capex-data-pipeline-spark",
     master: str | None = None,
@@ -64,7 +73,8 @@ def get_spark(
     )
     if master.startswith("local"):
         builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

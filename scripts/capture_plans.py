@@ -3,12 +3,12 @@
 Usage:
     python scripts/capture_plans.py <suffix> q161 q170 ...
 
-Writes ``plans/r13/<query>_<suffix>.txt`` for each query name prefix
-given (suffix is e.g. ``before`` / ``after``).  The data directory is
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) so the captured
-plan is the shape the bench times.  NOTE: building some queries runs
-driver-side actions (state writes, fixpoint loops) — capture cost is
-the query-build cost, not a full execution.
+Writes ``plans/<query>_<suffix>.txt`` (an ignored directory) for each
+query name prefix given (suffix is e.g. ``before`` / ``after``).  The
+data directory is ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1 testdata)
+so the captured plan is the shape the bench times.  NOTE: building
+some queries runs driver-side actions (state writes, fixpoint loops) —
+capture cost is the query-build cost, not a full execution.
 """
 
 import os
@@ -24,11 +24,9 @@ def main() -> None:
     suffix = sys.argv[1]
     prefixes = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(

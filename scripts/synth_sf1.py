@@ -23,7 +23,10 @@ the properties that would fake a superlinear blow-up do not:
 
 Usage: ``python scripts/synth_sf1.py [out_dir]``. Re-run is
 idempotent (overwrites). The output is NOT registered testdata — it
-exists so ``bench.py --scaling3`` can record sf0.1->sf1 ratios.
+exists to record sf0.1->sf1 ratios as two runs of ``bench.py``::
+
+    SPARK_GRAFT_SF_DIR=$TESTDATA/sf0.1 SPARK_GRAFT_BENCH_ONLY=q90,q93 python bench.py
+    SPARK_GRAFT_SF_DIR=spark-warehouse/sf1_synth SPARK_GRAFT_BENCH_ONLY=q90,q93 python bench.py
 """
 
 from __future__ import annotations
@@ -72,7 +75,7 @@ def main() -> None:
     from capex_data_pipeline_spark.session import get_spark
     from capex_data_pipeline_spark.sources.parquet import read_table
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark(
         app_name="synth-sf1",
         master=f"local[{cpus}]",

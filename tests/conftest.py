@@ -27,6 +27,51 @@ def spark():
     yield spark
 
 
+def _dead_jvm_status(report) -> str | None:
+    """How the session's JVM died, or None while it lives (or was never
+    started). Dead = the Py4J gateway's process has exited, or the
+    failure is a refused connection to it."""
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    if gateway is None:
+        return None
+    proc = getattr(gateway, "proc", None)
+    if proc is not None and proc.poll() is not None:
+        return f"pid {proc.pid} exited with status {proc.returncode}"
+    if "ConnectionRefusedError" in report.longreprtext:
+        return "the Py4J gateway refused the connection"
+    return None
+
+
+@pytest.hookimpl(trylast=True)
+def pytest_runtest_logreport(report):
+    """Stop the session at the first failure caused by a dead JVM: every
+    later Spark test would fail with the same ConnectionRefusedError."""
+    status = _dead_jvm_status(report) if report.failed else None
+    if status is not None:
+        pytest.exit(
+            f"the Spark session JVM died during {report.nodeid} ({status}); "
+            "later tests cannot run. If the kernel killed it, its OOM log "
+            "says why: dmesg | grep -i -A3 'out of memory'",
+            returncode=1,
+        )
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Count the tests that skipped because the reference checkout is
+    absent, so a parity gap never passes as green."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and "reference" in rep.longrepr[2]
+    )
+    if n:
+        terminalreporter.write_line(
+            f"reference parity: {n} skipped ({REFERENCE_DIR} absent)"
+        )
+
+
 def _load_reference_module():
     """Import the read-only reference pipeline for differential testing.
     Returns None when unavailable (tests that need it will skip)."""

@@ -264,9 +264,9 @@ def test_driver_contract_registry_invariants():
     round-7 ML trio q117 PCA power iteration / q118 trigram LM /
     q119 Bloom decontamination, q120 HTML extraction, q121 PQ ANN, q122 Zipf diagnostics, q123 mixture schedule, q124 link graph, q125 count-min sketch, q126 HyperLogLog, q127 snapshot diff, q128 source calibration, the round-7 q129 logistic-regression trainer, q130 trigram perplexity filtering, q131 phrase search, q132 anchor-text aggregation, q133 canonical-per-cluster election, q134 temperature mixture resampling, q135 multi-source BFS hops, q136 hard-negative mining, q137 c-TF-IDF source keywords, q138 stupid-backoff cross-corpus perplexity, q139 boilerplate-header detection, q140 word-dropout augmentation, q141 reciprocal-rank fusion, q142 shingle containment, the round-8 q143 sqrt(N)-sized IVF build/query split, q144 perceptual-hash image near-dup, q145 unigram-LM tokenizer training, q146 unigram encode, q147 ANN recall evaluation, q148 image near-dup clustering, q149 Z-order clustering keys, q150 association rules, q151 curriculum bucketing, q152 near-dup-safe cluster splits, q153 per-group HLL, q154 binned ROC/AUC, and q155 CMS join-size estimation), a full
     value-exact oracle for EVERY query (no rows-only fallbacks), and
-    every bench headline drawn from the registry."""
+    every ``headline=False`` tag naming a registered query."""
     import __spark_entry__ as E
-    import bench
+    from capex_data_pipeline_spark.registry import NON_HEADLINE
 
     qs, oracles = E.queries(), E.oracle_sql()
     assert len(qs) == 268
@@ -279,14 +279,16 @@ def test_driver_contract_registry_invariants():
     )
     assert set(oracles) == set(qs)
     assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
-    assert set(bench.HEADLINE) <= set(qs)
+    assert NON_HEADLINE <= set(qs)
+    assert set(qs) - NON_HEADLINE, "bench.py would time no query"
 
 
 def test_bench_emits_one_json_line_with_stats():
-    """bench.py is driver-facing: it must print exactly ONE JSON line
-    with the contract keys plus the self-defense block (per-query
-    median/min/spread/runs and loadavg). Run as a subprocess at the
-    smallest SF with a single rep to keep it fast."""
+    """bench.py's output is a contract: it must print exactly two JSON lines,
+    the full record with the contract keys plus the self-defense block
+    (per-query median/min/spread/runs and loadavg), then the tail. Run
+    as a subprocess over every headliner at the smallest SF with a
+    single rep to keep it fast."""
     import json
     import os
     import subprocess
@@ -295,7 +297,6 @@ def test_bench_emits_one_json_line_with_stats():
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
-        SPARK_GRAFT_CPUS="8",
         SPARK_GRAFT_BENCH_REPS="1",
     )
     out = subprocess.run(
