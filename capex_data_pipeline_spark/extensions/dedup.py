@@ -642,7 +642,6 @@ def dedup_clusters(
     id_b: str = "id_b",
     max_iter: int = 50,
     boundary: str | None = None,
-    broadcast_labels: "bool | None" = None,
     assume_symmetric: bool = False,
     emit_degree: bool = False,
 ) -> DataFrame:
@@ -724,20 +723,13 @@ def dedup_clusters(
         edges.groupBy("u").agg(*h_aggs),
         "cc-contract",
     )
-    # the mapping frame is NODE-sized while edges are PAIR-sized; when
-    # the node set is modest, broadcasting makes the re-key map-only
-    # (auto below 5M nodes — the autoBroadcastJoinThreshold spirit;
-    # billion-node graphs keep the shuffle join: broadcast_labels
-    # overrides)
-    if broadcast_labels is None:
-        broadcast_labels = h.count() <= 5_000_000
-    _bc = F.broadcast if broadcast_labels else (lambda d: d)
+    # the mapping frame is NODE-sized while edges are PAIR-sized; the
+    # eager cut keeps its size estimate, so the planner broadcasts it
+    # (re-key map-only) while it fits autoBroadcastJoinThreshold and
+    # keeps the shuffle join past that — no count, no hint
     e2 = _cut(
-        edges.join(_bc(h.select("u", F.col("h").alias("_hu"))), "u")
-        .join(
-            _bc(h.select(F.col("u").alias("v"), F.col("h").alias("_hv"))),
-            "v",
-        )
+        edges.join(h.select("u", F.col("h").alias("_hu")), "u")
+        .join(h.select(F.col("u").alias("v"), F.col("h").alias("_hv")), "v")
         .select(F.col("_hu").alias("u"), F.col("_hv").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct(),
@@ -749,7 +741,7 @@ def dedup_clusters(
     )
     for _ in range(max_iter):
         nbr = e2.join(
-            _bc(labels.select(F.col("u").alias("v"), "lbl")), "v"
+            labels.select(F.col("u").alias("v"), "lbl"), "v"
         ).select("u", "lbl")
         # convergence check fused into the round (same move as
         # graph.connected_components): each node's old label rides

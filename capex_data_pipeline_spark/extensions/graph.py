@@ -7,95 +7,25 @@ The repo's iterative-algorithm pattern lives here alongside
 joins/aggregates on compact keys, rounds compose by rebuilding the
 frame, and deep-plan growth is controlled with an explicit plan
 boundary (the q93 lesson — see docs/SCALE.md).
+
+Join strategy is the planner's (no hint, no size gate): a vertex-sized
+frame cut by ``localCheckpoint`` keeps its size estimate (Spark 4.1;
+pinned by ``tests/test_graph.py``), so the first round's state joins
+the persisted edge frame as a BroadcastHashJoin. State derived through
+a join of cut or cached frames is estimated at the product of their
+sizes, so in later rounds the planner builds the hash table on the
+edge frame whenever that fits ``autoBroadcastJoinThreshold`` (64 MB);
+past it the join is planned as a SortMergeJoin for AQE to re-plan
+from measured stage sizes.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: fixed-point scale: ranks are BIGINT micro-units (1.0 == 1_000_000)
 RANK_SCALE = 1_000_000
-
-#: vertex-count ceiling under which per-round state frames (ranks,
-#: labels, frontiers — all (id, value) pairs, ≤ ~16 bytes/row) are
-#: broadcast into the per-round joins: 5M rows ≈ tens of MB framed,
-#: far under the 8 GB / 512M-row broadcast-relation cap, and the same
-#: threshold dedup_clusters already uses for its label map.
-#: Override: $SPARK_GRAFT_GRAPH_BC_MAX_STATE.
-_BROADCAST_STATE_MAX = 5_000_000
-
-#: row-count FLOOR on the edge-side frame of the per-round join below
-#: which broadcasting the state is a LOSS: each round's broadcast pays
-#: a driver collect + rebroadcast (~0.3-0.5 s of fixed latency per
-#: round locally), which only amortizes when the SortMergeJoin it
-#: replaces re-shuffles enough edge rows. Calibrated on 8-round CC
-#: over the symmetric edge frame (local[32], warm reps, r13):
-#: 8k rows off=5.5s on=8.3s; 120k rows off=5.2s on=7.8s;
-#: 300k rows off=15.7s on=8.7s; 1M rows off=8.6s on=7.4s;
-#: 4M rows off=19.5s on=11.5s — crossover between 120k and 300k
-#: rows, so 200k splits it. Override: $SPARK_GRAFT_GRAPH_BC_MIN_EDGES.
-_BROADCAST_STATE_MIN_EDGE_ROWS = 200_000
-
-
-def _state_bc(flag: "bool | None", count_fn, edge_count_fn=None):
-    """Resolve the per-round broadcast decision for an iterative op.
-
-    Every loop here cuts its round state with localCheckpoint, and a
-    checkpointed frame is a ``LogicalRDD`` leaf with NO size statistics
-    — the static planner prices it at ``defaultSizeInBytes`` (huge) and
-    AQE never learns better (runtime stats only exist for materialized
-    shuffle/broadcast stages, not RDD leaves). So every round's
-    state-to-edges equi-join silently degrades to a SortMergeJoin that
-    re-shuffles and re-sorts the FULL edge frame once per round — the
-    dominant cost of the iterative graph queries (guide §2.4/§3.1).
-    State frames are vertex-sized; broadcasting them makes each round a
-    map-side BroadcastHashJoin over the persisted edge frame, so the
-    edge list is never exchanged again after its initial persist.
-
-    ``flag`` True/False forces; None decides from two one-off driver
-    counts (both over frames the operator persists/consumes anyway):
-    ``count_fn()`` (vertex-sized state rows) must be ≤
-    :data:`_BROADCAST_STATE_MAX` — billion-vertex graphs keep the
-    shuffle join — AND ``edge_count_fn()`` (rows of the edge-side
-    frame each round joins) must be ≥
-    :data:`_BROADCAST_STATE_MIN_EDGE_ROWS`, because on small graphs
-    the per-round broadcast latency exceeds the tiny shuffle it saves
-    (see the calibration table above). Returns the frame wrapper to
-    apply to the vertex-sized side of each per-round join.
-    """
-    if flag is None:
-        max_state = int(
-            os.environ.get(
-                "SPARK_GRAFT_GRAPH_BC_MAX_STATE", _BROADCAST_STATE_MAX
-            )
-        )
-        min_edges = int(
-            os.environ.get(
-                "SPARK_GRAFT_GRAPH_BC_MIN_EDGES",
-                _BROADCAST_STATE_MIN_EDGE_ROWS,
-            )
-        )
-        # ONE driver count, not two (r13 verdict: the second count was
-        # pure gate overhead on gate-negative small graphs). Every
-        # caller's state frame is vertex-sized with vertices drawn from
-        # the edge frame's endpoints, so state rows <= 2 * edge rows —
-        # the edge count alone settles the gate except in the narrow
-        # band where 2*edges > max_state but the true vertex count
-        # might still fit (only there does the state count run).
-        if edge_count_fn is None:
-            flag = count_fn() <= max_state
-        else:
-            e_rows = edge_count_fn()
-            if e_rows < min_edges:
-                flag = False
-            elif 2 * e_rows <= max_state:
-                flag = True
-            else:
-                flag = count_fn() <= max_state
-    return F.broadcast if flag else (lambda df: df)
 
 
 def pagerank(
@@ -105,7 +35,6 @@ def pagerank(
     dst_col: str = "dst",
     plan_boundary: bool | str | None = None,
     assume_distinct: bool = False,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """PageRank in exact integer micro-units (simplified damped
     variant, public formula): starting from ``r0 = 1.0`` per vertex,
@@ -171,22 +100,18 @@ def pagerank(
         .unionByName(edeg.select(F.col("dst").alias("v")))
         .distinct()
     )
-    # rank/contrib frames are vertex-sized but checkpoint-cut, so the
-    # planner would SMJ-shuffle the edge frame EVERY round — see
-    # _state_bc; the verts count doubles as the persist materializer
-    _bc = _state_bc(broadcast_state, verts.count, edeg.count)
 
     ranks = verts.select("v", F.lit(RANK_SCALE).cast("long").alias("r"))
     base = (RANK_SCALE * 15) // 100  # 0.15 in micro-units
     for _ in range(iterations):
         contribs = (
-            edeg.join(_bc(ranks), edeg["src"] == ranks["v"])
+            edeg.join(ranks, edeg["src"] == ranks["v"])
             .select("dst", F.expr("r div deg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
         ranks = verts.join(
-            _bc(contribs), verts["v"] == contribs["dst"], "left"
+            contribs, verts["v"] == contribs["dst"], "left"
         ).select(
             "v",
             (
@@ -302,7 +227,6 @@ def connected_components(
     max_iter: int = 50,
     plan_boundary: bool | str | None = None,
     assume_canonical: bool = False,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Connected components of an undirected edge list by min-label
     propagation — the public graph-operator form of the loop proven
@@ -366,17 +290,13 @@ def connected_components(
     )
     if plan_boundary:
         labels = _boundary(labels, mode=boundary_mode, eager=False, label="cc")
-    # label frames are vertex-sized but checkpoint-cut (no stats →
-    # the planner would SMJ-shuffle the symmetric edge frame every
-    # round — see _state_bc); the vertex count is paid once
-    _bc = _state_bc(broadcast_state, lambda: labels.count(), sym.count)
     i = 0
     while True:
         if not until_fixpoint and i >= rounds:
             break
         i += 1
         nbr = sym.join(
-            _bc(labels.withColumnRenamed("v", "b").select("b", "lbl")), "b"
+            labels.withColumnRenamed("v", "b").select("b", "lbl"), "b"
         ).select(F.col("a").alias("v"), "lbl")
         if until_fixpoint:
             # convergence check FUSED into the round: each vertex's old
@@ -432,7 +352,6 @@ def kcore_peel(
     dst_col: str = "dst",
     assume_canonical: bool = False,
     plan_boundary: bool | str | None = None,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """k-core by iterative peeling: repeatedly delete vertices with
     degree < k (and their edges); what survives is the k-core — the
@@ -477,17 +396,6 @@ def kcore_peel(
     boundary_mode = plan_boundary if isinstance(plan_boundary, str) else None
 
     e = _canonical_edges(edges, src_col, dst_col, assume_canonical)
-    # the surviving-vertex set is vertex-sized but derived from a
-    # checkpoint-cut edge frame (no stats → both per-round semi joins
-    # would SMJ-shuffle the edge frame — see _state_bc)
-    _bc = _state_bc(
-        broadcast_state,
-        lambda: e.select(F.col("a").alias("v"))
-        .unionByName(e.select(F.col("b").alias("v")))
-        .distinct()
-        .count(),
-        e.count,
-    )
     prev_count: int | None = None
     i = 0
     while True:
@@ -505,8 +413,8 @@ def kcore_peel(
             .select("v")
         )
         e = (
-            e.join(_bc(alive.select(F.col("v").alias("a"))), "a", "left_semi")
-            .join(_bc(alive.select(F.col("v").alias("b"))), "b", "left_semi")
+            e.join(alive.select(F.col("v").alias("a")), "a", "left_semi")
+            .join(alive.select(F.col("v").alias("b")), "b", "left_semi")
             .select("a", "b")
         )
         if plan_boundary:
@@ -526,7 +434,6 @@ def label_propagation(
     max_iter: int = 30,
     plan_boundary: bool | str | None = None,
     assume_canonical: bool = False,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
     et al. 2007, made deterministic): every vertex starts labeled with
@@ -588,15 +495,13 @@ def label_propagation(
     )
     if plan_boundary:
         labels = _boundary(labels, mode=boundary_mode, eager=False, label="lpa")
-    # same checkpoint-cut-state rationale as connected_components
-    _bc = _state_bc(broadcast_state, lambda: labels.count(), sym.count)
     i = 0
     while True:
         if not until_fixpoint and i >= rounds:
             break
         i += 1
         nbr = sym.join(
-            _bc(labels.withColumnRenamed("v", "b").select("b", "lbl")), "b"
+            labels.withColumnRenamed("v", "b").select("b", "lbl"), "b"
         ).select(F.col("a").alias("v"), "lbl")
         cnt = nbr.groupBy("v", "lbl").agg(F.count(F.lit(1)).alias("c"))
         new = (
@@ -614,7 +519,7 @@ def label_propagation(
             new = _boundary(new, mode=boundary_mode, eager=False, label="lpa")
         if until_fixpoint:
             changed = (
-                new.join(_bc(labels.withColumnRenamed("lbl", "_old")), "v")
+                new.join(labels.withColumnRenamed("lbl", "_old"), "v")
                 .where(F.col("lbl") != F.col("_old"))
                 .count()
             )
@@ -642,7 +547,6 @@ def bfs_hops(
     dst_col: str = "dst",
     plan_boundary: bool | str | None = None,
     assume_canonical: bool = False,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distance on an undirected edge list: every
     vertex within ``rounds`` hops of ANY seed in ``sources`` gets its
@@ -704,20 +608,13 @@ def bfs_hops(
         ).alias("vertex"),
         F.lit(0).alias("hops"),
     )
-    # frontier and visited sets are vertex-bounded but checkpoint-cut
-    # (no stats → per-round SMJ edge shuffles — see _state_bc)
-    _bc = _state_bc(
-        broadcast_state,
-        lambda: sym.select("a").distinct().count(),
-        sym.count,
-    )
     frontier = dist.select("vertex")
     for r in range(1, rounds + 1):
         new = (
-            sym.join(_bc(frontier.withColumnRenamed("vertex", "a")), "a")
+            sym.join(frontier.withColumnRenamed("vertex", "a"), "a")
             .select(F.col("b").alias("vertex"))
             .distinct()
-            .join(_bc(dist.select("vertex")), "vertex", "left_anti")
+            .join(dist.select("vertex"), "vertex", "left_anti")
         )
         if plan_boundary:
             new = _boundary(
@@ -826,7 +723,6 @@ def sssp_bounded(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Hop-bounded single/multi-source SHORTEST PATHS on a weighted
     undirected edge list (Bellman-Ford relaxation, ``rounds``
@@ -881,17 +777,10 @@ def sssp_bounded(
     dist = spark.createDataFrame(
         [(int(v), 0) for v in sources], "vertex long, dist long"
     )
-    # distance/frontier frames are vertex-bounded but checkpoint-cut
-    # (no stats → per-round SMJ edge shuffles — see _state_bc)
-    _bc = _state_bc(
-        broadcast_state,
-        lambda: sym.select("_s").distinct().count(),
-        sym.count,
-    )
     frontier = dist
     for _ in range(rounds):
         cand = (
-            _bc(frontier).join(sym, frontier["vertex"] == sym["_s"])
+            frontier.join(sym, frontier["vertex"] == sym["_s"])
             .select(
                 F.col("_d").alias("vertex"),
                 (F.col("dist") + F.col("_w")).alias("dist"),
@@ -909,7 +798,7 @@ def sssp_bounded(
         # next frontier: vertices whose distance IMPROVED this round
         # (new vertices, or a cheaper path into a known one)
         frontier = merged.join(
-            _bc(dist.withColumnRenamed("dist", "_old")), "vertex", "left"
+            dist.withColumnRenamed("dist", "_old"), "vertex", "left"
         ).filter(
             F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
         ).select("vertex", "dist")
@@ -923,7 +812,6 @@ def modularity(
     src_col: str = "src",
     dst_col: str = "dst",
     decimals: int = 6,
-    broadcast_labels: bool | None = None,
 ) -> DataFrame:
     """Newman modularity Q of a vertex partition — "is this community
     structure better than random": Q = Σ_c [e_c/m − (d_c/2m)²], the
@@ -948,18 +836,9 @@ def modularity(
     lab = labels.select(
         F.col("vertex").alias("_v"), F.col("component").alias("_c")
     )
-    # the labeling usually arrives checkpoint-cut from the CC loop (a
-    # LogicalRDD with no stats — the planner would SMJ-shuffle the
-    # edge frame for both lookups; see _state_bc). NO edge floor here:
-    # modularity is not a loop (there is no per-round broadcast
-    # latency to amortize — a ≤5M-row build side is the ordinary
-    # broadcast-join decision), and counting e would pay a FULL extra
-    # evaluation of the caller's edge derivation, which is typically
-    # an unpersisted join subplan (the q242 co-purchase self-join)
-    _bc = _state_bc(broadcast_labels, lambda: lab.count())
     tagged = (
-        e.join(_bc(lab.withColumnRenamed("_v", "_a").withColumnRenamed("_c", "_ca")), "_a")
-        .join(_bc(lab.withColumnRenamed("_v", "_b").withColumnRenamed("_c", "_cb")), "_b")
+        e.join(lab.withColumnRenamed("_v", "_a").withColumnRenamed("_c", "_ca"), "_a")
+        .join(lab.withColumnRenamed("_v", "_b").withColumnRenamed("_c", "_cb"), "_b")
     )
     eint = tagged.agg(
         F.count(F.lit(1)).cast("long").alias("m_edges"),
@@ -975,7 +854,7 @@ def modularity(
     )
     dec = "decimal(38,0)"
     dc = (
-        deg.join(_bc(lab), "_v")
+        deg.join(lab, "_v")
         .groupBy("_c")
         .agg(F.sum("_d").cast(dec).alias("_dc"))
     )
@@ -1011,7 +890,6 @@ def personalized_pagerank(
     dst_col: str = "dst",
     plan_boundary: bool | str | None = None,
     assume_distinct: bool = False,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Personalized PageRank in exact integer micro-units — relevance
     FROM a seed set's point of view (related-item discovery, trust
@@ -1063,8 +941,6 @@ def personalized_pagerank(
     seed_base = F.when(is_seed, F.lit(base)).otherwise(F.lit(0)).cast(
         "long"
     )
-    # checkpoint-cut rank frames — see _state_bc (pagerank rationale)
-    _bc = _state_bc(broadcast_state, verts.count, edeg.count)
     ranks = verts.select(
         "v",
         F.when(is_seed, F.lit(RANK_SCALE))
@@ -1074,13 +950,13 @@ def personalized_pagerank(
     )
     for _ in range(iterations):
         contribs = (
-            edeg.join(_bc(ranks), edeg["src"] == ranks["v"])
+            edeg.join(ranks, edeg["src"] == ranks["v"])
             .select("dst", F.expr("r div deg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
         ranks = verts.join(
-            _bc(contribs), verts["v"] == contribs["dst"], "left"
+            contribs, verts["v"] == contribs["dst"], "left"
         ).select(
             "v",
             (
@@ -1102,7 +978,6 @@ def hits(
     src_col: str = "src",
     dst_col: str = "dst",
     assume_distinct: bool = False,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999) in exact integer
     micro-units — the bipartite-flavored importance pair PageRank
@@ -1145,8 +1020,6 @@ def hits(
         .distinct()
     )
     hub = verts.select("v", F.lit(RANK_SCALE).cast("long").alias("h"))
-    # checkpoint-cut score frames — see _state_bc (pagerank rationale)
-    _bc = _state_bc(broadcast_state, verts.count, e.count)
 
     def _norm(df: DataFrame, col: str) -> DataFrame:
         # the raw frame feeds BOTH the max aggregate and the rescale —
@@ -1171,29 +1044,29 @@ def hits(
     auth = None
     for _ in range(iterations):
         araw = (
-            e.join(_bc(hub), e["src"] == hub["v"])
+            e.join(hub, e["src"] == hub["v"])
             .groupBy("dst")
             .agg(F.sum("h").alias("a"))
         )
         auth = _norm(
-            verts.join(_bc(araw), verts["v"] == araw["dst"], "left").select(
+            verts.join(araw, verts["v"] == araw["dst"], "left").select(
                 "v", F.coalesce(F.col("a"), F.lit(0)).alias("a")
             ),
             "a",
         )
         hraw = (
-            e.join(_bc(auth), e["dst"] == auth["v"])
+            e.join(auth, e["dst"] == auth["v"])
             .groupBy("src")
             .agg(F.sum("a").alias("h"))
         )
         hub = _norm(
-            verts.join(_bc(hraw), verts["v"] == hraw["src"], "left").select(
+            verts.join(hraw, verts["v"] == hraw["src"], "left").select(
                 "v", F.coalesce(F.col("h"), F.lit(0)).alias("h")
             ),
             "h",
         )
     return (
-        hub.join(_bc(auth), "v")
+        hub.join(auth, "v")
         .select(
             F.col("v").alias("vertex"),
             F.col("h").alias("hub_micro"),
@@ -1209,7 +1082,6 @@ def ppr_trajectory(
     src_col: str = "src",
     dst_col: str = "dst",
     assume_distinct: bool = False,
-    broadcast_state: bool | None = None,
 ) -> DataFrame:
     """Personalized-PageRank rank TRAJECTORY — the full
     (vertex, round, rank_micro) history for rounds 0..``iterations``,
@@ -1262,18 +1134,16 @@ def ppr_trajectory(
         .cast("long")
         .alias("r"),
     )
-    # checkpoint-cut rank frames — see _state_bc (pagerank rationale)
-    _bc = _state_bc(broadcast_state, verts.count, edeg.count)
     snaps = [ranks.select("v", F.lit(0).alias("round"), "r")]
     for i in range(1, iterations + 1):
         contribs = (
-            edeg.join(_bc(ranks), edeg["src"] == ranks["v"])
+            edeg.join(ranks, edeg["src"] == ranks["v"])
             .select("dst", F.expr("r div deg").alias("c"))
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
         ranks = verts.join(
-            _bc(contribs), verts["v"] == contribs["dst"], "left"
+            contribs, verts["v"] == contribs["dst"], "left"
         ).select(
             "v",
             (

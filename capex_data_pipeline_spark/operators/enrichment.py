@@ -58,32 +58,6 @@ _NON_OPS_KEYWORDS = (
 
 _UNWANTED_FUNCTIONS = ("cs", "fa", "sales", "channel", "vigilance")
 
-#: row cap for the gated manual broadcasts in the enrichment joins.
-#: Every frame here arrives plan-boundary-cut (a LogicalRDD leaf with
-#: NO size statistics), so the planner prices it at defaultSizeInBytes
-#: and SortMergeJoins every lookup even when one side is a few
-#: thousand FN keys — the same stats-blindness the iterative graph
-#: ops hit (graph._state_bc). ≤5M compact rows is safely inside the
-#: broadcast-relation cap; corpus-sized audits at 100 TB exceed it
-#: and keep the shuffle join. Override: $SPARK_GRAFT_ENRICH_BC_MAX.
-_ENRICH_BC_MAX = 5_000_000
-
-
-def _gated_bc(n_rows: "int | None"):
-    """Broadcast wrapper iff ``n_rows`` is known and under the cap;
-    identity otherwise (unknown size = the caller could not count
-    cheaply, so do not gamble a broadcast build on it)."""
-    import os
-
-    cap = int(os.environ.get("SPARK_GRAFT_ENRICH_BC_MAX", _ENRICH_BC_MAX))
-    if n_rows is not None and n_rows <= cap:
-        return F.broadcast
-    return lambda df: df
-
-
-_IDENT = lambda df: df  # noqa: E731 — default no-op join-side wrapper
-
-
 def _val(name: str, strip: bool = True) -> Column:
     v = F.coalesce(F.col(name).cast("string"), F.lit(""))
     return F.trim(v) if strip else v
@@ -276,8 +250,6 @@ def _explain_on(
     fn_keys: DataFrame,
     audit: DataFrame,
     tag: str,
-    bc_fn=_IDENT,
-    bc_audit=_IDENT,
 ) -> DataFrame:
     """Re-derive the exclusion reason from the first frame row whose
     STRICT key matches the FN key (then the short key) — the reference
@@ -325,11 +297,9 @@ def _explain_on(
     # audit label for the row's own (un-stripped) robust key feeds the
     # keyword loop's in-line fallback
     keyed = keyed.join(
-        bc_audit(
-            audit.select(
-                F.col("CompositeKey").alias("_rk"),
-                F.col("label").alias("_rk_label"),
-            )
+        audit.select(
+            F.col("CompositeKey").alias("_rk"),
+            F.col("label").alias("_rk_label"),
         ),
         _loop_fallback_rowkey("VendorName" in frame.columns) == F.col("_rk"),
         "left",
@@ -348,7 +318,7 @@ def _explain_on(
     def first_match(on: Column, out: str) -> DataFrame:
         w = Window.partitionBy("CompositeKey").orderBy(F.asc("_ord"))
         return (
-            bc_fn(fn_keys).join(explained, on, "inner")
+            fn_keys.join(explained, on, "inner")
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select("CompositeKey", F.col("_reason").alias(out))
@@ -357,8 +327,8 @@ def _explain_on(
     by_full = first_match(F.col("CompositeKey") == F.col("_strict"), f"_expl_{tag}_full")
     by_short = first_match(F.col("_short_ck") == F.col("_strict"), f"_expl_{tag}_short")
     return (
-        fn_keys.join(bc_fn(by_full), "CompositeKey", "left")
-        .join(bc_fn(by_short), "CompositeKey", "left")
+        fn_keys.join(by_full, "CompositeKey", "left")
+        .join(by_short, "CompositeKey", "left")
         .select(
             "CompositeKey",
             F.coalesce(f"_expl_{tag}_full", f"_expl_{tag}_short").alias(f"_expl_{tag}"),
@@ -432,8 +402,6 @@ def _explain_on_pair(
     frame: DataFrame,
     fn_keys: DataFrame,
     audit: DataFrame,
-    bc_fn=_IDENT,
-    bc_audit=_IDENT,
 ) -> DataFrame:
     """Both explain fallbacks — the strict-keyed 'raw' variant and the
     vendor-less robust-keyed 'ref' variant — from ONE physical pass
@@ -470,11 +438,9 @@ def _explain_on_pair(
     # VALUES.
     for tag, has_vendor in (("raw", True), ("ref", False)):
         keyed = keyed.join(
-            bc_audit(
-                audit.select(
-                    F.col("CompositeKey").alias(f"_rk_{tag}"),
-                    F.col("label").alias(f"_rk_label_{tag}"),
-                )
+            audit.select(
+                F.col("CompositeKey").alias(f"_rk_{tag}"),
+                F.col("label").alias(f"_rk_label_{tag}"),
             ),
             _loop_fallback_rowkey(has_vendor) == F.col(f"_rk_{tag}"),
             "left",
@@ -530,9 +496,9 @@ def _explain_on_pair(
     ).select("CompositeKey", "_p._pk", "_p._kr")
 
     # the FN melt is the tiny side and the regex-explained melt the
-    # wide one: building the broadcast on the FN side streams the
+    # wide one: the planner broadcasts the FN side and streams the
     # explained frame map-side instead of exchanging it
-    j = bc_fn(fn_melt).join(
+    j = fn_melt.join(
         explained_melt, F.col("_pk") == F.col("_sk"), "inner"
     ).select(
         "CompositeKey",
@@ -544,7 +510,7 @@ def _explain_on_pair(
         F.min(F.when(F.col("_tag") == "ref", F.col("_cand"))).alias("_bf"),
     )
     return fn_keys.select("CompositeKey").join(
-        bc_fn(picked), "CompositeKey", "left"
+        picked, "CompositeKey", "left"
     ).select(
         "CompositeKey",
         F.col("_br._reason").alias("_expl_raw"),
@@ -620,18 +586,10 @@ def enrich_false_negatives(
                 ex.submit(lambda: _explain_pair_staged(raw).count())
             false_negatives = fn_fut.result()
             audit_ordered = au_fut.result()
-    # gated manual broadcasts (see _ENRICH_BC_MAX): both frames are
-    # checkpoint-cut LogicalRDD leaves, so without this every lookup
-    # join below is a stats-blind SortMergeJoin. The counts are only
-    # taken when the eager cut just materialized the frames (cheap
-    # scans of checkpointed blocks); with plan_boundary=False a count
-    # would re-run the deep producing plans, so the gate stays off.
-    n_fn = n_audit = None
-    if plan_boundary:
-        n_fn = false_negatives.count()
-        n_audit = audit_ordered.count()
-    bc_fn = _gated_bc(n_fn)
-    bc_audit = _gated_bc(n_audit)
+    # every lookup join below is left to the planner: a checkpoint-cut
+    # frame keeps its size estimate, so the FN-key and audit sides
+    # broadcast under autoBroadcastJoinThreshold with no hint
+    # (planner fact pinned in tests/test_graph.py)
     parts = F.split(F.col("CompositeKey"), r"\|", -1)
     fn = false_negatives.select(
         "CompositeKey",
@@ -684,9 +642,9 @@ def enrich_false_negatives(
     )
 
     out = (
-        fn.join(bc_audit(exact), "CompositeKey", "left")
-        .join(bc_audit(short), "_short_ck", "left")
-        .join(bc_audit(prefix), "_short_ck", "left")
+        fn.join(exact, "CompositeKey", "left")
+        .join(short, "_short_ck", "left")
+        .join(prefix, "_short_ck", "left")
     )
 
     expl_cols = []
@@ -694,14 +652,8 @@ def enrich_false_negatives(
         # caller asserts reference == raw minus VendorName (same rows,
         # same order) — one shared regex pass computes both fallbacks
         out = out.join(
-            bc_fn(
-                _explain_on_pair(
-                    raw,
-                    fn.select("CompositeKey", "_short_ck"),
-                    audit,
-                    bc_fn=bc_fn,
-                    bc_audit=bc_audit,
-                )
+            _explain_on_pair(
+                raw, fn.select("CompositeKey", "_short_ck"), audit
             ),
             "CompositeKey",
             "left",
@@ -711,15 +663,11 @@ def enrich_false_negatives(
         for tag, frame in (("raw", raw), ("ref", reference)):
             if frame is not None:
                 out = out.join(
-                    bc_fn(
-                        _explain_on(
-                            frame,
-                            fn.select("CompositeKey", "_short_ck"),
-                            audit,
-                            tag,
-                            bc_fn=bc_fn,
-                            bc_audit=bc_audit,
-                        )
+                    _explain_on(
+                        frame,
+                        fn.select("CompositeKey", "_short_ck"),
+                        audit,
+                        tag,
                     ),
                     "CompositeKey",
                     "left",

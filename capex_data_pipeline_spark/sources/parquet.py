@@ -92,8 +92,7 @@ def load_tables(
 #: 4 KB compressed is still only a few hundred rows of heavy per-row
 #: compute per task — small enough that every frame the engine
 #: deliberately spreads locally keeps its full fan-out.
-#: Override: $SPARK_GRAFT_SPREAD_BYTES_PER_TASK.
-_SPREAD_BYTES_PER_TASK = 4096
+_SPREAD_MIN_TASK_BYTES = 4096
 
 
 def _bytes_conf(value: "str | None", default: int) -> int:
@@ -206,7 +205,7 @@ def spread_few_splits(df: DataFrame) -> DataFrame:
     production scale — this is a NO-OP, so consumers never pay a
     pointless corpus shuffle; the exchange only appears when the input
     genuinely cannot parallelize by splits. The fan-out is additionally
-    BOUNDED by input size (>= ~$SPARK_GRAFT_SPREAD_BYTES_PER_TASK
+    BOUNDED by input size (>= ~:data:`_SPREAD_MIN_TASK_BYTES`
     compressed bytes per task), so a tiny dimension extract on a wide
     cluster never explodes into thousands of near-empty partitions.
     The split count is estimated from the leaf file listing
@@ -220,13 +219,8 @@ def spread_few_splits(df: DataFrame) -> DataFrame:
     est = _estimated_scan_splits(df)
     if est is not None:
         nparts, total_bytes = est
-        per_task = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_BYTES_PER_TASK", _SPREAD_BYTES_PER_TASK
-            )
-        )
         target = min(
-            target, max(1, -(-total_bytes // max(1, per_task)))
+            target, max(1, -(-total_bytes // _SPREAD_MIN_TASK_BYTES))
         )
     else:
         nparts = df.rdd.getNumPartitions()

@@ -27,6 +27,35 @@ def spark():
     yield spark
 
 
+@pytest.fixture
+def same_rows_any_join(spark):
+    """Join-strategy A/B: ``check(build)`` runs the zero-argument
+    DataFrame builder twice, once under the session's
+    ``autoBroadcastJoinThreshold`` and once with it at ``-1`` (no
+    planner broadcasts), asserts equal sorted rows and returns them.
+    The conf is restored afterwards. This is the spark-rapids
+    ``assert_gpu_and_cpu_are_equal_collect`` pattern with the join
+    strategy as the mechanism switched off."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    def collect(build):
+        return sorted(map(tuple, build().collect()), key=repr)
+
+    def check(build):
+        before = spark.conf.get(key)
+        try:
+            planned = collect(build)
+            spark.conf.set(key, "-1")
+            shuffled = collect(build)
+        finally:
+            spark.conf.set(key, before)
+        assert planned == shuffled
+        assert planned, "empty result: the A/B compared nothing"
+        return planned
+
+    return check
+
+
 def _dead_jvm_status(report) -> str | None:
     """How the session's JVM died, or None while it lives (or was never
     started). Dead = the Py4J gateway's process has exited, or the

@@ -177,6 +177,31 @@ def test_shared_reference_explain_equals_two_pass(spark, raw_sdf, office_sdf):
     assert rows(True) == rows(False)
 
 
+@pytest.mark.parametrize("shared", [True, False])
+def test_enrichment_join_strategy_identical(
+    spark, raw_sdf, office_sdf, same_rows_any_join, shared
+):
+    """Every FN-key / audit lookup join is the planner's: reasons and
+    sources are identical with planner broadcasts on and off, on both
+    the shared-regex and the two-pass explain paths."""
+    from capex_data_pipeline_spark.operators.validation import with_robust_key
+
+    res = run_pipeline(raw_sdf, office_sdf)
+    golden = raw_sdf.drop("VendorName")
+    p_keys = with_robust_key(res.processed).select("CompositeKey").distinct()
+    g_keys = with_robust_key(golden).select("CompositeKey").distinct()
+    fn = g_keys.join(p_keys, "CompositeKey", "left_anti")
+    same_rows_any_join(
+        lambda: enrich_false_negatives(
+            fn,
+            res.audit_ordered,
+            raw=raw_sdf,
+            reference=golden,
+            shared_reference=shared,
+        )
+    )
+
+
 def test_pipeline_staging_boundary_shares_one_materialization(
     spark, raw_sdf, office_sdf, tmp_path
 ):

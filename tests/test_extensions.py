@@ -1281,6 +1281,20 @@ def test_dedup_clusters_staging_boundary_identical(spark, tmp_path, monkeypatch)
     clear_staging()
 
 
+def test_dedup_clusters_join_strategy_identical(spark, same_rows_any_join):
+    """The label-map re-key and the per-round label joins are the
+    planner's: clusters, sizes and keepers are identical with planner
+    broadcasts on and off."""
+    from capex_data_pipeline_spark.extensions.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (5, 22)],
+        "id_a long, id_b long",
+    )
+    corpus = spark.createDataFrame([(i,) for i in range(1, 30)], "doc_id long")
+    same_rows_any_join(lambda: dedup_clusters(pairs, corpus=corpus))
+
+
 def test_remove_duplicated_spans(spark):
     """Keeper election + cut semantics: the lowest (doc_id, start)
     occurrence of each exact span survives; all others are removed;

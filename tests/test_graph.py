@@ -2,8 +2,9 @@
 (extensions/graph.py): triangle counting, k-core peeling, and
 connected components — hand-computed fixtures, adversarial skew
 (celebrity vertex), input-hygiene canonicalization, driver-side
-Python replays for the data-dependent ``until_fixpoint`` modes, and
-plan-boundary-mode output equality.
+Python replays for the data-dependent ``until_fixpoint`` modes,
+plan-boundary-mode output equality, and join-strategy A/B equality
+with the planner fact that lets the planner pick those joins.
 
 PageRank's tests live in test_extensions.py (round-5 vintage).
 """
@@ -14,10 +15,12 @@ import itertools
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from capex_data_pipeline_spark.extensions.graph import (
     connected_components,
     kcore_peel,
+    pagerank,
     triangle_counts,
 )
 
@@ -667,3 +670,63 @@ def test_cc_incremental_empty_batch_and_fresh_only(spark):
         for r in cc_incremental(labels, fresh).collect()
     }
     assert got == {1: 1, 2: 1, 7: 7, 8: 7, 9: 7}
+
+
+# ------------------------------------------------ join strategy
+
+
+def test_checkpoint_cut_frame_keeps_stats_and_broadcasts(spark):
+    """The planner fact that lets the graph ops, enrich_false_negatives
+    and dedup_clusters join cut frames without a broadcast hint: a
+    vertex-sized frame cut by ``cache.plan_boundary`` (eager or lazy)
+    keeps a finite size estimate under ``autoBroadcastJoinThreshold``
+    and joins a persisted edge frame as a BroadcastHashJoin that builds
+    on the cut frame. If a Spark upgrade drops checkpoint stats, this
+    fails instead of those joins quietly turning into edge shuffles."""
+    from capex_data_pipeline_spark.cache import persisted, plan_boundary
+
+    threshold = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    edges = persisted(
+        spark.range(60_000).select(
+            (F.col("id") % 5_000).alias("src"),
+            F.pmod(F.xxhash64("id"), F.lit(5_000)).alias("dst"),
+        )
+    )
+    verts = edges.groupBy(F.col("src").alias("v")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    for eager in (True, False):
+        cut = plan_boundary(verts, mode="local", eager=eager, label="pin")
+        qe = cut._jdf.queryExecution()
+        size = int(qe.optimizedPlan().stats().sizeInBytes())
+        assert 0 < size <= threshold, (eager, size)
+        joined = edges.join(cut, edges["src"] == cut["v"])
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        joins = [ln for ln in plan.splitlines() if "Join" in ln]
+        # one join, broadcast, with the cut vertex frame as build side
+        assert len(joins) == 1, (eager, plan)
+        assert "BroadcastHashJoin" in joins[0], (eager, plan)
+        assert "BuildRight" in joins[0], (eager, plan)
+        assert joined.count() == 60_000
+
+
+def test_pagerank_join_strategy_identical(spark, same_rows_any_join):
+    """Integer-exact ranks are bit-identical whichever per-round join
+    strategy the planner picks (broadcast vs shuffle)."""
+    edges = spark.range(600).select(
+        (F.col("id") % 83).alias("src"),
+        (F.pmod(F.xxhash64("id"), F.lit(97))).alias("dst"),
+    )
+    same_rows_any_join(lambda: pagerank(edges, iterations=3))
+
+
+def test_cc_fixpoint_join_strategy_identical(spark, same_rows_any_join):
+    edges = spark.range(400).select(
+        (F.col("id") % 120).alias("src"),
+        (F.pmod(F.xxhash64("id", F.lit(3)), F.lit(130))).alias("dst"),
+    )
+    same_rows_any_join(
+        lambda: connected_components(edges, until_fixpoint=True)
+    )

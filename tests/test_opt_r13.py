@@ -101,80 +101,6 @@ def test_save_stats_cells_multi_equals_append_loop(spark, tmp_path):
         shutil.rmtree(tmp_path, ignore_errors=True)
 
 
-# ----------------------------------------------------- graph broadcast
-
-
-def test_state_bc_gate_decisions():
-    """The broadcast_state auto-gate: broadcast only when the state is
-    small enough to frame AND the per-round edge frame is big enough
-    that the saved shuffle beats the per-round broadcast latency
-    (calibration table at graph._BROADCAST_STATE_MIN_EDGE_ROWS)."""
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.extensions.graph import _state_bc
-
-    ident = lambda df: df  # noqa: E731
-
-    # forced flags never call the count fns
-    boom = lambda: (_ for _ in ()).throw(AssertionError("counted"))  # noqa: E731
-    assert _state_bc(True, boom, boom) is F.broadcast
-    assert _state_bc(False, boom, boom)("x") == "x"
-
-    # auto: big edges + small state -> broadcast (r14: the EDGE count
-    # runs first and settles the gate alone whenever 2*edges <= cap —
-    # every caller's state is a vertex set of the edge frame's
-    # endpoints, so state <= 2*edges; the state count was pure
-    # overhead on gate-negative graphs, r13 verdict item 3)
-    assert _state_bc(None, boom, lambda: 500_000) is F.broadcast
-    # auto: tiny edge frame -> keep the shuffle join (q242's graph),
-    # decided without ever counting the state
-    assert _state_bc(None, boom, lambda: 3_573) is not F.broadcast
-    # auto: state over the frame cap (ambiguous band: 2*edges > cap)
-    # -> the state count runs and keeps the shuffle join
-    assert (
-        _state_bc(None, lambda: 10_000_000, lambda: 9_000_000)
-        is not F.broadcast
-    )
-    # auto with no edge fn: state size alone decides
-    assert _state_bc(None, lambda: 1_000) is F.broadcast
-
-
-def test_pagerank_broadcast_state_identical(spark):
-    """Integer-exact ranks must be bit-identical whichever per-round
-    join strategy the gate picks (broadcast vs shuffle)."""
-    from capex_data_pipeline_spark.extensions.graph import pagerank
-
-    edges = spark.range(600).select(
-        (F.col("id") % 83).alias("src"),
-        (F.pmod(F.xxhash64("id"), F.lit(97))).alias("dst"),
-    )
-    off = _rows(pagerank(edges, iterations=3, broadcast_state=False))
-    on = _rows(pagerank(edges, iterations=3, broadcast_state=True))
-    assert on == off and len(on) > 0
-
-
-def test_cc_fixpoint_broadcast_state_identical(spark):
-    from capex_data_pipeline_spark.extensions.graph import (
-        connected_components,
-    )
-
-    edges = spark.range(400).select(
-        (F.col("id") % 120).alias("src"),
-        (F.pmod(F.xxhash64("id", F.lit(3)), F.lit(130))).alias("dst"),
-    )
-    off = _rows(
-        connected_components(
-            edges, until_fixpoint=True, broadcast_state=False
-        )
-    )
-    on = _rows(
-        connected_components(
-            edges, until_fixpoint=True, broadcast_state=True
-        )
-    )
-    assert on == off and len(on) > 0
-
-
 # ----------------------------------------------------- PPJoin int tokens
 
 

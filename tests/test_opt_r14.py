@@ -265,62 +265,6 @@ def test_spread_bounds_tiny_frame_fanout(spark):
     )
 
 
-# ------------------------------------------------------ _state_bc gate
-
-
-def test_state_bc_single_count_short_circuits(spark):
-    """The auto gate must settle from the edge count alone outside the
-    narrow 2*edges > max_state band — the state count was pure
-    overhead on gate-negative graphs (r13 verdict item 3)."""
-    from capex_data_pipeline_spark.extensions.graph import _state_bc
-
-    calls = {"state": 0}
-
-    def state_count():
-        calls["state"] += 1
-        return 100
-
-    # small graph: edge floor fails -> no broadcast, NO state count
-    wrap = _state_bc(None, state_count, lambda: 3_600)
-    assert wrap(spark.range(1)) is not None
-    assert calls["state"] == 0
-    # mid-size graph: edges >= floor and 2*edges <= cap -> broadcast
-    # decided from the edge count alone
-    _state_bc(None, state_count, lambda: 300_000)
-    assert calls["state"] == 0
-    # only the ambiguous band pays the state count
-    _state_bc(None, state_count, lambda: 4_000_000)
-    assert calls["state"] == 1
-
-
-def test_state_bc_decision_unchanged(spark):
-    """The single-count short-circuit must produce the SAME decision
-    as the two-count conjunction across the regimes (flag identity,
-    not just fewer actions)."""
-    from pyspark.sql.functions import broadcast  # noqa: F401
-
-    from capex_data_pipeline_spark.extensions.graph import (
-        _BROADCAST_STATE_MAX,
-        _BROADCAST_STATE_MIN_EDGE_ROWS,
-        _state_bc,
-    )
-
-    cases = [
-        (10, 3_600),          # tiny graph: off (edge floor)
-        (100, 300_000),       # mid: on
-        (4_000_000, 250_000), # big state but under cap: on
-        (6_000_000, 9_000_000),  # state over cap: off
-    ]
-    for state_n, edge_n in cases:
-        expected = state_n <= _BROADCAST_STATE_MAX and (
-            edge_n >= _BROADCAST_STATE_MIN_EDGE_ROWS
-        )
-        wrap = _state_bc(None, lambda s=state_n: s, lambda e=edge_n: e)
-        df = spark.range(1)
-        got_broadcast = wrap(df) is not df
-        assert got_broadcast == expected, (state_n, edge_n)
-
-
 # ----------------------------------------------------- validation cache
 
 
