@@ -17,6 +17,8 @@ import decimal
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from capex_data_pipeline_spark.sources.parquet import spread_few_splits
+
 #: denominator for the md5-derived sampling hash: first 8 hex chars →
 #: a uniform 32-bit integer
 _HASH_SPACE = 1 << 32
@@ -1749,7 +1751,6 @@ def phrase_match_counts(
     phrase: "list[str]",
     id_col: str = "doc_id",
     text_col: str = "text",
-    rebalance_input: bool = False,
 ) -> DataFrame:
     """Exact consecutive-phrase search: count the occurrences of
     ``phrase`` (a list of normalized words) in every document's token
@@ -1784,12 +1785,7 @@ def phrase_match_counts(
 
     k = len(phrase)
     needle = " " + " ".join(phrase) + " "
-    base = df.select(F.col(id_col), F.col(text_col))
-    if rebalance_input:
-        # few-split-input lever — see proximity_match_counts
-        base = base.repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
+    base = spread_few_splits(df.select(F.col(id_col), F.col(text_col)))
     cand = base.select(
         F.col(id_col), normalized_text(F.col(text_col)).alias("_nt")
     ).filter(
@@ -1809,7 +1805,7 @@ def phrase_match_counts(
     # nondeterministic barrier for the same reason as
     # proximity_match_counts: without it the n_matches predicate
     # substitutes the start-position filter into the scan-side
-    # Filter (re-evaluated, and below any rebalance exchange)
+    # Filter (re-evaluated, and below any spread exchange)
     return (
         cand.select(F.col(id_col), words.alias("_ws"))
         .filter(F.size("_ws") >= k)
@@ -3001,7 +2997,6 @@ def proximity_match_counts(
     window: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    rebalance_input: bool = False,
 ) -> DataFrame:
     """Proximity search — documents where ``term_a`` and ``term_b``
     occur within ``window`` token positions (the NEAR/k operator of
@@ -3028,20 +3023,12 @@ def proximity_match_counts(
 
     from capex_data_pipeline_spark.extensions.dedup import normalized_text
 
-    base = df.select(F.col(id_col), F.col(text_col))
-    if rebalance_input:
-        # a corpus whose parquet carries FEW splits (testdata sf0.1 is
-        # ONE row group) runs the whole normalize+filter chain on as
-        # many tasks as there are splits — one core, however wide the
-        # cluster. One row-level round-robin exchange of the raw
-        # (id, text) projection restores parallelism for the corpus
-        # pass; on real many-split inputs leave it off (the scan is
-        # already parallel and the exchange ships the corpus once for
-        # nothing). Measured at sf0.1: 21.9 s -> ~2 s (docs/SCALE.md
-        # r13).
-        base = base.repartition(
-            df.sparkSession.sparkContext.defaultParallelism
-        )
+    # a few-file corpus (testdata sf0.1 is ONE single-row-group file)
+    # would run the whole normalize+filter chain on one core; the
+    # round-robin spread of the (id, text) projection restores
+    # parallelism (21.9 s -> ~2 s at sf0.1, docs/SCALE.md r13) and is
+    # a no-op on many-file inputs.
+    base = spread_few_splits(df.select(F.col(id_col), F.col(text_col)))
     cand = base.select(
         F.col(id_col), normalized_text(F.col(text_col)).alias("_nt")
     ).filter(

@@ -60,6 +60,7 @@ from capex_data_pipeline_spark.operators.windows import (
     select_representative_rows,
     w1_frame_order,
 )
+from capex_data_pipeline_spark.sources.parquet import spread_few_splits
 
 GOLDEN_FILTER_LABEL = "Post: Not in final_data RequestNos"
 _GOLDEN_RULE_ORDER = 99
@@ -188,82 +189,14 @@ def render_stage_report(
 
 def _ingest(raw: DataFrame) -> DataFrame:
     """Attach the deterministic row id used for pandas-order tiebreaks,
-    then spread the data: the rule passes are regex-heavy, and a small
-    input (one CSV / one parquet split) would otherwise run them on a
-    single core. The id is assigned BELOW the exchange, so it still
-    reflects input order and stays deterministic."""
-    df = raw.withColumn("_row_id", F.monotonically_increasing_id())
-    target = raw.sparkSession.sparkContext.defaultParallelism
-    # inputFiles() is a cheap file-listing probe; the precise check
-    # (raw.rdd.getNumPartitions()) costs a full physical planning +
-    # Python-RDD conversion (~1s of driver time on a wide plan). A
-    # many-file input is already spread. Few files does NOT imply few
-    # partitions — one large multi-row-group parquet file still splits
-    # into size-based scan partitions — so for local files estimate the
-    # split count from total bytes / maxPartitionBytes before paying a
-    # full-input exchange.
-    files = raw.inputFiles()
-    threshold = max(target // 2, 2)
-    if len(files) < threshold and _estimated_splits(raw, files) < threshold:
-        df = df.repartition(target, "_row_id")
-    return df
-
-
-_BYTE_SUFFIXES = {
-    "": 1,
-    "k": 1 << 10,
-    "m": 1 << 20,
-    "g": 1 << 30,
-    "t": 1 << 40,
-    "p": 1 << 50,
-}
-
-
-def _parse_byte_string(conf: str) -> int:
-    """Parse a Spark size conf the way ``JavaUtils.byteStringAs`` does:
-    a number with an optional ``k/m/g/t/p`` suffix and optional trailing
-    ``b`` (``"128m"``, ``"64MB"``, ``"134217728"``, ``"1g"``).  Sessions
-    built outside this package legitimately set
-    ``spark.sql.files.maxPartitionBytes`` in suffixed form, so a bare
-    ``int()`` would crash every read.  Unparseable values fall back to
-    Spark's 128 MiB default rather than failing the pipeline."""
-    s = conf.strip().lower().removesuffix("b")
-    mult = 1
-    if s and s[-1] in _BYTE_SUFFIXES:
-        mult = _BYTE_SUFFIXES[s[-1]]
-        s = s[:-1]
-    try:
-        return int(s) * mult
-    except ValueError:
-        return 128 * 1024 * 1024
-
-
-def _estimated_splits(raw: DataFrame, files: list[str]) -> int:
-    """Size-based estimate of how many scan partitions a file input yields
-    (``ceil(bytes / maxPartitionBytes)`` per file, the same arithmetic
-    FilePartition uses, ignoring openCostInBytes packing — close enough to
-    gate a repartition). Non-local URIs can't be stat'ed cheaply from the
-    driver; return 0 so they keep the conservative exchange."""
-    import os as _os
-    from urllib.parse import urlparse
-
-    if not files:
-        return 0
-    conf = raw.sparkSession.conf.get(
-        "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
+    then spread a few-file input (one CSV, one parquet file) with
+    :func:`spread_few_splits`: the rule passes are regex-heavy and
+    would otherwise run on a single core. The id is assigned BELOW the
+    exchange, so it still reflects input order and stays
+    deterministic."""
+    return spread_few_splits(
+        raw.withColumn("_row_id", F.monotonically_increasing_id())
     )
-    max_bytes = _parse_byte_string(conf) or 1
-    splits = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return 0
-        try:
-            size = _os.path.getsize(u.path or f)
-        except OSError:
-            return 0
-        splits += -(-size // max_bytes)
-    return splits
 
 
 def run_pipeline(

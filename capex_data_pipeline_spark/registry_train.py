@@ -232,8 +232,7 @@ def q131_phrase_search(spark, sf_dir):
     )
 
     return phrase_match_counts(
-        _t(spark, sf_dir, "documents"), list(_PHRASE),
-        rebalance_input=True,
+        _t(spark, sf_dir, "documents"), list(_PHRASE)
     )
 
 # ------------------------------------ q132: anchor-text aggregation
@@ -5731,8 +5730,7 @@ def q246_proximity_search(spark, sf_dir):
     )
 
     return proximity_match_counts(
-        _t(spark, sf_dir, "documents"), "table", "row", window=5,
-        rebalance_input=True,
+        _t(spark, sf_dir, "documents"), "table", "row", window=5
     )
 
 

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -95,133 +96,47 @@ def load_tables(
 _SPREAD_MIN_TASK_BYTES = 4096
 
 
-def _bytes_conf(value: "str | None", default: int) -> int:
-    """Parse a Spark byte-size conf string ('128MB', '4m', bare
-    bytes). Returns ``default`` on None/unparseable."""
-    if not value:
-        return default
-    s = value.strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("tb", 1024**4), ("t", 1024**4),
-        ("gb", 1024**3), ("g", 1024**3),
-        ("mb", 1024**2), ("m", 1024**2),
-        ("kb", 1024), ("k", 1024),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return default
-
-
-def _estimated_scan_splits(df: DataFrame) -> "tuple[int, int] | None":
-    """(estimated scan partition count, total compressed bytes) of the
-    frame's leaf file scan, computed from the file listing alone —
-    replicating Spark's FilePartition packing (maxSplitBytes =
-    min(maxPartitionBytes, max(openCostInBytes, totalBytes/minPartNum));
-    splits sorted desc, packed greedily with openCost per file piece).
-    None when the frame has no file leaves (synth/boundary-cut inputs)
-    or non-local files — callers fall back to the RDD partition count.
-
-    Exists so the few-split gate does NOT build the physical plan /
-    RDD DAG per call (``df.rdd.getNumPartitions()`` forces full
-    Catalyst optimization each time — measurable driver overhead on
-    complex inputs, and with AQE it can even materialize upstream
-    query stages)."""
-    from urllib.parse import unquote, urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    sizes = []
-    for uri in files:
-        if not uri.startswith("file:"):
-            return None
-        try:
-            sizes.append(os.path.getsize(unquote(urlparse(uri).path)))
-        except OSError:
-            return None
-    conf = df.sparkSession.conf
-    sc = df.sparkSession.sparkContext
-    max_pb = _bytes_conf(
-        conf.get("spark.sql.files.maxPartitionBytes", None), 128 * 1024**2
-    )
-    open_cost = _bytes_conf(
-        conf.get("spark.sql.files.openCostInBytes", None), 4 * 1024**2
-    )
-    min_pn_raw = conf.get("spark.sql.files.minPartitionNum", None)
-    leaf_par = conf.get(
-        "spark.sql.leafNodeDefaultParallelism", None
-    )
-    min_pn = int(
-        min_pn_raw or leaf_par or sc.defaultParallelism
-    )
-    total_bytes = sum(sizes)
-    total = total_bytes + open_cost * len(sizes)
-    max_split = min(max_pb, max(open_cost, total // max(1, min_pn)))
-    max_split = max(1, max_split)
-    pieces: list[int] = []
-    for s in sizes:
-        n_full, rem = divmod(s, max_split)
-        pieces.extend([max_split] * n_full)
-        if rem:
-            pieces.append(rem)
-    pieces.sort(reverse=True)
-    nparts, cur = 0, 0
-    for p in pieces:
-        if cur and cur + p > max_split:
-            nparts += 1
-            cur = 0
-        cur += p + open_cost
-    if cur:
-        nparts += 1
-    return nparts, total_bytes
-
-
 def spread_few_splits(df: DataFrame) -> DataFrame:
-    """Restore executor parallelism over a FEW-SPLIT input before
-    heavy per-row compute (shingles, per-row md5 fan-outs, signature
+    """Restore executor parallelism over a FEW-FILE input before heavy
+    per-row compute (shingles, per-row md5 fan-outs, signature
     batteries, wide decimal aggregates).
 
-    A parquet file is splittable only at row-group boundaries; a
-    single-row-group file — the shape of every testdata table, and of
-    any small upstream extract — therefore scans as ONE task no matter
-    how many cores the cluster has, and every codegen'd stage fused
-    onto that scan runs single-threaded (the unsplittable-input case
-    of the optimization guide: repartition right after the read). One
-    round-robin exchange of the (ideally pre-projected) frame spreads
-    the rows across ``defaultParallelism`` tasks.
+    The decision counts input FILES, not scan partitions. A row group
+    is the smallest unit a parquet scan can split: a single-row-group
+    file — the shape of every testdata table, and of any small
+    upstream extract — may scan as several size-based partitions, yet
+    every row lands in the one partition that owns the row group, and
+    every codegen'd stage fused onto that scan runs single-threaded.
+    So a frame with fewer input files than the target gets one
+    round-robin exchange of the (ideally pre-projected) frame, which
+    spreads the rows across the target's tasks.
 
-    Scale-adaptive, not local-tuned: when the scan already carries at
-    least the target partition count — any real many-split table at
-    production scale — this is a NO-OP, so consumers never pay a
-    pointless corpus shuffle; the exchange only appears when the input
-    genuinely cannot parallelize by splits. The fan-out is additionally
-    BOUNDED by input size (>= ~:data:`_SPREAD_MIN_TASK_BYTES`
-    compressed bytes per task), so a tiny dimension extract on a wide
-    cluster never explodes into thousands of near-empty partitions.
-    The split count is estimated from the leaf file listing
-    (:func:`_estimated_scan_splits`) — no physical planning per call;
-    only file-less inputs (synth frames, plan-boundary cuts) fall back
-    to ``df.rdd.getNumPartitions()``. Row order is not preserved —
-    callers must be order-insensitive (every consumer here is an
-    aggregation or per-row flag; their oracles re-certify value
-    equality)."""
+    The target is ``defaultParallelism``, bounded by input size
+    (>= ~:data:`_SPREAD_MIN_TASK_BYTES` compressed bytes per task for
+    local files), so a tiny dimension extract on a wide cluster never
+    explodes into thousands of near-empty partitions. A frame with at
+    least the target number of files — any real many-file table at
+    production scale — is returned unchanged. Frames without input
+    files (synth frames, plan-boundary cuts) compare their RDD
+    partition count instead. Row order is not preserved — callers must
+    be order-insensitive (every consumer here is an aggregation or
+    per-row flag; their oracles re-certify value equality)."""
     target = df.sparkSession.sparkContext.defaultParallelism
-    est = _estimated_scan_splits(df)
-    if est is not None:
-        nparts, total_bytes = est
-        target = min(
-            target, max(1, -(-total_bytes // _SPREAD_MIN_TASK_BYTES))
-        )
+    files = df.inputFiles()
+    if files:
+        nparts = len(files)
+        paths = [
+            unquote(urlparse(f).path) for f in files if f.startswith("file:")
+        ]
+        if len(paths) == nparts:
+            try:
+                total_bytes = sum(os.path.getsize(p) for p in paths)
+            except OSError:
+                pass
+            else:
+                target = min(
+                    target, max(1, -(-total_bytes // _SPREAD_MIN_TASK_BYTES))
+                )
     else:
         nparts = df.rdd.getNumPartitions()
     if nparts >= target or target <= 1:

@@ -2070,3 +2070,132 @@ def test_editdist_join_unicode_codepoint_semantics(spark):
         if lev(names[i], names[j]) <= k
     }
     assert got == want
+
+
+def _rows(df):
+    return sorted(
+        tuple(r[c] for c in sorted(df.columns)) for r in df.collect()
+    )
+
+
+def test_ppjoin_ordered_uses_long_token_ids(spark):
+    """The injectivity-certified xxhash64 token-id path must actually
+    engage on a collision-free vocabulary (array<long> ts) — a silent
+    fallback to string tokens would be a 2× verify-stage regression
+    with no functional symptom."""
+    from pyspark.sql import types as T
+
+    from capex_data_pipeline_spark.extensions.dedup import _ppjoin_ordered
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma tok{i} tok{i % 3}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    ordered = _ppjoin_ordered(docs, 0.6, "text", "doc_id")
+    ts_type = ordered.schema["ts"].dataType
+    assert isinstance(ts_type, T.ArrayType)
+    assert isinstance(ts_type.elementType, T.LongType)
+    # prefix length contract unchanged: n - ceil(0.6*n) + 1
+    row = ordered.filter(F.col("id") == 0).first()
+    n = len(row["ts"])
+    import math
+
+    assert row["_plen"] == n - math.ceil(0.6 * n - 1e-9) + 1
+
+
+def test_ppjoin_candidates_verify_inputs_exact(spark):
+    """The candidate aggregate's (_cnt, _pa, _pb) must satisfy the
+    suffix-intersection identity on every candidate pair:
+    |A ∩ B| == _cnt + |intersect(A[_pa+1:], B[_pb+1:])| (0-based) —
+    the verify stage's exactness rests on it."""
+    import random
+
+    from capex_data_pipeline_spark.extensions.dedup import (
+        _ppjoin_candidates,
+        _ppjoin_ordered,
+    )
+
+    rng = random.Random(41)
+    vocab = [f"w{i}" for i in range(30)]
+    docs = [
+        (i, " ".join(rng.sample(vocab, rng.choice([3, 5, 8, 12, 16, 20]))))
+        for i in range(80)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    ordered = _ppjoin_ordered(df, 0.6, "text", "doc_id")
+    arrays = {r["id"]: list(r["ts"]) for r in ordered.collect()}
+    cands = _ppjoin_candidates(ordered, 0.6).collect()
+    assert cands, "corpus must produce candidates"
+    for r in cands:
+        a, b = arrays[r["id_a"]], arrays[r["id_b"]]
+        full = len(set(a) & set(b))
+        suff = len(set(a[r["_pa"] + 1:]) & set(b[r["_pb"] + 1:]))
+        assert full == r["_cnt"] + suff, (r, a, b)
+
+
+def test_ppjoin_suffix_bound_keeps_every_qualifying_pair(spark):
+    """The aggregated suffix-bound filter prunes candidates but may
+    NEVER lose a qualifying pair — brute-force certified."""
+    import random
+
+    from capex_data_pipeline_spark.extensions.dedup import (
+        jaccard_similarity_join,
+    )
+
+    rng = random.Random(97)
+    vocab = [f"t{i}" for i in range(18)]
+    docs = [
+        (i, " ".join(rng.sample(vocab, rng.choice([4, 6, 9, 12]))))
+        for i in range(70)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in jaccard_similarity_join(df, threshold=0.5).collect()
+    }
+    sets = {i: set(t.split()) for i, t in docs}
+    expect = {}
+    ids = sorted(sets)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+            if j >= 0.5:
+                expect[(a, b)] = round(j, 6)
+    assert got == expect
+
+
+def test_dedup_clusters_emit_degree_equals_standalone(spark):
+    """emit_degree rides the contraction aggregate; its values must be
+    bit-identical to the standalone symmetric-degree aggregate the
+    q170 summary used to run, and every other output column must be
+    unchanged vs emit_degree=False."""
+    from capex_data_pipeline_spark.extensions.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (4, 5), (6, 7), (6, 8)],
+        "id_a long, id_b long",
+    )
+    corpus = spark.createDataFrame(
+        [(i,) for i in range(1, 10)], "doc_id long"
+    )
+    sym = pairs.union(
+        pairs.select(F.col("id_b"), F.col("id_a"))
+    ).toDF("u", "v")
+    with_deg = dedup_clusters(
+        sym, corpus=corpus, id_a="u", id_b="v",
+        assume_symmetric=True, emit_degree=True,
+    )
+    without = dedup_clusters(
+        sym, corpus=corpus, id_a="u", id_b="v", assume_symmetric=True
+    )
+    assert sorted(with_deg.columns) == sorted(
+        ["doc_id", "dup_degree", "cluster_id", "cluster_size", "is_keeper"]
+    )
+    assert _rows(with_deg.drop("dup_degree")) == _rows(without)
+    deg = {
+        r["u"]: r["d"]
+        for r in sym.groupBy("u").agg(F.count(F.lit(1)).alias("d")).collect()
+    }
+    got = {r["doc_id"]: r["dup_degree"] for r in with_deg.collect()}
+    for doc in range(1, 10):
+        assert got[doc] == deg.get(doc, 0)

@@ -730,3 +730,31 @@ def test_cc_fixpoint_join_strategy_identical(spark, same_rows_any_join):
     same_rows_any_join(
         lambda: connected_components(edges, until_fixpoint=True)
     )
+
+
+def test_cc_fixpoint_fused_convergence_identical(spark):
+    """connected_components(until_fixpoint) with the fused convergence
+    check (old label riding the round's own aggregate) must return the
+    same labeling as the unrolled rounds= mode on a graph whose
+    diameter forces several rounds — and the internal _old column must
+    not leak into the output schema."""
+    from capex_data_pipeline_spark.extensions.graph import (
+        connected_components,
+    )
+
+    # a 9-node path (diameter 8) plus a triangle and an isolated edge
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 9)]
+        + [(20, 21), (21, 22), (20, 22), (30, 31)],
+        "src long, dst long",
+    )
+    fixed = connected_components(
+        edges, until_fixpoint=True, assume_canonical=True
+    )
+    unrolled = connected_components(edges, rounds=10, assume_canonical=True)
+    assert sorted(fixed.columns) == ["component", "vertex"]
+    assert _rows(fixed) == _rows(unrolled)
+    comp = {r["vertex"]: r["component"] for r in fixed.collect()}
+    assert all(comp[v] == 1 for v in range(1, 10))
+    assert all(comp[v] == 20 for v in (20, 21, 22))
+    assert comp[30] == 30 and comp[31] == 30

@@ -2828,3 +2828,187 @@ def test_group_exact_quantiles_cells_budget_guard(spark):
         group_exact_quantiles(
             df, "g", "x", [0.5], n_buckets=100_000, max_groups=100_000
         )
+
+
+def _rows(df):
+    return sorted(
+        tuple(r[c] for c in sorted(df.columns)) for r in df.collect()
+    )
+
+
+def test_table_stats_sketch_multi_equals_sequential(spark):
+    """table_stats_sketch_multi (one unioned job) must produce the
+    SAME per-column rows as the sequential per-table calls it
+    replaced in q200 — the widths the advisor derives depend on it."""
+    from capex_data_pipeline_spark.extensions.sketches import (
+        table_stats_sketch,
+        table_stats_sketch_multi,
+    )
+
+    a = spark.range(200).select(
+        F.col("id").alias("a_key"),
+        (F.col("id") % 7).cast("string").alias("a_val"),
+        F.when(F.col("id") % 5 == 0, None)
+        .otherwise(F.col("id") % 13)
+        .alias("a_sparse"),
+    )
+    b = spark.range(90).select(
+        (F.col("id") * 3).alias("b_key"),
+        F.concat(F.lit("x"), F.col("id").cast("string")).alias("b_val"),
+    )
+    seq = _rows(
+        table_stats_sketch(a, ["a_key", "a_val", "a_sparse"]).unionByName(
+            table_stats_sketch(b, ["b_key", "b_val"])
+        )
+    )
+    multi = _rows(
+        table_stats_sketch_multi(
+            [(a, ["a_key", "a_val", "a_sparse"]), (b, ["b_key", "b_val"])]
+        )
+    )
+    assert multi == seq
+
+
+def test_table_stats_sketch_multi_rejects_duplicate_columns(spark):
+    from capex_data_pipeline_spark.extensions.sketches import (
+        table_stats_sketch_multi,
+    )
+
+    a = spark.range(5).select(F.col("id").alias("k"))
+    with pytest.raises(ValueError, match="globally unique"):
+        table_stats_sketch_multi([(a, ["k"]), (a, ["k"])])
+
+
+def _jgp_edges(spark):
+    """Small frames with a REUSED object (c appears on two edges, like
+    lineitem on three of q177's five) and a self-join edge."""
+    a = spark.range(80).select(
+        (F.col("id") % 11).alias("ak"), F.col("id").alias("a_pay")
+    )
+    b = spark.range(120).select(
+        (F.col("id") % 7).alias("bk"),
+        F.when(F.col("id") % 10 == 0, None)
+        .otherwise(F.col("id") % 11)
+        .alias("bk2"),
+    )
+    c = spark.range(60).select((F.col("id") % 5).alias("ck"))
+    return a, b, c, [
+        ("a-b", a, F.col("ak"), b, F.col("bk2")),
+        ("b-c", b, F.col("bk"), c, F.col("ck")),
+        ("a-c", a, F.col("ak"), c, F.col("ck")),
+        ("c-self", c, F.col("ck"), c, F.col("ck")),
+    ]
+
+
+def test_join_graph_profile_fused_equals_per_edge_classic(spark):
+    """The r14 per-table fuse must reproduce the unfused per-edge
+    computation bit-for-bit in classic (include_exact) mode: the
+    per-edge cms_join_size / count aggregates ARE the old shape."""
+    from pyspark.sql.window import Window
+
+    from capex_data_pipeline_spark.extensions.sketches import (
+        cms_join_size,
+        join_graph_profile,
+    )
+
+    _a, _b, _c, edges = _jgp_edges(spark)
+    parts = []
+    for name, ld, lk, rd, rk in edges:
+        sz = cms_join_size(ld, lk, rd, rk, 3, 1024)
+        nl = ld.agg(F.count(F.lit(1)).alias("n_left"))
+        nr = rd.agg(F.count(F.lit(1)).alias("n_right"))
+        parts.append(
+            sz.crossJoin(F.broadcast(nl))
+            .crossJoin(F.broadcast(nr))
+            .select(
+                F.lit(name).alias("edge"),
+                "n_left",
+                "n_right",
+                "est_join_rows",
+                "exact_join_rows",
+                "overestimate",
+                F.round(
+                    F.col("est_join_rows")
+                    / (
+                        F.col("n_left").cast("double")
+                        * F.col("n_right").cast("double")
+                    ),
+                    9,
+                ).alias("est_selectivity"),
+            )
+        )
+    prof = parts[0]
+    for p in parts[1:]:
+        prof = prof.unionByName(p)
+    w = Window.orderBy(F.asc("est_join_rows"), F.asc("edge"))
+    expected = _rows(prof.withColumn("plan_rank", F.row_number().over(w)))
+    got = _rows(join_graph_profile(edges))
+    assert got == expected
+
+
+def test_join_graph_profile_fused_equals_per_edge_sketch_only(spark):
+    """Stats-sized sketch-only mode: per-edge widths differ (next-pow2
+    of the NDV hint), so the fused per-frame cells aggregate carries a
+    per-tag width — the estimates must still match the per-edge
+    cms_join_estimate exactly."""
+    from pyspark.sql.window import Window
+
+    from capex_data_pipeline_spark.extensions.sketches import (
+        cms_join_estimate,
+        join_graph_profile,
+        next_pow2_width,
+    )
+
+    _a, _b, _c, edges = _jgp_edges(spark)
+    ndv = {"a-b": 11.0, "b-c": 7.0, "a-c": 900.0, "c-self": 5.0}
+    parts = []
+    for name, ld, lk, rd, rk in edges:
+        w_e = next_pow2_width(ndv[name], 64, 1 << 20)
+        sz = cms_join_estimate(ld, lk, rd, rk, 3, w_e)
+        nl = ld.agg(F.count(F.lit(1)).alias("n_left"))
+        nr = rd.agg(F.count(F.lit(1)).alias("n_right"))
+        parts.append(
+            sz.crossJoin(F.broadcast(nl))
+            .crossJoin(F.broadcast(nr))
+            .select(
+                F.lit(name).alias("edge"),
+                "n_left",
+                "n_right",
+                F.lit(w_e).cast("long").alias("cms_width"),
+                "est_join_rows",
+                F.round(
+                    F.col("est_join_rows")
+                    / (
+                        F.col("n_left").cast("double")
+                        * F.col("n_right").cast("double")
+                    ),
+                    9,
+                ).alias("est_selectivity"),
+            )
+        )
+    prof = parts[0]
+    for p in parts[1:]:
+        prof = prof.unionByName(p)
+    w = Window.orderBy(F.asc("est_join_rows"), F.asc("edge"))
+    expected = _rows(prof.withColumn("plan_rank", F.row_number().over(w)))
+    got = _rows(join_graph_profile(edges, ndv=ndv, include_exact=False))
+    assert got == expected
+
+
+def test_join_graph_profile_counts_include_null_keys(spark):
+    """n_left/n_right ride the fused aggregates now — they must still
+    count EVERY row (the old ld.agg(count(1)) had no NULL-key
+    filter)."""
+    from capex_data_pipeline_spark.extensions.sketches import (
+        join_graph_profile,
+    )
+
+    a = spark.range(10).select(
+        F.when(F.col("id") % 2 == 0, None).otherwise(F.col("id")).alias("k")
+    )
+    b = spark.range(4).select(F.col("id").alias("k"))
+    row = join_graph_profile(
+        [("a-b", a, F.col("k"), b, F.col("k"))]
+    ).collect()[0]
+    assert row["n_left"] == 10  # 5 NULL keys still counted
+    assert row["n_right"] == 4

@@ -94,26 +94,6 @@ def test_pipeline_consumers_read_the_persisted_frame(spark, raw_sdf, office_sdf)
     assert plan.count("InMemoryTableScan") >= 3  # kept, audit, fail-open sides
 
 
-def test_parse_byte_string_handles_spark_suffixes():
-    """spark.sql.files.maxPartitionBytes is legitimately set in suffixed
-    form ('128m', '64MB', '1g') by externally built sessions; the split
-    estimator must parse those like JavaUtils.byteStringAs instead of
-    crashing every read (round-3 advice, medium)."""
-    from capex_data_pipeline_spark.plans.pipeline import _parse_byte_string
-
-    assert _parse_byte_string("134217728") == 128 * 1024 * 1024
-    assert _parse_byte_string("134217728b") == 128 * 1024 * 1024
-    assert _parse_byte_string("128m") == 128 * 1024 * 1024
-    assert _parse_byte_string("64MB") == 64 * 1024 * 1024
-    assert _parse_byte_string("1g") == 1 << 30
-    assert _parse_byte_string("2k") == 2048
-    assert _parse_byte_string(" 512K ") == 512 * 1024
-    assert _parse_byte_string("1t") == 1 << 40
-    # unparseable values fall back to the 128 MiB default, never raise
-    assert _parse_byte_string("garbage") == 128 * 1024 * 1024
-    assert _parse_byte_string("") == 128 * 1024 * 1024
-
-
 def test_pipeline_result_unpersist_releases_cached_blocks(spark, raw_sdf, office_sdf):
     """Long-lived sessions must be able to release a run's persisted
     frames (tagged lineage, W1 output, fail-open add-back); the result's

@@ -1,4 +1,5 @@
-"""CSV encoding-fallback source (S1) and parquet nanos handling."""
+"""CSV encoding-fallback source (S1), parquet nanos handling and the
+few-file spread (`spread_few_splits`)."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ from capex_data_pipeline_spark.sources.csv import (
     sniff_encoding,
 )
 from capex_data_pipeline_spark.sources.parquet import read_table
+
+TESTDATA = "/root/testdata/sf0.001"
 
 
 def _write(path, data: bytes):
@@ -531,3 +534,94 @@ def test_jsonl_roundtrip_and_corrupt_capture(spark, tmp_path):
     )
     back2 = read_jsonl(spark, out2, "id long, name string, score double, b int")
     assert back2.count() == 3
+
+
+def test_spread_bounds_tiny_frame_fanout(spark):
+    """A tiny file must not fan out to full cluster width (ADVICE
+    r13): the target is bounded by input bytes per task."""
+    from capex_data_pipeline_spark.sources.parquet import (
+        read_table,
+        spread_few_splits,
+    )
+
+    region = read_table(spark, TESTDATA, "region")  # ~1.9 KB file
+    out = spread_few_splits(region)
+    assert out.rdd.getNumPartitions() <= 2
+    # a table big enough still spreads to full local width
+    docs = read_table(spark, "/root/testdata/sf0.1", "documents")
+    spread = spread_few_splits(docs)
+    assert (
+        spread.rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
+
+
+def _rows_per_partition(df) -> list[int]:
+    """Row counts of the non-empty partitions of ``df``."""
+    return [
+        r["count"]
+        for r in df.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    ]
+
+
+def test_spread_counts_files_not_scan_partitions(spark, tmp_path):
+    """A one-row-group parquet file can scan as many size-based
+    partitions, yet every row lands in the one partition that owns the
+    row group: the spread must still fan it out."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from capex_data_pipeline_spark.sources.parquet import spread_few_splits
+
+    dp = spark.sparkContext.defaultParallelism
+    if dp < 2:
+        pytest.skip("spreading needs defaultParallelism >= 2")
+    n = 20_000
+    path = str(tmp_path / "one_row_group.parquet")
+    pq.write_table(
+        pa.table({"id": list(range(n)), "s": [f"row-{i:08d}" for i in range(n)]}),
+        path,
+        row_group_size=n,
+        compression="none",
+    )
+    assert pq.ParquetFile(path).num_row_groups == 1
+    size = (tmp_path / "one_row_group.parquet").stat().st_size
+    conf = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(max(1, size // (dp + 1))))
+    try:
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() >= dp
+        assert _rows_per_partition(df) == [n]
+        spread = _rows_per_partition(spread_few_splits(df))
+        assert len(spread) >= 2 and sum(spread) == n
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_spread_fileless_single_partition(spark):
+    from capex_data_pipeline_spark.sources.parquet import spread_few_splits
+
+    dp = spark.sparkContext.defaultParallelism
+    if dp < 2:
+        pytest.skip("spreading needs defaultParallelism >= 2")
+    out = spread_few_splits(spark.range(1000).coalesce(1))
+    assert out.rdd.getNumPartitions() == dp
+    assert sum(_rows_per_partition(out)) == 1000
+
+
+def test_spread_many_files_unchanged(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from capex_data_pipeline_spark.sources.parquet import spread_few_splits
+
+    dp = spark.sparkContext.defaultParallelism
+    for i in range(dp):
+        pq.write_table(
+            pa.table({"id": list(range(i * 100, (i + 1) * 100))}),
+            str(tmp_path / f"part-{i}.parquet"),
+        )
+    df = spark.read.parquet(str(tmp_path))
+    assert len(df.inputFiles()) >= dp
+    assert spread_few_splits(df) is df

@@ -14,6 +14,7 @@ Two properties pinned here:
 from __future__ import annotations
 
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -728,3 +729,47 @@ def test_scd2_fold_state_side_never_shuffles(
         assert n >= 2, plan  # the current-rows join + the history slice
     finally:
         drop_table(spark, "t_scd2_plan")
+
+
+def _rows(df):
+    return sorted(
+        tuple(r[c] for c in sorted(df.columns)) for r in df.collect()
+    )
+
+
+def test_save_stats_cells_multi_equals_append_loop(spark, tmp_path):
+    """One unioned bucketed write must persist EXACTLY the rows the
+    overwrite + append loop wrote (q228 / q251 nightly job), so every
+    state reader sees identical cells."""
+    from capex_data_pipeline_spark.extensions.state import (
+        save_stats_cells,
+        save_stats_cells_multi,
+    )
+    from capex_data_pipeline_spark.sources.bucketed import drop_table
+
+    a = spark.range(120).select(
+        F.col("id").alias("a_key"), (F.col("id") % 9).alias("a_val")
+    )
+    b = spark.range(40).select((F.col("id") * 2).alias("b_key"))
+    parts = [
+        (a, ["a_key", "a_val"], F.lit("ta")),
+        (b, ["b_key"], F.lit("tb")),
+    ]
+    try:
+        for i, (df, cols, pt) in enumerate(parts):
+            save_stats_cells(
+                df, cols, partition=pt, table="t_opt13_seq", b=4,
+                n_buckets=4, path=str(tmp_path / "seq"),
+                mode="overwrite" if i == 0 else "append",
+            )
+        save_stats_cells_multi(
+            parts, table="t_opt13_multi", b=4, n_buckets=4,
+            path=str(tmp_path / "multi"), mode="overwrite",
+        )
+        seq = _rows(spark.table("t_opt13_seq"))
+        multi = _rows(spark.table("t_opt13_multi"))
+        assert multi == seq and len(multi) > 0
+    finally:
+        drop_table(spark, "t_opt13_seq")
+        drop_table(spark, "t_opt13_multi")
+        shutil.rmtree(tmp_path, ignore_errors=True)

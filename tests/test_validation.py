@@ -111,3 +111,14 @@ def test_full_pipeline_validation_against_reference(spark, reference_mod):
     assert res.amount_accuracy == pytest.approx(54.50, abs=2.0)
     assert res.zone_accuracy == pytest.approx(82.94, abs=2.0)
     assert res.category_accuracy == pytest.approx(92.65, abs=2.0)
+
+
+def test_validation_cache_is_tracked(spark):
+    """operators/validation.py's joined frame must go through the
+    tracked-persist discipline (r13 verdict item 5 hygiene)."""
+    import inspect
+
+    from capex_data_pipeline_spark.operators import validation
+
+    src = inspect.getsource(validation)
+    assert ".cache()" not in src
