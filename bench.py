@@ -63,11 +63,7 @@ def main() -> None:
     from capex_data_pipeline_spark.session import get_spark
     from capex_data_pipeline_spark.sources.parquet import read_table
 
-    spark = get_spark(
-        app_name="capex-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
+    spark = get_spark(app_name="capex-bench", master=f"local[{cpus}]")
 
     # derive an sf label from the directory name (e.g. sf0.1 -> 0.1)
     base = os.path.basename(os.path.normpath(sf_dir))

@@ -514,9 +514,13 @@ def ivfpq_topk(
     # chains are fully independent, so overlapping them fills the
     # cluster during each round's single-aggregate tail (measured:
     # the 4 sequential fits were ~2.3 s of q172's 3.5 s build).
-    # ex.map preserves subspace order; results are unchanged.
+    # ex.map preserves subspace order; results are unchanged. The
+    # threads inherit the caller's job group, description and tags.
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    @inheritable_thread_target(pts.sparkSession)
     def _fit_subspace(s: int) -> "list[list[float]]":
         return _lloyd_fit(
             pts.select(

@@ -564,13 +564,19 @@ def enrich_false_negatives(
         # submission is thread-safe; concurrent materialization of a
         # shared cached partition serializes per-partition in the
         # BlockManager). Sequential submission left the cluster idle
-        # during each job's single-partition tail stages.
+        # during each job's single-partition tail stages. The thread
+        # targets inherit the caller's job group, description and tags,
+        # so their jobs are listed and cancelled with the caller's.
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
 
         from capex_data_pipeline_spark.cache import plan_boundary as _boundary
 
         mode = plan_boundary if isinstance(plan_boundary, str) else None
+        inherit = inheritable_thread_target(false_negatives.sparkSession)
 
+        @inherit
         def _cut(df, label):
             return _boundary(df, mode=mode, eager=True, label=label)
 
@@ -583,7 +589,7 @@ def enrich_false_negatives(
                 # to serialize its (one-per-session) materialization
                 # behind them — _explain_on_pair below rebuilds the
                 # same plan and hits the persisted entry
-                ex.submit(lambda: _explain_pair_staged(raw).count())
+                ex.submit(inherit(lambda: _explain_pair_staged(raw).count()))
             false_negatives = fn_fut.result()
             audit_ordered = au_fut.result()
     # every lookup join below is left to the planner: a checkpoint-cut

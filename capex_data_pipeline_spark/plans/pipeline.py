@@ -6,21 +6,24 @@ Shape of the plan (4 tagging passes instead of 15 materialized filters):
     raw ──[+_row_id, null tags]── pass A (F1-F4) ── P2 ── P1
         ── pass B (F5-F7) ── J1 zone/region (broadcast) ── pass C (F8-F13)
         ── P3 ── P4 ── P5 ── pass D (F14) ── P6 key ── [F15 golden tag]
-        ──► ONE tagged lineage frame, consumed by:
+        ──► ONE tagged lineage frame [cut], consumed by:
               kept (tags null) ── W1 top-5 window ──┐
-              audit (tags non-null, key fully gone) ├─ [J4 fail-open] ─► processed
+              audit (tags non-null, key fully gone) ├─ [J4 fail-open] ─► processed [cut]
               pivot (kept, pre-P3 categories)       │
               amc/sorter/rental extracts            ┘
 
 Every row flows through a single linear plan carrying its exclusion tag
 (first matching rule wins, rules.txt order) — the scan, the regex
 passes and the broadcast join run ONCE regardless of how many outputs
-are consumed. With ``persist_tagged`` (default on) the tagged frame is
-persisted before fan-out, so multi-output actions don't recompute it;
-at cluster scale replace with a staging-table write for the same
-effect. The only shuffles are the W1 window (top-k pushed into the
-shuffle via WindowGroupLimit / the grouped-Arrow exchange in exact-ties
-mode) and the small audit/fail-open key aggregations.
+are consumed. With ``persist_tagged`` (default on) two frames are cut:
+the tagged frame before fan-out, so multi-output actions don't
+recompute it, and the final ``processed`` frame, which most consumers
+read (summaries, validation, the q93 anti-join, sinks), so none of
+them re-runs W1 and the fail-open tail. ``boundary='staging'`` writes
+both as staging tables instead. The only shuffles are the W1 window
+(top-k pushed into the shuffle via WindowGroupLimit / the grouped-Arrow
+exchange in exact-ties mode) and the small audit/fail-open key
+aggregations.
 """
 
 from __future__ import annotations
@@ -71,8 +74,8 @@ class CapexPipelineConfig:
     fail_open: bool = True  # FAIL_OPEN_UNKNOWN defaults true (process_capex.py:10)
     legacy_dates: bool = False  # reproduce the dayfirst misparse when True
     exact_w1_ties: bool = True  # replay pandas' unstable sort in W1
-    persist_tagged: bool = True  # persist the lineage frame before fan-out
-    # how the two fan-out frames (tagged lineage, W1 output) are cut:
+    persist_tagged: bool = True  # cut the lineage and processed frames
+    # how the two fan-out frames (tagged lineage, final processed) are cut:
     # None -> in-memory persist (single-process default); 'staging' ->
     # cache.plan_boundary staging-table write — durable across memory
     # pressure and executor decommissioning, ONE materialization per
@@ -93,8 +96,8 @@ class PipelineResult:
     audit_ordered: DataFrame = None  # audit + dict-insertion order cols
     tagged: DataFrame = None  # the persisted lineage frame (all consumers)
     stage_counts: dict = field(default_factory=dict)
-    # the frames THIS run persisted (tagged, W1 output, fail-open
-    # add-back) — released via unpersist() below
+    # the frames THIS run persisted (tagged, fail-open add-back,
+    # processed) — released via unpersist() below
     persisted_frames: list = field(default_factory=list)
 
     def unpersist(self, blocking: bool = False) -> int:
@@ -294,7 +297,8 @@ def run_pipeline(
     run_persists: list[DataFrame] = []
 
     def _cut(frame: DataFrame, label: str) -> DataFrame:
-        """Materialize a fan-out frame per config.boundary: in-memory
+        """Materialize a fan-out frame (the tagged lineage frame, then
+        the final processed frame) per config.boundary: in-memory
         persist by default, or a staging-table write (durable, read
         back by every consumer — the 100 TB shape, where memory
         eviction or executor loss would otherwise re-run the whole
@@ -375,14 +379,20 @@ def run_pipeline(
 
     # J4: fail-open — re-include raw rows whose key was neither kept nor
     # audited (reinstate_unknown_exclusions, process_capex.py:12-56).
-    # The W1 output feeds two consumers there (key anti-join build side +
-    # the union), so persist it too.
+    # The W1 output feeds two consumers there: the key anti-join inside
+    # the add-back cache, and the union. They are separate cache builds,
+    # so exchange reuse cannot share them and W1 runs twice per run;
+    # cutting W1 as well built processed no faster (sf0.01, 4 cores).
     if config.fail_open:
-        if config.persist_tagged:
-            processed = _cut(processed, "capex-w1")
         processed = _fail_open(
             raw_shape, processed, office, audit, zone_maps, _persists=run_persists
         )
+
+    # the frame every consumer reads (sinks, summaries, validation, the
+    # q93 false-negative anti-join, the registry's capex family): cut it
+    # once here, so none of them re-runs W1 and the fail-open tail
+    if config.persist_tagged:
+        processed = _cut(processed, "capex-processed")
 
     return PipelineResult(
         processed=processed,

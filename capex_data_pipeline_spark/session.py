@@ -12,11 +12,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitions: on a real cluster this should be ~2-3x total cores
-# (AQE coalesces down afterwards). For local[32] test runs, 32 avoids
-# scheduling overhead on tiny data while AQE still splits skewed ones.
-_DEFAULT_LOCAL_SHUFFLE_PARTITIONS = "32"
-
 
 def _default_driver_memory() -> str:
     """A quarter of the host's physical memory (MemTotal on Linux): a
@@ -47,10 +42,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _DEFAULT_LOCAL_SHUFFLE_PARTITIONS),
-        )
         # broadcast joins for dimension tables (office_location, region,
         # nation, ...). 64 MB: generous for dims, still safe per-executor.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -80,4 +71,14 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Shuffle partitions come from the host: one per core the started
+    # context schedules on (N for local[N], total executor cores on a
+    # cluster). A fixed count sized for a bigger box makes every
+    # shuffle, and every cache built above one, that many tasks wide on
+    # a small one; AQE still coalesces small shuffles and splits skewed
+    # ones at runtime. An explicit ``shuffle_partitions`` wins.
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions or spark.sparkContext.defaultParallelism),
+    )
     return spark

@@ -36,6 +36,12 @@ _CP1252_FROM = "".join(chr(b) for b, _ in _CP1252_FIXUP)
 _CP1252_TO = "".join(c for _, c in _CP1252_FIXUP)
 
 
+#: marker file a cp1252 sink drops into its output directory, holding
+#: the charset name. cp1252 bytes can also be valid UTF-8 ('Â\xa0' is
+#: C2 A0), so no prefix sniff can tell them apart; the writer's word can.
+#: Spark's readers skip '_'-prefixed files.
+CHARSET_MARKER = "_CHARSET"
+
 #: driver-side sniff samples at most this many parts of a directory; a
 #: Spark output's parts share one writer charset, so a large cap only
 #: guards against pathological all-ASCII prefixes hiding the encoding
@@ -45,9 +51,11 @@ _SNIFF_MAX_PARTS = 256
 def sniff_encoding(path: str, sniff_bytes: int = _SNIFF_BYTES) -> str:
     """Pick the first encoding in the chain that decodes a file prefix.
 
-    Accepts a single file or a Spark-written output directory. For a
-    directory, a prefix of every data part (up to ``_SNIFF_MAX_PARTS``)
-    is sampled and the chosen encoding must decode all of them — one
+    Accepts a single file or a Spark-written output directory. A
+    directory's :data:`CHARSET_MARKER` names the charset outright and is
+    trusted before any sniffing. Otherwise a prefix of every data part
+    (up to ``_SNIFF_MAX_PARTS``) is sampled and the chosen encoding must
+    decode all of them — one
     writer produced the parts with one charset, but any individual part
     may be ASCII-only, so sniffing just the first file could pick an
     encoding that breaks on a later part.
@@ -61,6 +69,13 @@ def sniff_encoding(path: str, sniff_bytes: int = _SNIFF_BYTES) -> str:
 
     files = [path]
     if os.path.isdir(path):
+        try:
+            with open(os.path.join(path, CHARSET_MARKER)) as fh:
+                marked = fh.read().strip()
+            if marked in ENCODING_CHAIN:
+                return marked
+        except OSError:
+            pass
         files = sorted(
             set(
                 glob.glob(os.path.join(path, "part-*"))

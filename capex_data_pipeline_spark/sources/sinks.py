@@ -42,7 +42,10 @@ def write_csv_cp1252(
     charsets (no cp1252), so this mirrors the reader's trick: cp1252
     differs from latin1 only in 0x80-0x9F — translate those chars to
     the latin1 code points whose BYTES equal the cp1252 encoding, then
-    write iso-8859-1. One JVM-side projection, fully distributed.
+    write iso-8859-1. One JVM-side projection, fully distributed. The
+    output directory gets a ``_CHARSET`` marker naming cp1252, which
+    :func:`~capex_data_pipeline_spark.sources.csv.sniff_encoding` trusts
+    over its byte sniff (cp1252 text can also be valid UTF-8).
 
     ``strict`` (default) verifies no value carries a character outside
     the cp1252-ENCODABLE set before writing, and raises — matching
@@ -55,7 +58,11 @@ def write_csv_cp1252(
     goes through the same charset). The value check is one extra pass
     over the string columns; pass ``strict=False`` to skip both checks
     at scale when the data is known-clean."""
-    from capex_data_pipeline_spark.sources.csv import _CP1252_FROM, _CP1252_TO
+    from capex_data_pipeline_spark.sources.csv import (
+        _CP1252_FROM,
+        _CP1252_TO,
+        CHARSET_MARKER,
+    )
 
     if strict:
         for name in df.columns:
@@ -100,6 +107,16 @@ def write_csv_cp1252(
     name_fix = str.maketrans(_CP1252_TO, _CP1252_FROM)
     fixed = fixed.toDF(*[n.translate(name_fix) for n in fixed.columns])
     write_csv(fixed, path, mode=mode, header=header, encoding="iso-8859-1")
+    if mode != "ignore":  # 'ignore' may have kept someone else's data
+        # through the path's Hadoop FileSystem: one code path for local
+        # disk, HDFS and object stores alike
+        sc = df.sparkSession.sparkContext
+        marker = sc._jvm.org.apache.hadoop.fs.Path(path, CHARSET_MARKER)
+        out = marker.getFileSystem(sc._jsc.hadoopConfiguration()).create(marker, True)
+        try:
+            out.write(bytearray(b"cp1252"))
+        finally:
+            out.close()
 
 
 def write_parquet(

@@ -29,11 +29,7 @@ def main() -> None:
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(
-        app_name="capex-capture-plans",
-        master=f"local[{cpus}]",
-        shuffle_partitions=cpus,
-    )
+    spark = get_spark(app_name="capex-capture-plans", master=f"local[{cpus}]")
     names = [
         n for n in QUERIES if any(n.startswith(p) for p in prefixes)
     ]

@@ -76,11 +76,7 @@ def main() -> None:
     from capex_data_pipeline_spark.sources.parquet import read_table
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    spark = get_spark(
-        app_name="synth-sf1",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
+    spark = get_spark(app_name="synth-sf1", master=f"local[{cpus}]")
 
     def w(df, name, parts=8):
         df.repartition(parts).write.mode("overwrite").parquet(

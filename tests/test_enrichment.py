@@ -177,6 +177,35 @@ def test_shared_reference_explain_equals_two_pass(spark, raw_sdf, office_sdf):
     assert rows(True) == rows(False)
 
 
+def test_boundary_threads_inherit_the_callers_job_group(spark, raw_sdf, office_sdf):
+    """The plan-boundary thread pool carries the caller's job group into
+    its threads: every job started during the call is listed under the
+    group, so the caller can track or cancel the whole operator."""
+    from capex_data_pipeline_spark.operators.validation import with_robust_key
+
+    res = run_pipeline(raw_sdf, office_sdf)
+    golden = raw_sdf.drop("VendorName")
+    p_keys = with_robust_key(res.processed).select("CompositeKey").distinct()
+    g_keys = with_robust_key(golden).select("CompositeKey").distinct()
+    fn = g_keys.join(p_keys, "CompositeKey", "left_anti")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "enrich-job-group-test"
+    ungrouped_before = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup(group, "enrich_false_negatives under one group")
+    try:
+        enrich_false_negatives(
+            fn, res.audit_ordered, raw=raw_sdf, reference=golden,
+            shared_reference=True, plan_boundary=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup(group)  # the boundary cuts ran jobs
+    assert not set(tracker.getJobIdsForGroup()) - ungrouped_before
+
+
 @pytest.mark.parametrize("shared", [True, False])
 def test_enrichment_join_strategy_identical(
     spark, raw_sdf, office_sdf, same_rows_any_join, shared
@@ -205,7 +234,7 @@ def test_enrichment_join_strategy_identical(
 def test_pipeline_staging_boundary_shares_one_materialization(
     spark, raw_sdf, office_sdf, tmp_path
 ):
-    """config.boundary='staging' writes the tagged + W1 frames ONCE as
+    """config.boundary='staging' writes the tagged + processed frames ONCE as
     staging parquet; consumers read results identical to the in-memory
     persist run, and clear_staging removes the paths."""
     import os
@@ -233,6 +262,6 @@ def test_pipeline_staging_boundary_shares_one_materialization(
     )
     names = os.listdir(tmp_path / "stage")
     assert any(n.startswith("capex-tagged-") for n in names)
-    assert any(n.startswith("capex-w1-") for n in names)
+    assert any(n.startswith("capex-processed-") for n in names)
     assert clear_staging() >= 2
     assert os.listdir(tmp_path / "stage") == []

@@ -96,7 +96,7 @@ def test_pipeline_consumers_read_the_persisted_frame(spark, raw_sdf, office_sdf)
 
 def test_pipeline_result_unpersist_releases_cached_blocks(spark, raw_sdf, office_sdf):
     """Long-lived sessions must be able to release a run's persisted
-    frames (tagged lineage, W1 output, fail-open add-back); the result's
+    frames (tagged lineage, fail-open add-back, processed); the result's
     DataFrames stay usable afterwards (plans recompute)."""
     from capex_data_pipeline_spark.plans.pipeline import run_pipeline
 
@@ -113,6 +113,22 @@ def test_pipeline_result_unpersist_releases_cached_blocks(spark, raw_sdf, office
     assert not res.persisted_frames  # handle is drained; idempotent
     assert res.unpersist() == 0
     assert res.processed.count() > 0  # frames still usable (recompute)
+
+
+def test_pipeline_processed_is_the_persisted_frame(spark, raw_sdf, office_sdf):
+    """Every consumer of ``res.processed`` reads one cached frame instead
+    of re-running W1 and the fail-open tail: processed is one of the
+    run's three persists (tagged, add-back, processed) and
+    ``res.unpersist()`` releases it."""
+    from capex_data_pipeline_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(raw_sdf, office_sdf, golden=None)
+    assert len(res.persisted_frames) == 3
+    assert any(df is res.processed for df in res.persisted_frames)
+    assert res.processed.storageLevel.useMemory
+    res.processed.count()
+    res.unpersist()
+    assert not res.processed.storageLevel.useMemory
 
 
 def test_release_persisted_clears_tracked_frames(spark):

@@ -42,6 +42,21 @@ def test_cp1252_values_roundtrip(spark, tmp_path):
     assert "café" in vals
 
 
+def test_cp1252_sink_marker_beats_utf8_sniff(spark, tmp_path):
+    """'Â\xa0' encodes to cp1252 bytes C2 A0, which are also valid UTF-8
+    (for '\xa0'), so a byte sniff alone reads the sink's output back as
+    UTF-8. The sink's _CHARSET marker names cp1252, and the reader
+    trusts it: the round trip is value-exact."""
+    from capex_data_pipeline_spark.sources.sinks import write_csv_cp1252
+
+    out = str(tmp_path / "marked")
+    df = spark.createDataFrame([(0, "Â\xa0")], "id long, txt string")
+    write_csv_cp1252(df, out)
+    assert sniff_encoding(out) == "cp1252"
+    back = read_csv_with_fallback(spark, out, schema=df.schema)
+    assert [tuple(r) for r in back.collect()] == [(0, "Â\xa0")]
+
+
 def test_utf8_passthrough(spark, tmp_path):
     p = _write(tmp_path / "d.csv", "col\n–dash\n".encode("utf-8"))
     schema = T.StructType([T.StructField("col", T.StringType())])
