@@ -1,20 +1,24 @@
-"""Tracked persistence — a release handle for every ``persist()`` the
-engine takes out.
+"""Tracked persistence — a release handle for every block the engine
+takes out, whether by ``persist()`` or by a ``localCheckpoint`` cut.
 
 Several operators persist an intermediate frame that is consumed more
 than once inside the plan they return (dedup signature frames, the
-pipeline's tagged lineage frame, the fail-open add-back frame, the q93
-false-negative key set).  The persist is a structural win — without it
-the producing subplan runs once per consumer — but Spark never evicts
-MEMORY_AND_DISK blocks on its own, so a long-lived session that calls
-these operators repeatedly would accumulate cached blocks without
-bound.
+fail-open add-back frame, the q93 false-negative key set).  The persist
+is a structural win — without it the producing subplan runs once per
+consumer — but Spark never evicts MEMORY_AND_DISK blocks on its own, so
+a long-lived session that calls these operators repeatedly would
+accumulate cached blocks without bound. The capex pipeline's two
+fan-out frames (tagged lineage, final processed) are cut with
+:func:`plan_boundary` instead: a local checkpoint holds executor blocks
+the same way, and is tracked the same way.
 
 Every engine-internal ``persist`` therefore goes through
-:func:`persisted`, which registers the frame here.  Callers can release
+:func:`persisted`, and the pipeline's checkpoint cuts through
+:func:`track`; both register the frame here.  Callers can release
 everything with :func:`release_persisted` (e.g. between batches of a
 long-lived service), and :class:`~capex_data_pipeline_spark.plans.pipeline.PipelineResult`
-exposes a per-run ``unpersist()`` over just its own frames.
+exposes a per-run ``unpersist()`` over just its own frames. All three
+release paths go through :func:`release_frame`.
 """
 
 from __future__ import annotations
@@ -38,14 +42,40 @@ _TRACKED: list[DataFrame] = []
 _RELEASE_HOOKS: list[Callable[[], "int | None"]] = []
 
 
+def track(df: DataFrame) -> DataFrame:
+    """Register a frame that holds blocks (a persist or a checkpoint
+    cut) for later release; returns it."""
+    with _LOCK:
+        _TRACKED.append(df)
+    return df
+
+
 def persisted(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 ) -> DataFrame:
     """``df.persist(level)`` + register the frame for later release."""
-    out = df.persist(level)
-    with _LOCK:
-        _TRACKED.append(out)
-    return out
+    return track(df.persist(level))
+
+
+def checkpoint_rdd(df: DataFrame):
+    """The JVM RDD behind a checkpoint cut (a frame whose analyzed plan
+    is a ``LogicalRDD`` leaf, as ``localCheckpoint`` returns), else
+    None."""
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.rdd() if plan.nodeName() == "LogicalRDD" else None
+
+
+def release_frame(df: DataFrame, blocking: bool = False) -> None:
+    """Drop the blocks behind one tracked frame. A persisted frame is
+    unpersisted: readers of it recompute. A checkpoint cut's RDD is
+    unpersisted: its lineage is gone, so a later read of the cut raises
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing —
+    release a cut only when nothing will read it again."""
+    rdd = checkpoint_rdd(df)
+    if rdd is None:
+        df.unpersist(blocking)
+    else:
+        rdd.unpersist(blocking)
 
 
 def untrack(df: DataFrame) -> None:
@@ -73,13 +103,15 @@ def register_release_hook(hook: Callable[[], "int | None"]) -> None:
 
 
 def release_persisted(blocking: bool = False) -> int:
-    """Unpersist every tracked frame; returns how many were released.
+    """:func:`release_frame` every tracked frame; returns how many
+    were released.
 
     Safe to call at any time: frames whose blocks were already evicted
-    or whose session is gone are skipped.  Note this releases *cached
-    blocks*, not results — a consumer holding one of these DataFrames
-    can still use it (the subplan simply recomputes). Registered
-    release hooks (memo invalidation) run first.
+    or whose session is gone are skipped.  A consumer holding a released
+    *persisted* frame can still use it (the subplan recomputes); a
+    released *checkpoint cut* (the pipeline's tagged and processed
+    frames) cannot be read again. Registered release hooks (memo
+    invalidation) run first.
     """
     released = 0
     with _LOCK:
@@ -97,7 +129,7 @@ def release_persisted(blocking: bool = False) -> int:
                 break
             df = _TRACKED.pop()
         try:
-            df.unpersist(blocking)
+            release_frame(df, blocking)
             released += 1
         except Exception:
             pass
@@ -270,7 +302,7 @@ def scoped_persists(blocking: bool = False):
         for df in new:
             untrack(df)
             try:
-                df.unpersist(blocking)
+                release_frame(df, blocking)
                 n += 1
             except Exception:
                 pass

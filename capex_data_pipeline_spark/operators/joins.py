@@ -19,8 +19,9 @@ from capex_data_pipeline_spark.operators.rules import sql_str
 @dataclass(frozen=True)
 class ZoneMaps:
     """The office dimension, digested for the J1 join: a broadcastable
-    branch-code frame plus the collected region-code dict. Build it ONCE
-    per office frame (``build_zone_maps``) and reuse — the pipeline
+    branch-code frame (a ``VALUES`` relation, executed as a
+    ``LocalTableScan``) plus the collected region-code dict. Build it
+    ONCE per office frame (``build_zone_maps``) and reuse — the pipeline
     attaches zones twice (main plan + fail-open re-join), and each build
     runs a small driver-side collect job."""
 
@@ -32,8 +33,12 @@ def build_zone_maps(office: DataFrame) -> ZoneMaps:
     """ONE collect of the (small, by construction) office dimension; both
     reference dicts (process_capex.py:234-239, 259-264) are then literal
     Python dicts — last-occurrence values, first-occurrence insertion
-    order — and the branch map re-enters the plan as a LocalRelation, so
-    the join's build side needs no shuffle, no aggregation, no job."""
+    order — and the branch map re-enters the plan as a ``VALUES``
+    LocalRelation of string literals, so the join's build side needs no
+    shuffle, no aggregation and no Python worker: the broadcast reads a
+    ``LocalTableScan`` on the driver. (A frame made from a Python list
+    would not do: classic PySpark parallelizes the list into a Python
+    RDD, scanned by Python workers in every job that reads it.)"""
     rows = office.select("office", "zone", "region", "regioncode").collect()
 
     branch: dict[str, tuple] = {}  # last occurrence wins (dict assignment)
@@ -50,10 +55,20 @@ def build_zone_maps(office: DataFrame) -> ZoneMaps:
         rc_pos.setdefault(code, i)
         rc_val[code] = (r["zone"], r["region"])
 
-    spark = office.sparkSession
-    by_branch = spark.createDataFrame(
-        [(k, z, rg) for k, (z, rg) in branch.items()],
-        schema="_dim_office string, _zone_b string, _region_b string",
+    def lit(v) -> str:
+        return "NULL" if v is None else sql_str(str(v))
+
+    # an empty map is one filtered-out null row: VALUES needs a row, and
+    # the CASTs keep every column a string
+    rows_sql = [
+        f"({lit(k)}, {lit(z)}, {lit(rg)})" for k, (z, rg) in branch.items()
+    ] or ["(NULL, NULL, NULL)"]
+    by_branch = office.sparkSession.sql(
+        "SELECT CAST(_dim_office AS STRING) AS _dim_office,"
+        " CAST(_zone_b AS STRING) AS _zone_b,"
+        " CAST(_region_b AS STRING) AS _region_b"
+        f" FROM VALUES {', '.join(rows_sql)} AS t(_dim_office, _zone_b, _region_b)"
+        + ("" if branch else " WHERE false")
     )
     return ZoneMaps(
         by_branch=by_branch,

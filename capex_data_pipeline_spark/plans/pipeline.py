@@ -15,15 +15,18 @@ Shape of the plan (4 tagging passes instead of 15 materialized filters):
 Every row flows through a single linear plan carrying its exclusion tag
 (first matching rule wins, rules.txt order) — the scan, the regex
 passes and the broadcast join run ONCE regardless of how many outputs
-are consumed. With ``persist_tagged`` (default on) two frames are cut:
-the tagged frame before fan-out, so multi-output actions don't
-recompute it, and the final ``processed`` frame, which most consumers
-read (summaries, validation, the q93 anti-join, sinks), so none of
-them re-runs W1 and the fail-open tail. ``boundary='staging'`` writes
-both as staging tables instead. The only shuffles are the W1 window
-(top-k pushed into the shuffle via WindowGroupLimit / the grouped-Arrow
-exchange in exact-ties mode) and the small audit/fail-open key
-aggregations.
+are consumed. Two frames are cut with ``cache.plan_boundary``: the
+tagged frame before fan-out, so multi-output actions don't recompute
+it, and the final ``processed`` frame, which most consumers read
+(summaries, validation, the q93 anti-join, sinks), so none of them
+re-runs W1 and the fail-open tail. A cut is a plan boundary, not a
+persist: by default a ``localCheckpoint``, so every consumer analyzes
+and plans a one-node ``LogicalRDD`` leaf instead of the 19-stage rule
+plan; ``boundary='staging'`` (or ``$SPARK_GRAFT_BOUNDARY=staging``)
+writes both as staging tables instead. The only shuffles are the W1
+window (top-k pushed into the shuffle via WindowGroupLimit / the
+grouped-Arrow exchange in exact-ties mode) and the small
+audit/fail-open key aggregations.
 """
 
 from __future__ import annotations
@@ -33,7 +36,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from capex_data_pipeline_spark.cache import persisted
+from capex_data_pipeline_spark.cache import (
+    checkpoint_rdd,
+    persisted,
+    plan_boundary,
+    release_frame,
+    track,
+    untrack,
+)
 from capex_data_pipeline_spark.functions.keys import robust_key, strict_composite_key
 from capex_data_pipeline_spark.operators.audit import AUDIT_COLUMNS, build_audit
 from capex_data_pipeline_spark.operators.joins import add_zone_region, build_zone_maps
@@ -74,12 +84,12 @@ class CapexPipelineConfig:
     fail_open: bool = True  # FAIL_OPEN_UNKNOWN defaults true (process_capex.py:10)
     legacy_dates: bool = False  # reproduce the dayfirst misparse when True
     exact_w1_ties: bool = True  # replay pandas' unstable sort in W1
-    persist_tagged: bool = True  # cut the lineage and processed frames
-    # how the two fan-out frames (tagged lineage, final processed) are cut:
-    # None -> in-memory persist (single-process default); 'staging' ->
-    # cache.plan_boundary staging-table write — durable across memory
-    # pressure and executor decommissioning, ONE materialization per
-    # session that every family consumer (q90/q91/q93/q27) reads back
+    # how the two fan-out frames (tagged lineage, final processed) are cut
+    # (cache.plan_boundary's mode): None -> $SPARK_GRAFT_BOUNDARY, default
+    # 'local' (localCheckpoint); 'staging' -> staging-table write —
+    # durable across memory pressure and executor decommissioning, ONE
+    # materialization per session that every family consumer
+    # (q90/q91/q93/q27) reads back
     boundary: str | None = None
     staging_dir: str | None = None  # None -> $SPARK_GRAFT_STAGING_DIR
 
@@ -94,30 +104,31 @@ class PipelineResult:
     audit: DataFrame
     cleaned: DataFrame = None  # post-rule, pre-window frame (for tests)
     audit_ordered: DataFrame = None  # audit + dict-insertion order cols
-    tagged: DataFrame = None  # the persisted lineage frame (all consumers)
+    tagged: DataFrame = None  # the cut lineage frame (all consumers)
     stage_counts: dict = field(default_factory=dict)
-    # the frames THIS run persisted (tagged, fail-open add-back,
-    # processed) — released via unpersist() below
+    # the frames THIS run holds blocks for (the tagged and processed
+    # checkpoint cuts, the fail-open add-back persist) — released via
+    # unpersist() below
     persisted_frames: list = field(default_factory=list)
 
     def unpersist(self, blocking: bool = False) -> int:
-        """Release the cached blocks this pipeline run took out.
+        """Release the blocks this pipeline run took out.
 
-        Persists here are a structural win while the result's frames are
-        being consumed, but Spark never evicts MEMORY_AND_DISK blocks on
-        its own — a long-lived session running many pipelines must
-        release each run when done with it (or call
+        The cuts and the add-back persist are a structural win while
+        the result's frames are being consumed, but Spark never evicts
+        their blocks on its own — a long-lived session running many
+        pipelines must release each run when done with it (or call
         ``capex_data_pipeline_spark.cache.release_persisted()`` to drop
-        everything). The result's DataFrames remain usable afterwards;
-        their subplans simply recompute."""
-        from capex_data_pipeline_spark.cache import untrack
-
+        everything). Call it after the last read: with the default
+        ``'local'`` boundary the result's frames (every one reads a
+        checkpoint cut) cannot be read afterwards — Spark raises
+        ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` rather than recompute."""
         released = 0
         while self.persisted_frames:
             df = self.persisted_frames.pop()
             untrack(df)  # no lingering strong ref / double release
             try:
-                df.unpersist(blocking)
+                release_frame(df, blocking)
                 released += 1
             except Exception:
                 pass
@@ -138,7 +149,7 @@ def build_stage_report(tagged: DataFrame) -> DataFrame:
     the reference's per-stage prints ('Removed N ... Remaining: M rows',
     process_capex.py:294-380) and its final report (:1171-1177).
 
-    ONE hash aggregation over the lineage tags (the same persisted frame
+    ONE hash aggregation over the lineage tags (the same cut frame
     every other consumer reads — no extra scan of the input), then a
     window over the handful of rule rows; the kept bucket only feeds the
     total. Returns (rule_order, rule_label, removed, remaining) ordered
@@ -208,7 +219,14 @@ def run_pipeline(
     golden: DataFrame | None = None,
     config: CapexPipelineConfig = CapexPipelineConfig(),
 ) -> PipelineResult:
-    """Build the full lazy plan; nothing executes until an action runs."""
+    """Build the pipeline's plan and cut its two fan-out frames.
+
+    The cuts run jobs here: each ``localCheckpoint`` runs its frame's
+    broadcast and shuffle stages (AQE plans a frame by running them)
+    and then the frame itself — the scan, the rule passes and the zone
+    join for the tagged frame, W1 and the fail-open tail for the
+    processed frame. Every output is then a cheap plan over the two
+    cuts, and nothing else runs until an action."""
     raw_with_id = _ingest(raw)
     df = init_tags(raw_with_id)
 
@@ -297,27 +315,25 @@ def run_pipeline(
     run_persists: list[DataFrame] = []
 
     def _cut(frame: DataFrame, label: str) -> DataFrame:
-        """Materialize a fan-out frame (the tagged lineage frame, then
-        the final processed frame) per config.boundary: in-memory
-        persist by default, or a staging-table write (durable, read
-        back by every consumer — the 100 TB shape, where memory
-        eviction or executor loss would otherwise re-run the whole
-        rule DAG per consumer)."""
-        if config.boundary:
-            from capex_data_pipeline_spark.cache import plan_boundary
-
-            return plan_boundary(
-                frame,
-                mode=config.boundary,
-                label=label,
-                staging_dir=config.staging_dir,
-            )
-        frame = persisted(frame)
-        run_persists.append(frame)
+        """Cut a fan-out frame (the tagged lineage frame, then the final
+        processed frame) per config.boundary: a local checkpoint by
+        default, or a staging-table write (durable, read back by every
+        consumer — the 100 TB shape, where executor loss would
+        otherwise lose the checkpoint blocks). Either way consumers
+        read a leaf, not the rule plan. A checkpoint holds executor
+        blocks until released, so it joins this run's frames."""
+        frame = plan_boundary(
+            frame,
+            mode=config.boundary,
+            eager=True,
+            label=label,
+            staging_dir=config.staging_dir,
+        )
+        if checkpoint_rdd(frame) is not None:
+            run_persists.append(track(frame))
         return frame
 
-    if config.persist_tagged:
-        df = _cut(df, "capex-tagged")
+    df = _cut(df, "capex-tagged")
 
     _internal = ("_cat_pre_p3", "_remarks_pre_p5", "_orig_category")
     kept = df.filter(F.col("_excl_order").isNull()).drop(*TAG_COLUMNS, *_internal)
@@ -380,9 +396,10 @@ def run_pipeline(
     # J4: fail-open — re-include raw rows whose key was neither kept nor
     # audited (reinstate_unknown_exclusions, process_capex.py:12-56).
     # The W1 output feeds two consumers there: the key anti-join inside
-    # the add-back cache, and the union. They are separate cache builds,
-    # so exchange reuse cannot share them and W1 runs twice per run;
-    # cutting W1 as well built processed no faster (sf0.01, 4 cores).
+    # the add-back persist, and the union. The persist is built by its
+    # own plan, so exchange reuse cannot share W1 with the union, and W1
+    # runs twice while the processed cut is built; cutting W1 as well
+    # built processed no faster (sf0.01, 4 cores, with persist cuts).
     if config.fail_open:
         processed = _fail_open(
             raw_shape, processed, office, audit, zone_maps, _persists=run_persists
@@ -391,8 +408,7 @@ def run_pipeline(
     # the frame every consumer reads (sinks, summaries, validation, the
     # q93 false-negative anti-join, the registry's capex family): cut it
     # once here, so none of them re-runs W1 and the fail-open tail
-    if config.persist_tagged:
-        processed = _cut(processed, "capex-processed")
+    processed = _cut(processed, "capex-processed")
 
     return PipelineResult(
         processed=processed,

@@ -455,7 +455,7 @@ _PIPELINE_CACHE: dict = {}
 
 
 def clear_pipeline_cache() -> int:
-    """Release the memoized pipeline results (and their persisted
+    """Release the memoized pipeline results (and their cut and persisted
     frames). For long-lived sessions that sweep the registry more than
     once; the next query simply rebuilds. Returns frames released."""
     released = 0
@@ -466,7 +466,7 @@ def clear_pipeline_cache() -> int:
 
 
 # a global cache.release_persisted() must not leave this memo serving
-# results whose persisted frames it just dropped — invalidate first
+# results whose frames it just released — invalidate first
 from capex_data_pipeline_spark.cache import register_release_hook  # noqa: E402
 
 register_release_hook(clear_pipeline_cache)
@@ -480,8 +480,10 @@ def _synth_pipeline(spark, sf_dir: str, **cfg_kwargs):
     registry would otherwise pay it four times. The result is pure
     (deterministic DataFrames for a given session + sf_dir + config), so
     memoize per (application, sf_dir, config) — this also re-uses ONE
-    persisted tagged frame across the four queries instead of four
-    separate cache entries."""
+    pair of cuts (tagged, processed) across the four queries instead of
+    four. The cuts follow ``$SPARK_GRAFT_BOUNDARY`` (see
+    ``cache.plan_boundary``): ``staging`` writes them once as staging
+    tables that every family member reads back."""
     from capex_data_pipeline_spark.plans.pipeline import (
         CapexPipelineConfig,
         run_pipeline,
@@ -490,17 +492,6 @@ def _synth_pipeline(spark, sf_dir: str, **cfg_kwargs):
         synthesize_capex_raw,
         synthesize_office,
     )
-
-    # opt-in durable sharing: with SPARK_GRAFT_PIPELINE_BOUNDARY=staging
-    # the two fan-out frames are written ONCE as staging tables (see
-    # CapexPipelineConfig.boundary) and every family member reads them
-    # back — survives memory pressure / executor loss, where the default
-    # in-memory persist would silently re-run the rule DAG per consumer
-    import os as _os
-
-    env_boundary = _os.environ.get("SPARK_GRAFT_PIPELINE_BOUNDARY") or None
-    if env_boundary and "boundary" not in cfg_kwargs:
-        cfg_kwargs["boundary"] = env_boundary
 
     key = (
         spark.sparkContext.applicationId,

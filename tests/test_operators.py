@@ -191,6 +191,87 @@ def test_zone_fallback_sees_overlapping_region_codes(spark):
         assert got[f"X{i}"] == want, (rem, got[f"X{i}"], want)
 
 
+def _zones_by_dict(office_rows, branch_rows):
+    """The reference's J1 branch lookup (process_capex.py:234-239): a
+    dict of office -> (zone, region), last occurrence wins; unmatched
+    branches fall to 'Unknown' (no region codes in these fixtures)."""
+    branch = {o: (z, r) for o, z, r, _ in office_rows if o is not None}
+    return {b: branch.get(b, ("Unknown", "Unknown")) for b, _ in branch_rows}
+
+
+def _zones(spark, office_rows, branch_rows):
+    from capex_data_pipeline_spark.operators.joins import add_zone_region
+
+    office = spark.createDataFrame(
+        office_rows, "office string, zone string, region string, regioncode string"
+    )
+    df = spark.createDataFrame(branch_rows, "BranchCode string, UserRemarks string")
+    return {
+        r["BranchCode"]: (r["Zone"], r["Region"])
+        for r in add_zone_region(df, office).collect()
+    }
+
+
+def test_zone_branch_map_is_a_local_table_scan(spark, office_sdf):
+    """The branch map is a LocalRelation: its broadcast reads a
+    LocalTableScan on the driver, never a parallelized Python RDD
+    (ExistingRDD), whose scan starts Python workers in every job; an
+    empty map too."""
+    from capex_data_pipeline_spark.operators.joins import build_zone_maps
+
+    no_codes = office_sdf.withColumn("office", F.lit(None).cast("string"))
+    for office in (office_sdf, no_codes):
+        plan = build_zone_maps(office).by_branch._jdf.queryExecution()
+        plan = plan.executedPlan().toString()
+        assert "LocalTableScan" in plan
+        assert "ExistingRDD" not in plan
+    maps = build_zone_maps(office_sdf)
+    want = {
+        r["office"]: (r["zone"], r["region"])
+        for r in office_sdf.collect()
+        if r["office"] is not None
+    }
+    got = {r["_dim_office"]: (r["_zone_b"], r["_region_b"])
+           for r in maps.by_branch.collect()}
+    assert got == want
+
+
+def test_zone_branch_map_without_office_codes_is_empty(spark):
+    """An office frame with no non-null office code gives a zero-row,
+    string-typed branch map; every row falls back (here to 'Unknown')."""
+    from capex_data_pipeline_spark.operators.joins import build_zone_maps
+
+    office_rows = [(None, "North", "Delhi NCR", None), (None, "West", "Goa", None)]
+    office = spark.createDataFrame(
+        office_rows, "office string, zone string, region string, regioncode string"
+    )
+    maps = build_zone_maps(office)
+    assert maps.by_branch.count() == 0
+    assert all(t == "string" for _, t in maps.by_branch.dtypes)
+    branch_rows = [("A1", "x"), (None, None)]
+    assert _zones(spark, office_rows, branch_rows) == _zones_by_dict(
+        office_rows, branch_rows
+    )
+
+
+def test_zone_branch_map_quotes_and_backslashes(spark):
+    """Codes and zone names with quotes and backslashes round-trip
+    through the branch map's SQL literals; the last occurrence of a
+    repeated code wins, as in the reference's dict."""
+    office_rows = [
+        ("B'1", "Zo'ne", "Re\\gion", None),
+        ("B\\2", "Z\\one'", "R'", None),
+        ("B'1", "Later'", "Wins\\", None),
+        ("B3", None, "NoZone", None),
+    ]
+    branch_rows = [("B'1", None), ("B\\2", None), ("B3", None), ("B4", None)]
+    got = _zones(spark, office_rows, branch_rows)
+    want = _zones_by_dict(office_rows, branch_rows)
+    # a null zone on a matched branch falls through to 'Unknown'
+    want["B3"] = ("Unknown", "NoZone")
+    assert got == want
+
+
 def test_salted_join_matches_plain_join(spark):
     """Skewed inner/left joins through salted_join must produce exactly
     the plain join's multiset of rows — salting only changes HOW rows

@@ -16,6 +16,18 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _stored_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs that hold blocks in the session's storage."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _cut_ids(res) -> list[int]:
+    """RDD ids of a pipeline run's two checkpoint cuts."""
+    from capex_data_pipeline_spark.cache import checkpoint_rdd
+
+    return [checkpoint_rdd(df).id() for df in (res.tagged, res.processed)]
+
+
 @pytest.fixture(scope="module")
 def queries():
     from capex_data_pipeline_spark.registry import QUERIES
@@ -82,53 +94,75 @@ def test_corpus_prep_operators_are_narrow(spark):
 
 def test_pipeline_consumers_read_the_persisted_frame(spark, raw_sdf, office_sdf):
     """The tagged-lineage design's core property: the fan-out consumers
-    (kept rows, audit keys, fail-open raw reconstruction) all read the
-    persisted tagged frame — InMemoryTableScan nodes — instead of
-    re-deriving from the input, so the scan + regex + join work runs
-    once however many outputs are consumed. (A plan-string node COUNT
-    can't prove single-scan: cached nodes reprint their lineage.)"""
+    (kept rows, audit keys, pivot, extracts) all read the cut tagged
+    frame — LogicalRDD leaves — instead of re-deriving from the input,
+    so the scan + regex + join work runs once however many outputs are
+    consumed. A re-derived consumer would carry the J1 zone join, whose
+    build side is the only place ``_dim_office`` appears."""
     from capex_data_pipeline_spark.plans.pipeline import run_pipeline
 
     res = run_pipeline(raw_sdf, office_sdf, golden=None)
-    plan = res.processed._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 3  # kept, audit, fail-open sides
+    for df in (res.audit_ordered, res.pivot, res.amc):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" in plan
+        assert "_dim_office" not in plan
+    audit_plan = res.audit_ordered._jdf.queryExecution().optimizedPlan().toString()
+    assert audit_plan.count("LogicalRDD") >= 2  # excluded + kept sides
+    res.unpersist()
+
+
+def test_pipeline_cuts_are_checkpoint_leaves(spark, raw_sdf, office_sdf):
+    """The two fan-out frames are plan boundaries, not persists: each
+    analyzes to a one-node LogicalRDD plan, so every consumer plans a
+    leaf instead of the 19-stage rule plan under an InMemoryRelation."""
+    from capex_data_pipeline_spark.plans.pipeline import run_pipeline
+
+    res = run_pipeline(raw_sdf, office_sdf, golden=None)
+    for df in (res.tagged, res.processed):
+        plan = df._jdf.queryExecution().analyzed()
+        assert plan.nodeName() == "LogicalRDD"
+        assert plan.children().size() == 0
+        assert not df.storageLevel.useMemory  # no persist under the cut
+    res.unpersist()
 
 
 def test_pipeline_result_unpersist_releases_cached_blocks(spark, raw_sdf, office_sdf):
-    """Long-lived sessions must be able to release a run's persisted
-    frames (tagged lineage, fail-open add-back, processed); the result's
-    DataFrames stay usable afterwards (plans recompute)."""
+    """Long-lived sessions must be able to release a run's blocks (the
+    tagged and processed checkpoint cuts, the fail-open add-back
+    persist): every RDD block the run stored is gone afterwards, and a
+    released cut cannot be read again (no recompute)."""
     from capex_data_pipeline_spark.plans.pipeline import run_pipeline
 
+    before = _stored_rdd_ids(spark)
     res = run_pipeline(raw_sdf, office_sdf, golden=None)
-    res.processed.count()  # materialize the caches
-    assert res.persisted_frames
-    cached_before = [
-        df for df in res.persisted_frames if df.storageLevel.useMemory
-    ]
-    assert cached_before  # the run did persist something
-    released = res.unpersist()
-    assert released == len(cached_before) or released >= 1
-    assert all(not df.storageLevel.useMemory for df in cached_before)
+    res.processed.count()  # materialize the add-back cache too
+    assert len(res.persisted_frames) == 3
+    run_blocks = _stored_rdd_ids(spark) - before
+    assert set(_cut_ids(res)) < run_blocks  # both cuts + the add-back
+    assert res.unpersist() == 3
+    assert not _stored_rdd_ids(spark) & run_blocks
     assert not res.persisted_frames  # handle is drained; idempotent
     assert res.unpersist() == 0
-    assert res.processed.count() > 0  # frames still usable (recompute)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        res.processed.count()
 
 
 def test_pipeline_processed_is_the_persisted_frame(spark, raw_sdf, office_sdf):
-    """Every consumer of ``res.processed`` reads one cached frame instead
+    """Every consumer of ``res.processed`` reads one stored frame instead
     of re-running W1 and the fail-open tail: processed is one of the
-    run's three persists (tagged, add-back, processed) and
-    ``res.unpersist()`` releases it."""
+    run's three tracked frames (tagged, add-back, processed), its
+    checkpoint blocks are in storage, and ``res.unpersist()`` releases
+    them."""
     from capex_data_pipeline_spark.plans.pipeline import run_pipeline
 
     res = run_pipeline(raw_sdf, office_sdf, golden=None)
     assert len(res.persisted_frames) == 3
     assert any(df is res.processed for df in res.persisted_frames)
-    assert res.processed.storageLevel.useMemory
     res.processed.count()
+    processed_id = _cut_ids(res)[1]
+    assert processed_id in _stored_rdd_ids(spark)
     res.unpersist()
-    assert not res.processed.storageLevel.useMemory
+    assert processed_id not in _stored_rdd_ids(spark)
 
 
 def test_release_persisted_clears_tracked_frames(spark):
@@ -237,13 +271,15 @@ def test_clear_pipeline_cache_releases_memoized_runs(spark):
     from capex_data_pipeline_spark import registry_ext
 
     res = registry_ext._synth_pipeline(spark, "/root/testdata/sf0.001")
-    res.processed.count()  # materialize the persisted frames
+    res.processed.count()  # materialize the add-back cache too
     assert registry_ext._PIPELINE_CACHE
-    assert any(df.storageLevel.useMemory for df in res.persisted_frames)
+    cuts = set(_cut_ids(res))
+    assert cuts <= _stored_rdd_ids(spark)
     released = registry_ext.clear_pipeline_cache()
     assert released >= 1
     assert not registry_ext._PIPELINE_CACHE
     assert not res.persisted_frames
+    assert not cuts & _stored_rdd_ids(spark)
 
 
 def test_driver_contract_registry_invariants():
@@ -354,9 +390,12 @@ def test_release_persisted_invalidates_pipeline_memo(spark):
     res.processed.count()
     n_frames = len(res.persisted_frames)
     assert registry_ext._PIPELINE_CACHE and n_frames > 0
+    cuts = set(_cut_ids(res))
+    assert cuts <= _stored_rdd_ids(spark)
     # hook-released frames count toward the total (return-value contract)
     assert release_persisted() >= n_frames
     assert not registry_ext._PIPELINE_CACHE
+    assert not cuts & _stored_rdd_ids(spark)
 
 
 def test_round7_query_plans_stay_narrow(spark, queries):
