@@ -8,17 +8,23 @@ is a structural win — without it the producing subplan runs once per
 consumer — but Spark never evicts MEMORY_AND_DISK blocks on its own, so
 a long-lived session that calls these operators repeatedly would
 accumulate cached blocks without bound. The capex pipeline's two
-fan-out frames (tagged lineage, final processed) are cut with
-:func:`plan_boundary` instead: a local checkpoint holds executor blocks
-the same way, and is tracked the same way.
+fan-out frames (tagged lineage, final processed) and the enrichment's
+two inputs (FN keys, audit) are cut with :func:`plan_boundary`
+instead: a local checkpoint holds executor blocks the same way, and is
+tracked the same way.
 
 Every engine-internal ``persist`` therefore goes through
-:func:`persisted`, and the pipeline's checkpoint cuts through
-:func:`track`; both register the frame here.  Callers can release
+:func:`persisted`, and those checkpoint cuts through :func:`track`;
+both register the frame here.  Callers can release
 everything with :func:`release_persisted` (e.g. between batches of a
 long-lived service), and :class:`~capex_data_pipeline_spark.plans.pipeline.PipelineResult`
 exposes a per-run ``unpersist()`` over just its own frames. All three
 release paths go through :func:`release_frame`.
+
+:func:`plan_boundary` is the one place that decides how a plan is
+cut: ``$SPARK_GRAFT_BOUNDARY`` (``local`` checkpoint by default, or
+``staging`` parquet under ``$SPARK_GRAFT_STAGING_DIR``) flips every
+cut in the engine at once; no operator takes a cut-mode argument.
 """
 
 from __future__ import annotations
@@ -110,7 +116,8 @@ def release_persisted(blocking: bool = False) -> int:
     or whose session is gone are skipped.  A consumer holding a released
     *persisted* frame can still use it (the subplan recomputes); a
     released *checkpoint cut* (the pipeline's tagged and processed
-    frames) cannot be read again. Registered release hooks (memo
+    frames, the enrichment's FN keys and audit, and every frame built
+    on them) cannot be read again. Registered release hooks (memo
     invalidation) run first.
     """
     released = 0
@@ -141,99 +148,53 @@ def tracked_count() -> int:
         return len(_TRACKED)
 
 
-#: staging paths written by plan_boundary(mode='staging'), for
+#: staging paths written by plan_boundary under 'staging', for
 #: clear_staging() best-effort local cleanup
 _STAGED_PATHS: list[str] = []
-_STAGED_TABLES: list[str] = []
 
 
 def plan_boundary(
-    df: DataFrame,
-    *,
-    mode: str | None = None,
-    staging_dir: str | None = None,
-    eager: bool = False,
-    label: str = "boundary",
-    bucket_by: "list[str] | None" = None,
-    n_buckets: int = 32,
+    df: DataFrame, *, eager: bool = False, label: str = "boundary"
 ) -> DataFrame:
     """Cut the logical plan: return a DataFrame with ``df``'s data but
     a trivial producing plan, so downstream consumers stop re-walking
     (and the analyzer stops re-embedding) a deep upstream DAG.
 
-    Two modes:
+    This is the one place that decides HOW a plan is cut. Operators
+    decide only WHERE (their own cut rule); the how is a deployment
+    setting, read from ``$SPARK_GRAFT_BOUNDARY``:
 
-    - ``'local'`` (default): ``localCheckpoint(eager=...)`` — blocks
+    - ``local`` (default): ``localCheckpoint(eager=...)`` — blocks
       live on executor-local storage. Fast, but blocks are LOST when
       an executor is decommissioned (dynamic allocation, spot kills);
       on such clusters use staging.
-    - ``'staging'``: write the frame to a parquet staging table under
-      ``staging_dir`` (or ``$SPARK_GRAFT_STAGING_DIR``) and read it
-      back — the write is durable on the shared filesystem (HDFS/S3/
-      DBFS), survives executor loss, and the read-back plan is a
-      plain pruned scan. Always eager (the write runs now). Parquet
-      round-trips every type the engine uses; staged files persist
-      until :func:`clear_staging` (best-effort, local paths only) or
+    - ``staging``: write the frame as parquet under
+      ``$SPARK_GRAFT_STAGING_DIR`` and read it back — the write is
+      durable on the shared filesystem (HDFS/S3/DBFS), survives
+      executor loss, and the read-back plan is a plain pruned scan.
+      Always eager (the write runs now). Parquet round-trips every
+      type the engine uses; staged files persist until
+      :func:`clear_staging` (best-effort, local paths only) or
       external lifecycle rules remove them.
 
-    ``mode=None`` resolves from ``$SPARK_GRAFT_BOUNDARY`` (default
-    ``'local'``) so a cluster deployment can flip every internal
-    boundary to staging without touching call sites.
-
-    ``bucket_by`` (staging mode only): write the staged frame as a
-    BUCKETED table on the given key (``sources.bucketed`` machinery,
-    per-bucket sorted on the same key) instead of plain parquet. The
-    read-back scan then reports hash partitioning on that key, so an
-    iterative operator's round-over-round self-joins and aggregates
-    on the key run with ZERO Exchange after the boundary — the
-    boundary pays the one shuffle the later rounds would each have
-    paid (pinned in tests/test_bucketed.py). Size ``n_buckets`` like
-    shuffle partitions: one bucket of the frame per executor-memory
-    unit at target scale.
+    ``label`` names the staging path (``<label>-<uuid>``).
     """
-    mode = mode or os.environ.get("SPARK_GRAFT_BOUNDARY", "local")
+    mode = os.environ.get("SPARK_GRAFT_BOUNDARY", "local")
     if mode == "local":
-        if bucket_by:
-            raise ValueError(
-                "plan_boundary: bucket_by requires mode='staging' "
-                "(localCheckpoint blocks carry no bucketing metadata)"
-            )
         return df.localCheckpoint(eager=eager)
     if mode != "staging":
         raise ValueError(
-            f"plan_boundary: unknown mode {mode!r} (use 'local' or 'staging')"
+            f"plan_boundary: unknown $SPARK_GRAFT_BOUNDARY {mode!r} "
+            "(use 'local' or 'staging')"
         )
-    staging_dir = staging_dir or os.environ.get("SPARK_GRAFT_STAGING_DIR")
+    staging_dir = os.environ.get("SPARK_GRAFT_STAGING_DIR")
     if not staging_dir:
         raise ValueError(
-            "plan_boundary: mode='staging' needs staging_dir= or "
+            "plan_boundary: SPARK_GRAFT_BOUNDARY=staging needs "
             "$SPARK_GRAFT_STAGING_DIR (a shared filesystem path on "
             "real clusters)"
         )
-    suffix = uuid.uuid4().hex
-    path = staging_dir.rstrip("/") + f"/{label}-{suffix}"
-    if bucket_by:
-        import re
-
-        from capex_data_pipeline_spark.sources.bucketed import write_bucketed
-
-        # labels are caller-supplied and often hyphenated ('bpe-train');
-        # sanitize so saveAsTable / DROP TABLE parse
-        safe_label = re.sub(r"[^A-Za-z0-9_]", "_", label)
-        table = f"staging_{safe_label}_{suffix}"
-        write_bucketed(
-            df,
-            table,
-            bucket_cols=list(bucket_by),
-            n_buckets=n_buckets,
-            sort_cols=list(bucket_by),
-            path=path,
-            mode="error",
-        )
-        with _LOCK:
-            _STAGED_PATHS.append(path)
-            _STAGED_TABLES.append(table)
-        return df.sparkSession.table(table)
+    path = staging_dir.rstrip("/") + f"/{label}-{uuid.uuid4().hex}"
     df.write.mode("error").parquet(path)
     with _LOCK:
         _STAGED_PATHS.append(path)
@@ -242,26 +203,13 @@ def plan_boundary(
 
 def clear_staging() -> int:
     """Best-effort removal of local staging paths written by
-    :func:`plan_boundary` (returns how many were deleted), plus
-    dropping any bucketed staging tables it registered in the session
-    catalog (external tables — the data files are covered by the path
-    removal). Paths on non-local filesystems are left to external
-    lifecycle rules — the list is simply dropped."""
+    :func:`plan_boundary` (returns how many were deleted). Paths on
+    non-local filesystems are left to external lifecycle rules — the
+    list is simply dropped."""
     import shutil
 
     with _LOCK:
         paths, _STAGED_PATHS[:] = list(_STAGED_PATHS), []
-        tables, _STAGED_TABLES[:] = list(_STAGED_TABLES), []
-    if tables:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
-            for t in tables:
-                try:
-                    spark.sql(f"DROP TABLE IF EXISTS `{t}`")
-                except Exception:  # noqa: BLE001 - cleanup is best-effort
-                    pass
     n = 0
     for p in paths:
         try:

@@ -641,7 +641,6 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 50,
-    boundary: str | None = None,
     assume_symmetric: bool = False,
     emit_degree: bool = False,
 ) -> DataFrame:
@@ -660,10 +659,8 @@ def dedup_clusters(
     algorithms on Spark (GraphX's Pregel does the same internally).
     Labels get a plan boundary per round: iterative lineage otherwise
     grows the logical plan linearly and re-analysis quadratically
-    (same lesson as the q93 plan boundary). ``boundary`` selects the
-    cut per :func:`cache.plan_boundary` — default localCheckpoint;
-    pass ``'staging'`` on clusters with executor decommissioning,
-    where executor-local checkpoint blocks are lost.
+    (same lesson as the q93 plan boundary); :func:`cache.plan_boundary`
+    decides how each cut is made.
 
     Returns one row per document (``corpus`` supplies the full id set so
     singletons appear; omit it to cluster only paired docs):
@@ -687,7 +684,7 @@ def dedup_clusters(
     from capex_data_pipeline_spark.cache import plan_boundary as _boundary
 
     def _cut(df, label):
-        return _boundary(df, mode=boundary, eager=True, label=label)
+        return _boundary(df, eager=True, label=label)
 
     e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     if assume_symmetric:

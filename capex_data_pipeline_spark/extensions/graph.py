@@ -33,7 +33,6 @@ def pagerank(
     iterations: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    plan_boundary: bool | str | None = None,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """PageRank in exact integer micro-units (simplified damped
@@ -55,13 +54,10 @@ def pagerank(
     sink-only vertices keep the 0.15 base. The degree-annotated edge
     list and the vertex set are persisted once and reused by every
     round (the ledger rule: ``iterations``+1 consumers). Plans deepen
-    linearly with rounds, so ``plan_boundary`` cuts each round's rank
-    frame via :func:`cache.plan_boundary`; default on when
-    ``iterations > 4`` (the q93 rule: many-consumer deep tails pay
-    analyzer cost multiplicatively). Pass ``plan_boundary='staging'``
-    (or set ``$SPARK_GRAFT_BOUNDARY=staging`` with a staging dir) on
-    dynamic-allocation clusters, where localCheckpoint blocks die with
-    their executor; ``True``/``'local'`` selects localCheckpoint.
+    linearly with rounds, so past 4 iterations each round's rank frame
+    is cut via :func:`cache.plan_boundary` (the q93 rule: many-consumer
+    deep tails pay analyzer cost multiplicatively); how it is cut is
+    the deployment's ``$SPARK_GRAFT_BOUNDARY``.
 
     ``assume_distinct=True`` skips the defensive edge ``distinct()``
     (a full shuffle of the edge list) when the caller guarantees no
@@ -76,9 +72,7 @@ def pagerank(
 
     if iterations < 1:
         raise ValueError("pagerank: iterations must be >= 1")
-    if plan_boundary is None:
-        plan_boundary = iterations > 4
-    boundary_mode = plan_boundary if isinstance(plan_boundary, str) else None
+    cut = iterations > 4
 
     from pyspark.sql.window import Window
 
@@ -119,10 +113,8 @@ def pagerank(
                 + F.expr("850 * coalesce(s, 0L) div 1000")
             ).alias("r"),
         )
-        if plan_boundary:
-            ranks = _boundary(
-                ranks, mode=boundary_mode, eager=False, label="pagerank"
-            )
+        if cut:
+            ranks = _boundary(ranks, eager=False, label="pagerank")
     return ranks.select(
         F.col("v").alias("vertex"), F.col("r").alias("rank_micro")
     )
@@ -225,7 +217,6 @@ def connected_components(
     rounds: int | None = None,
     until_fixpoint: bool = False,
     max_iter: int = 50,
-    plan_boundary: bool | str | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Connected components of an undirected edge list by min-label
@@ -256,8 +247,7 @@ def connected_components(
     pairs only, neighbor lists never materialize. The symmetric edge
     frame is persisted once (``rounds``+1 consumers). Plans deepen
     linearly with rounds, so each round's label frame is cut via
-    :func:`cache.plan_boundary` (default on past 4 rounds or in
-    fixpoint mode; ``'staging'`` for dynamic-allocation clusters).
+    :func:`cache.plan_boundary` past 4 rounds or in fixpoint mode.
 
     Returns (vertex, component) with component = min vertex id in the
     (R-round-reachable) component.
@@ -272,9 +262,7 @@ def connected_components(
         )
     if rounds is not None and rounds < 1:
         raise ValueError("connected_components: rounds must be >= 1")
-    if plan_boundary is None:
-        plan_boundary = until_fixpoint or (rounds or 0) > 4
-    boundary_mode = plan_boundary if isinstance(plan_boundary, str) else None
+    cut = until_fixpoint or (rounds or 0) > 4
 
     und = _canonical_edges(edges, src_col, dst_col, assume_canonical)
     # symmetric orientation so one equi-join sees both neighbor sides;
@@ -288,8 +276,8 @@ def connected_components(
     labels = sym.select(F.col("a").alias("v")).distinct().withColumn(
         "lbl", F.col("v")
     )
-    if plan_boundary:
-        labels = _boundary(labels, mode=boundary_mode, eager=False, label="cc")
+    if cut:
+        labels = _boundary(labels, eager=False, label="cc")
     i = 0
     while True:
         if not until_fixpoint and i >= rounds:
@@ -313,10 +301,8 @@ def connected_components(
                 .groupBy("v")
                 .agg(F.min("lbl").alias("lbl"), F.min("_old").alias("_old"))
             )
-            if plan_boundary:
-                new = _boundary(
-                    new, mode=boundary_mode, eager=False, label="cc"
-                )
+            if cut:
+                new = _boundary(new, eager=False, label="cc")
             changed = new.where(F.col("lbl") != F.col("_old")).count()
             labels = new.select("v", "lbl")
             if changed == 0:
@@ -333,10 +319,8 @@ def connected_components(
                 .groupBy("v")
                 .agg(F.min("lbl").alias("lbl"))
             )
-            if plan_boundary:
-                new = _boundary(
-                    new, mode=boundary_mode, eager=False, label="cc"
-                )
+            if cut:
+                new = _boundary(new, eager=False, label="cc")
             labels = new
     return labels.select(
         F.col("v").alias("vertex"), F.col("lbl").alias("component")
@@ -351,7 +335,6 @@ def kcore_peel(
     src_col: str = "src",
     dst_col: str = "dst",
     assume_canonical: bool = False,
-    plan_boundary: bool | str | None = None,
 ) -> DataFrame:
     """k-core by iterative peeling: repeatedly delete vertices with
     degree < k (and their edges); what survives is the k-core — the
@@ -373,9 +356,7 @@ def kcore_peel(
     per endpoint against the surviving-vertex set — all compact keys,
     never materializes neighbor lists. Plans deepen linearly with
     rounds, so each round's edge frame is cut with
-    :func:`cache.plan_boundary` (same policy as :func:`pagerank`:
-    default on past 4 rounds, ``'staging'`` for dynamic-allocation
-    clusters).
+    :func:`cache.plan_boundary` past 4 rounds or in fixpoint mode.
 
     Returns (vertex, core_deg): surviving vertices with their degree
     inside the peeled subgraph.
@@ -391,9 +372,7 @@ def kcore_peel(
     if k < 1:
         raise ValueError("kcore_peel: k must be >= 1")
     n_rounds = rounds if rounds is not None else 0
-    if plan_boundary is None:
-        plan_boundary = until_fixpoint or n_rounds > 4
-    boundary_mode = plan_boundary if isinstance(plan_boundary, str) else None
+    cut = until_fixpoint or n_rounds > 4
 
     e = _canonical_edges(edges, src_col, dst_col, assume_canonical)
     prev_count: int | None = None
@@ -417,8 +396,8 @@ def kcore_peel(
             .join(alive.select(F.col("v").alias("b")), "b", "left_semi")
             .select("a", "b")
         )
-        if plan_boundary:
-            e = _boundary(e, mode=boundary_mode, eager=False, label="kcore")
+        if cut:
+            e = _boundary(e, eager=False, label="kcore")
     return (
         _undirected_degrees(e)
         .select(F.col("v").alias("vertex"), F.col("d").alias("core_deg"))
@@ -432,7 +411,6 @@ def label_propagation(
     rounds: int | None = None,
     until_fixpoint: bool = False,
     max_iter: int = 30,
-    plan_boundary: bool | str | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan
@@ -462,9 +440,8 @@ def label_propagation(
     lbl))``, which keeps the argmax inside a map-side-combining
     aggregate instead of paying a window sort-shuffle. Neighbor lists
     never materialize. The symmetric frame is persisted once; each
-    round's label frame is cut via :func:`cache.plan_boundary`
-    (default on past 4 rounds or in fixpoint mode; ``'staging'`` for
-    dynamic-allocation clusters).
+    round's label frame is cut via :func:`cache.plan_boundary` past 4
+    rounds or in fixpoint mode.
 
     Returns (vertex, community). Vertices keep their own id as the
     community only if no neighbor label ever beats it — isolated
@@ -480,9 +457,7 @@ def label_propagation(
         )
     if rounds is not None and rounds < 1:
         raise ValueError("label_propagation: rounds must be >= 1")
-    if plan_boundary is None:
-        plan_boundary = until_fixpoint or (rounds or 0) > 4
-    boundary_mode = plan_boundary if isinstance(plan_boundary, str) else None
+    cut = until_fixpoint or (rounds or 0) > 4
 
     und = _canonical_edges(edges, src_col, dst_col, assume_canonical)
     sym = persisted(
@@ -493,8 +468,8 @@ def label_propagation(
     labels = sym.select(F.col("a").alias("v")).distinct().withColumn(
         "lbl", F.col("v")
     )
-    if plan_boundary:
-        labels = _boundary(labels, mode=boundary_mode, eager=False, label="lpa")
+    if cut:
+        labels = _boundary(labels, eager=False, label="lpa")
     i = 0
     while True:
         if not until_fixpoint and i >= rounds:
@@ -515,8 +490,8 @@ def label_propagation(
             )
             .select("v", F.col("m.l").alias("lbl"))
         )
-        if plan_boundary:
-            new = _boundary(new, mode=boundary_mode, eager=False, label="lpa")
+        if cut:
+            new = _boundary(new, eager=False, label="lpa")
         if until_fixpoint:
             changed = (
                 new.join(labels.withColumnRenamed("lbl", "_old"), "v")
@@ -545,7 +520,6 @@ def bfs_hops(
     rounds: int,
     src_col: str = "src",
     dst_col: str = "dst",
-    plan_boundary: bool | str | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distance on an undirected edge list: every
@@ -569,7 +543,7 @@ def bfs_hops(
     external SQL replay unrolls one CTE per round — the registered
     oracle does exactly that); vertices farther than ``rounds`` hops
     are absent from the result, the bounded-reachability contract.
-    Plan boundary default is ON past 2 rounds — stricter than the
+    Each round's frontier is cut past 2 rounds — stricter than the
     other iterative graph ops because each round references BOTH the
     frontier and the visited set, so an unboundaried round embeds the
     previous round's plan twice (2^rounds re-execution of the frontier
@@ -586,9 +560,7 @@ def bfs_hops(
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     if not sources:
         raise ValueError("bfs_hops: sources must be non-empty")
-    if plan_boundary is None:
-        plan_boundary = rounds > 2
-    boundary_mode = plan_boundary if isinstance(plan_boundary, str) else None
+    cut = rounds > 2
 
     spark = edges.sparkSession
     und = _canonical_edges(edges, src_col, dst_col, assume_canonical)
@@ -616,10 +588,8 @@ def bfs_hops(
             .distinct()
             .join(dist.select("vertex"), "vertex", "left_anti")
         )
-        if plan_boundary:
-            new = _boundary(
-                new, mode=boundary_mode, eager=False, label="bfs"
-            )
+        if cut:
+            new = _boundary(new, eager=False, label="bfs")
         frontier = new
         dist = dist.unionByName(
             new.withColumn("hops", F.lit(r).cast("int"))
@@ -888,7 +858,6 @@ def personalized_pagerank(
     iterations: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    plan_boundary: bool | str | None = None,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """Personalized PageRank in exact integer micro-units — relevance
@@ -903,7 +872,7 @@ def personalized_pagerank(
     division exactness contract (bit-identical across engines and
     partitionings), same per-round shape (one src equi-join + one dst
     aggregate over the persisted degree-annotated edge list), same
-    plan-boundary policy. Vertices unreachable from the seeds hold
+    cut rule (past 4 iterations). Vertices unreachable from the seeds hold
     rank 0 — the personalization, visible by construction.
 
     Returns (vertex, rank_micro).
@@ -917,9 +886,7 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank: iterations must be >= 1")
     if not seeds:
         raise ValueError("personalized_pagerank: seeds must be non-empty")
-    if plan_boundary is None:
-        plan_boundary = iterations > 4
-    boundary_mode = plan_boundary if isinstance(plan_boundary, str) else None
+    cut = iterations > 4
 
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -963,10 +930,8 @@ def personalized_pagerank(
                 seed_base + F.expr("850 * coalesce(s, 0L) div 1000")
             ).alias("r"),
         )
-        if plan_boundary:
-            ranks = _boundary(
-                ranks, mode=boundary_mode, eager=False, label="ppr"
-            )
+        if cut:
+            ranks = _boundary(ranks, eager=False, label="ppr")
     return ranks.select(
         F.col("v").alias("vertex"), F.col("r").alias("rank_micro")
     )
@@ -1255,7 +1220,6 @@ def ktruss(
     src_col: str = "src",
     dst_col: str = "dst",
     assume_canonical: bool = False,
-    boundary: str | None = None,
     max_rounds: int = 50,
 ) -> DataFrame:
     """k-truss decomposition by iterative support peeling (Cohen
@@ -1291,7 +1255,7 @@ def ktruss(
             "ktruss: pass exactly one of rounds= or until_fixpoint=True"
         )
     cur = _canonical_edges(edges, src_col, dst_col, assume_canonical)
-    cur = _boundary(cur, mode=boundary, eager=True, label="ktruss-edges")
+    cur = _boundary(cur, eager=True, label="ktruss-edges")
     n_rounds = rounds if rounds is not None else max_rounds
     prev_count = None
     for i in range(n_rounds):
@@ -1306,9 +1270,7 @@ def ktruss(
             )
             .select("a", "b")
         )
-        cur = _boundary(
-            kept, mode=boundary, eager=True, label="ktruss-edges"
-        )
+        cur = _boundary(kept, eager=True, label="ktruss-edges")
         if until_fixpoint:
             c = cur.count()
             if c == prev_count or c == 0:

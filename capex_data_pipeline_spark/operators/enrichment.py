@@ -337,14 +337,12 @@ def _explain_on(
 
 
 def _explain_pair_staged(frame: DataFrame) -> DataFrame:
-    """The shared-regex staged frame of :func:`_explain_on_pair`,
-    split out so the caller can WARM it concurrently with the fn/audit
-    plan-boundary cuts (it depends only on ``frame``). The projection
-    reduces every explain condition to a SINGLE first-match index over
-    pre+post branches (one short-circuiting chain — the same lazy
-    per-row cost as the original CASE; separate pre/post indices would
-    evaluate the post keywords even for rows an early branch settled)
-    and is PERSISTED: the plan depends only on ``frame``, so repeat
+    """The shared-regex staged frame of :func:`_explain_on_pair`. The
+    projection reduces every explain condition to a SINGLE first-match
+    index over pre+post branches (one short-circuiting chain — the same
+    lazy per-row cost as the original CASE; separate pre/post indices
+    would evaluate the post keywords even for rows an early branch
+    settled) and is PERSISTED: the plan depends only on ``frame``, so repeat
     invocations are a canonical-plan cache hit — the regex cost is
     paid once per session — and the barrier stops Catalyst from
     inlining the chain into each reason variant. The raw key
@@ -523,7 +521,6 @@ def enrich_false_negatives(
     audit_ordered: DataFrame,
     raw: DataFrame | None = None,
     reference: DataFrame | None = None,
-    plan_boundary: bool | str = True,
     shared_reference: bool = False,
 ) -> DataFrame:
     """Attach exclusion reasons to FN keys (process_capex.py:1406-1471).
@@ -537,19 +534,15 @@ def enrich_false_negatives(
     column/value are null on the explain/unknown paths, exactly like the
     reference's string-valued reasons.
 
-    ``plan_boundary`` (default): the FN-key frame is consumed by up to
-    8 join sites here and the audit by 5, so when they arrive with a
-    deep producing plan (the full pipeline tail) that subplan is
-    embedded at EVERY site and the analyzer / optimizer / codegen walk
-    it multiplicatively — measured 45 s → 11 s end-to-end at sf0.01.
-    The boundary executes each producer once and replaces the plan
-    with materialized data. ``True``/``'local'`` uses
-    ``localCheckpoint()`` (eager by design; blocks live on
-    executor-local storage and die with a decommissioned executor);
-    on dynamic-allocation clusters pass ``plan_boundary='staging'``
-    (with ``$SPARK_GRAFT_STAGING_DIR`` or ``$SPARK_GRAFT_BOUNDARY``
-    configured — see :func:`cache.plan_boundary`) to stage through a
-    durable parquet table instead; ``False`` disables the cut.
+    Both inputs are cut with :func:`cache.plan_boundary` first, one
+    after the other: the FN-key frame is consumed by up to 8 join
+    sites here and the audit by 5, so an uncut deep producer (the
+    pipeline tail, the processed-vs-golden anti-join) would be
+    embedded, analyzed and re-run at every site. The cuts are tracked,
+    so ``cache.release_persisted`` frees them; read (or write) the
+    result before releasing — a released cut raises
+    ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``, the same contract as the
+    pipeline's own cuts.
 
     ``shared_reference``: set True ONLY when ``reference`` is ``raw``
     minus its VendorName column (same rows, same order) — then both
@@ -557,41 +550,14 @@ def enrich_false_negatives(
     (:func:`_explain_on_pair`), halving the dominant cost; the result
     is row-identical to the two-pass path (pinned by test + oracle).
     """
-    if plan_boundary:
-        # the two eager boundary cuts are independent jobs over the
-        # same persisted pipeline intermediates — submit them from two
-        # driver threads so their stages interleave (Spark job
-        # submission is thread-safe; concurrent materialization of a
-        # shared cached partition serializes per-partition in the
-        # BlockManager). Sequential submission left the cluster idle
-        # during each job's single-partition tail stages. The thread
-        # targets inherit the caller's job group, description and tags,
-        # so their jobs are listed and cancelled with the caller's.
-        from concurrent.futures import ThreadPoolExecutor
+    from capex_data_pipeline_spark.cache import plan_boundary, track
 
-        from pyspark import inheritable_thread_target
-
-        from capex_data_pipeline_spark.cache import plan_boundary as _boundary
-
-        mode = plan_boundary if isinstance(plan_boundary, str) else None
-        inherit = inheritable_thread_target(false_negatives.sparkSession)
-
-        @inherit
-        def _cut(df, label):
-            return _boundary(df, mode=mode, eager=True, label=label)
-
-        with ThreadPoolExecutor(max_workers=3) as ex:
-            fn_fut = ex.submit(_cut, false_negatives, "fn-keys")
-            au_fut = ex.submit(_cut, audit_ordered, "fn-audit")
-            if shared_reference and raw is not None and reference is not None:
-                # warm the shared regex frame CONCURRENTLY with the two
-                # cuts: it depends only on `raw`, so there is no reason
-                # to serialize its (one-per-session) materialization
-                # behind them — _explain_on_pair below rebuilds the
-                # same plan and hits the persisted entry
-                ex.submit(inherit(lambda: _explain_pair_staged(raw).count()))
-            false_negatives = fn_fut.result()
-            audit_ordered = au_fut.result()
+    false_negatives = track(
+        plan_boundary(false_negatives, eager=True, label="fn-keys")
+    )
+    audit_ordered = track(
+        plan_boundary(audit_ordered, eager=True, label="fn-audit")
+    )
     # every lookup join below is left to the planner: a checkpoint-cut
     # frame keeps its size estimate, so the FN-key and audit sides
     # broadcast under autoBroadcastJoinThreshold with no hint

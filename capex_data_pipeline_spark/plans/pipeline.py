@@ -22,11 +22,11 @@ it, and the final ``processed`` frame, which most consumers read
 re-runs W1 and the fail-open tail. A cut is a plan boundary, not a
 persist: by default a ``localCheckpoint``, so every consumer analyzes
 and plans a one-node ``LogicalRDD`` leaf instead of the 19-stage rule
-plan; ``boundary='staging'`` (or ``$SPARK_GRAFT_BOUNDARY=staging``)
-writes both as staging tables instead. The only shuffles are the W1
-window (top-k pushed into the shuffle via WindowGroupLimit / the
-grouped-Arrow exchange in exact-ties mode) and the small
-audit/fail-open key aggregations.
+plan; ``$SPARK_GRAFT_BOUNDARY=staging`` writes both as staging
+tables instead (``cache.plan_boundary`` decides how every cut is
+made). The only shuffles are the W1 window (top-k pushed into the
+shuffle via WindowGroupLimit / the grouped-Arrow exchange in
+exact-ties mode) and the small audit/fail-open key aggregations.
 """
 
 from __future__ import annotations
@@ -84,14 +84,6 @@ class CapexPipelineConfig:
     fail_open: bool = True  # FAIL_OPEN_UNKNOWN defaults true (process_capex.py:10)
     legacy_dates: bool = False  # reproduce the dayfirst misparse when True
     exact_w1_ties: bool = True  # replay pandas' unstable sort in W1
-    # how the two fan-out frames (tagged lineage, final processed) are cut
-    # (cache.plan_boundary's mode): None -> $SPARK_GRAFT_BOUNDARY, default
-    # 'local' (localCheckpoint); 'staging' -> staging-table write —
-    # durable across memory pressure and executor decommissioning, ONE
-    # materialization per session that every family consumer
-    # (q90/q91/q93/q27) reads back
-    boundary: str | None = None
-    staging_dir: str | None = None  # None -> $SPARK_GRAFT_STAGING_DIR
 
 
 @dataclass
@@ -316,19 +308,14 @@ def run_pipeline(
 
     def _cut(frame: DataFrame, label: str) -> DataFrame:
         """Cut a fan-out frame (the tagged lineage frame, then the final
-        processed frame) per config.boundary: a local checkpoint by
-        default, or a staging-table write (durable, read back by every
-        consumer — the 100 TB shape, where executor loss would
-        otherwise lose the checkpoint blocks). Either way consumers
-        read a leaf, not the rule plan. A checkpoint holds executor
-        blocks until released, so it joins this run's frames."""
-        frame = plan_boundary(
-            frame,
-            mode=config.boundary,
-            eager=True,
-            label=label,
-            staging_dir=config.staging_dir,
-        )
+        processed frame) with ``cache.plan_boundary``: a local
+        checkpoint by default, or under ``$SPARK_GRAFT_BOUNDARY=staging``
+        a staging-table write (durable, read back by every consumer —
+        the 100 TB shape, where executor loss would otherwise lose the
+        checkpoint blocks). Either way consumers read a leaf, not the
+        rule plan. A checkpoint holds executor blocks until released,
+        so it joins this run's frames."""
+        frame = plan_boundary(frame, eager=True, label=label)
         if checkpoint_rdd(frame) is not None:
             run_persists.append(track(frame))
         return frame

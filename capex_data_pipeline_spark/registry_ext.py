@@ -481,8 +481,8 @@ def _synth_pipeline(spark, sf_dir: str, **cfg_kwargs):
     (deterministic DataFrames for a given session + sf_dir + config), so
     memoize per (application, sf_dir, config) — this also re-uses ONE
     pair of cuts (tagged, processed) across the four queries instead of
-    four. The cuts follow ``$SPARK_GRAFT_BOUNDARY`` (see
-    ``cache.plan_boundary``): ``staging`` writes them once as staging
+    four. How they are cut is ``cache.plan_boundary``'s one switch,
+    ``$SPARK_GRAFT_BOUNDARY``: ``staging`` writes them once as staging
     tables that every family member reads back."""
     from capex_data_pipeline_spark.plans.pipeline import (
         CapexPipelineConfig,
@@ -634,10 +634,9 @@ def q93_fn_enrichment(spark, sf_dir):
     p_keys = with_robust_key(res.processed).select("CompositeKey").distinct()
     g_keys = with_robust_key(golden).select("CompositeKey").distinct()
     # the enrichment consumes the FN key set in several joins
-    # (exact/short/prefix audit hits + one per explain frame) and
-    # plan-boundaries it internally (localCheckpoint), so the
-    # processed-vs-golden anti-join — the W1/fail-open tail of the
-    # pipeline DAG — runs exactly once
+    # (exact/short/prefix audit hits + one per explain frame) and cuts
+    # it internally (cache.plan_boundary, tracked like the pipeline's
+    # cuts), so the processed-vs-golden anti-join runs exactly once
     fn = g_keys.join(p_keys, "CompositeKey", "left_anti")
     # golden IS raw minus VendorName here, so both explain fallbacks
     # share one regex pass (shared_reference contract — halves the

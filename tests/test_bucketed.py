@@ -95,95 +95,6 @@ def test_write_bucketed_guards(spark):
         write_bucketed(df, "t_x", ["id"], n_buckets=0)
 
 
-def test_staging_boundary_bucketed_rounds_are_exchange_free(spark, tmp_path):
-    """plan_boundary(mode='staging', bucket_by=...) — the iterative-
-    operator lever: after the boundary, a round's self-join AND its
-    aggregate on the declared key plan with ZERO Exchange nodes (the
-    boundary paid the one shuffle every later round would have paid).
-    The same staged frame WITHOUT bucketing shuffles both."""
-    from pyspark.sql import functions as F
-
-    from capex_data_pipeline_spark.cache import clear_staging, plan_boundary
-
-    edges = spark.range(2000).select(
-        (F.col("id") % 97).alias("v"), (F.col("id") % 31).alias("w")
-    )
-    staged = plan_boundary(
-        edges,
-        mode="staging",
-        staging_dir=str(tmp_path / "stage"),
-        label="edges",
-        bucket_by=["v"],
-        n_buckets=8,
-    )
-    # one "round" of an iterative operator: self-join + re-aggregate
-    # on the bucket key (merge hint: at test scale Spark would rather
-    # broadcast the tiny side; at real scale SMJ is the plan, and the
-    # pin is that the SMJ needs neither Exchange NOR per-bucket Sort)
-    rnd = (
-        staged.alias("l")
-        .join(staged.alias("r").hint("merge"), "v")
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("pairs"))
-    )
-    plan = _plan(rnd)
-    assert "Exchange" not in plan, plan
-    assert rnd.count() == 97
-
-    plain = plan_boundary(
-        edges,
-        mode="staging",
-        staging_dir=str(tmp_path / "stage"),
-        label="edges_plain",
-    )
-    plain_plan = _plan(
-        plain.alias("l")
-        .join(plain.alias("r").hint("merge"), "v")
-        .groupBy("v")
-        .count()
-    )
-    assert "Exchange hashpartitioning" in plain_plan
-    # cleanup drops the catalog table and the staged files
-    assert clear_staging() >= 1
-    assert not any(
-        t.name.startswith("staging_edges") for t in spark.catalog.listTables()
-    )
-
-
-def test_plan_boundary_bucket_by_requires_staging(spark):
-    from capex_data_pipeline_spark.cache import plan_boundary
-
-    with pytest.raises(ValueError, match="staging"):
-        plan_boundary(spark.range(5), mode="local", bucket_by=["id"])
-
-
-def test_staging_bucketed_hyphenated_label_sanitized(spark, tmp_path):
-    """Regression (r9): callers pass hyphenated labels ('bpe-train');
-    the staging table name must sanitize them or saveAsTable and the
-    DROP in clear_staging fail with a parse error."""
-    from capex_data_pipeline_spark.cache import clear_staging, plan_boundary
-
-    df = spark.range(100).selectExpr("id % 7 AS k", "id AS v")
-    staged = plan_boundary(
-        df,
-        mode="staging",
-        staging_dir=str(tmp_path / "stage"),
-        label="bpe-train.r9",
-        bucket_by=["k"],
-        n_buckets=4,
-    )
-    assert staged.count() == 100
-    assert any(
-        t.name.startswith("staging_bpe_train_r9")
-        for t in spark.catalog.listTables()
-    )
-    assert clear_staging() >= 1
-    assert not any(
-        t.name.startswith("staging_bpe_train_r9")
-        for t in spark.catalog.listTables()
-    )
-
-
 def test_neardup_index_bucketed_probe_is_index_side_exchange_free(
     spark, tmp_path
 ):

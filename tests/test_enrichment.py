@@ -124,10 +124,11 @@ def test_fn_enrichment_on_sample_fixture(request, spark, tmp_path_factory):
     assert len(got) > 100  # the fixture yields a substantial FN set
 
 
-def test_plan_boundary_is_semantics_neutral(spark):
-    """plan_boundary=True (localCheckpoint on the FN keys + audit — the
-    driver-time fix for the multiplicative deep-plan embedding) must be
-    a pure plan transformation: identical rows either way."""
+def test_plan_boundary_is_semantics_neutral(spark, tmp_path, monkeypatch):
+    """The FN-key and audit cuts (the driver-time fix for the
+    multiplicative deep-plan embedding) are a pure plan transformation:
+    a local checkpoint and a staging write give identical rows."""
+    from capex_data_pipeline_spark.cache import clear_staging
     from capex_data_pipeline_spark import registry_ext
     from capex_data_pipeline_spark.operators.validation import with_robust_key
     from capex_data_pipeline_spark.plans.synth import synthesize_capex_raw
@@ -140,15 +141,23 @@ def test_plan_boundary_is_semantics_neutral(spark):
     g = with_robust_key(golden).select("CompositeKey").distinct()
     fn = g.join(p, "CompositeKey", "left_anti")
 
-    outs = []
-    for boundary in (True, False):
+    def rows():
         df = enrich_false_negatives(
-            fn, res.audit_ordered, raw=raw, reference=golden,
-            plan_boundary=boundary,
+            fn, res.audit_ordered, raw=raw, reference=golden
         )
-        outs.append(sorted(tuple(r) for r in df.collect()))
-    assert outs[0] == outs[1]
-    assert outs[0]  # non-degenerate: the synth corpus yields FN keys
+        return sorted(tuple(r) for r in df.collect())
+
+    monkeypatch.delenv("SPARK_GRAFT_BOUNDARY", raising=False)
+    local = rows()
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path))
+    staged = rows()
+    names = os.listdir(tmp_path)
+    assert any(n.startswith("fn-keys-") for n in names)
+    assert any(n.startswith("fn-audit-") for n in names)
+    clear_staging()
+    assert local == staged
+    assert local  # non-degenerate: the synth corpus yields FN keys
 
 
 def test_shared_reference_explain_equals_two_pass(spark, raw_sdf, office_sdf):
@@ -177,10 +186,10 @@ def test_shared_reference_explain_equals_two_pass(spark, raw_sdf, office_sdf):
     assert rows(True) == rows(False)
 
 
-def test_boundary_threads_inherit_the_callers_job_group(spark, raw_sdf, office_sdf):
-    """The plan-boundary thread pool carries the caller's job group into
-    its threads: every job started during the call is listed under the
-    group, so the caller can track or cancel the whole operator."""
+def test_boundary_cuts_run_in_the_callers_job_group(spark, raw_sdf, office_sdf):
+    """The eager FN-key and audit cuts run in the caller's job group:
+    every job started during the call is listed under the group, so
+    the caller can track or cancel the whole operator."""
     from capex_data_pipeline_spark.operators.validation import with_robust_key
 
     res = run_pipeline(raw_sdf, office_sdf)
@@ -197,7 +206,7 @@ def test_boundary_threads_inherit_the_callers_job_group(spark, raw_sdf, office_s
     try:
         enrich_false_negatives(
             fn, res.audit_ordered, raw=raw_sdf, reference=golden,
-            shared_reference=True, plan_boundary=True,
+            shared_reference=True,
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -232,24 +241,18 @@ def test_enrichment_join_strategy_identical(
 
 
 def test_pipeline_staging_boundary_shares_one_materialization(
-    spark, raw_sdf, office_sdf, tmp_path
+    spark, raw_sdf, office_sdf, tmp_path, monkeypatch
 ):
-    """config.boundary='staging' writes the tagged + processed frames ONCE as
-    staging parquet; consumers read results identical to the in-memory
-    persist run, and clear_staging removes the paths."""
-    import os
-
+    """$SPARK_GRAFT_BOUNDARY=staging writes the tagged + processed frames
+    ONCE as staging parquet; consumers read results identical to the
+    checkpoint-cut run, and clear_staging removes the paths."""
     from capex_data_pipeline_spark.cache import clear_staging
-    from capex_data_pipeline_spark.plans.pipeline import CapexPipelineConfig
 
+    monkeypatch.delenv("SPARK_GRAFT_BOUNDARY", raising=False)
     base = run_pipeline(raw_sdf, office_sdf)
-    staged = run_pipeline(
-        raw_sdf,
-        office_sdf,
-        config=CapexPipelineConfig(
-            boundary="staging", staging_dir=str(tmp_path / "stage")
-        ),
-    )
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path / "stage"))
+    staged = run_pipeline(raw_sdf, office_sdf)
 
     def key(r):
         return tuple(str(x) for x in r)
@@ -265,3 +268,37 @@ def test_pipeline_staging_boundary_shares_one_materialization(
     assert any(n.startswith("capex-processed-") for n in names)
     assert clear_staging() >= 2
     assert os.listdir(tmp_path / "stage") == []
+
+
+def test_enrichment_cuts_are_released(spark, raw_sdf, office_sdf, tmp_path):
+    """The FN-key and audit cuts are tracked: once the result is written,
+    ``cache.release_persisted()`` leaves no RDD that the call stored in
+    the session's storage (untracked, two ``localCheckpoint`` RDDs
+    stayed behind per call)."""
+    from capex_data_pipeline_spark.cache import release_persisted, tracked_count
+    from capex_data_pipeline_spark.operators.validation import with_robust_key
+
+    def stored() -> set[int]:
+        return {
+            i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    res = run_pipeline(raw_sdf, office_sdf)
+    golden = raw_sdf.drop("VendorName")
+    p_keys = with_robust_key(res.processed).select("CompositeKey").distinct()
+    g_keys = with_robust_key(golden).select("CompositeKey").distinct()
+    fn = g_keys.join(p_keys, "CompositeKey", "left_anti")
+
+    before = stored()
+    enriched = enrich_false_negatives(
+        fn, res.audit_ordered, raw=raw_sdf, reference=golden,
+        shared_reference=True,
+    )
+    out = str(tmp_path / "enriched")
+    enriched.write.parquet(out)
+    new = stored() - before
+    assert len(new) >= 2  # at least the FN-key and audit cuts
+    release_persisted()
+    assert not stored() & new
+    assert tracked_count() == 0
+    assert spark.read.parquet(out).count() > 0  # written before release

@@ -5,6 +5,8 @@ and the driver's oracle gate)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -986,18 +988,21 @@ def test_pagerank_deterministic_and_validates(spark):
 def test_pagerank_plan_boundary_kicks_in(spark):
     from capex_data_pipeline_spark.extensions.graph import pagerank
 
-    edges = spark.createDataFrame([("x", "y")], "src string, dst string")
-    # explicit boundary: still correct, same values as unboundaried
-    a = sorted(
-        map(tuple, pagerank(edges, iterations=5).collect())
-    )  # auto boundary (>4)
-    b = sorted(
-        map(
-            tuple,
-            pagerank(edges, iterations=5, plan_boundary=False).collect(),
-        )
-    )
-    assert a == b
+    # a LocalRelation input (createDataFrame would itself be a LogicalRDD)
+    edges = spark.sql("SELECT 'x' AS src, 'y' AS dst")
+
+    def is_cut(df):
+        return "LogicalRDD" in df._jdf.queryExecution().analyzed().toString()
+
+    assert not is_cut(pagerank(edges, iterations=4))
+    ranks = pagerank(edges, iterations=5)  # past 4 rounds: cut per round
+    assert is_cut(ranks)
+    # hand-computed micro-units: x has no in-edge, so it holds the 0.15
+    # base from round 1; y gets 0.15 + 0.85·r(x) — 1.0 after round 1,
+    # then 150000 + 850·150000 div 1000 = 277500 from round 2 on
+    assert sorted(map(tuple, ranks.collect())) == [
+        ("x", 150_000), ("y", 277_500)
+    ]
 
 
 def test_group_centroids_hand_computed(spark):
@@ -1205,25 +1210,32 @@ def test_duplicated_spans_guards(spark):
 # ------------------------------------------- staging plan boundary
 
 
-def test_plan_boundary_modes(spark, tmp_path):
+def test_plan_boundary_modes(spark, tmp_path, monkeypatch):
     from capex_data_pipeline_spark.cache import clear_staging, plan_boundary
 
     df = spark.range(10).withColumn("x", F.col("id") * 2)
-    local = plan_boundary(df, mode="local", eager=True)
-    staged = plan_boundary(
-        df, mode="staging", staging_dir=str(tmp_path), label="t"
-    )
+    monkeypatch.delenv("SPARK_GRAFT_BOUNDARY", raising=False)
+    local = plan_boundary(df, eager=True)  # default: localCheckpoint
+    assert local._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path))
+    staged = plan_boundary(df, label="t")
     assert sorted(r.x for r in local.collect()) == sorted(
         r.x for r in staged.collect()
     )
     # staged plan is a plain scan of the staging table
     assert "Scan parquet" in staged._jdf.queryExecution().executedPlan().toString() \
         or "FileScan" in staged._jdf.queryExecution().toString()
-    with pytest.raises(ValueError, match="unknown mode"):
-        plan_boundary(df, mode="bogus")
-    with pytest.raises(ValueError, match="staging_dir"):
-        plan_boundary(df, mode="staging", staging_dir=None)
+    assert [n for n in os.listdir(tmp_path) if n.startswith("t-")]
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "bogus")
+    with pytest.raises(ValueError, match="unknown"):
+        plan_boundary(df)
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
+    monkeypatch.delenv("SPARK_GRAFT_STAGING_DIR")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STAGING_DIR"):
+        plan_boundary(df)
     assert clear_staging() >= 1  # local temp dirs are removable
+    assert os.listdir(tmp_path) == []
 
 
 def test_pagerank_staging_boundary_identical(spark, tmp_path, monkeypatch):
@@ -1233,25 +1245,23 @@ def test_pagerank_staging_boundary_identical(spark, tmp_path, monkeypatch):
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 1)],
         "src long, dst long",
     )
+    monkeypatch.delenv("SPARK_GRAFT_BOUNDARY", raising=False)
     base = {
         (r.vertex, r.rank_micro)
-        for r in pagerank(edges, iterations=6, plan_boundary=True).collect()
+        for r in pagerank(edges, iterations=6).collect()
     }
+    # the env flip reaches every per-round cut without touching the
+    # call site: each of the 6 rounds writes one staging path
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
     monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path))
     staged = {
         (r.vertex, r.rank_micro)
-        for r in pagerank(
-            edges, iterations=6, plan_boundary="staging"
-        ).collect()
+        for r in pagerank(edges, iterations=6).collect()
     }
     assert staged == base
-    # env flip reaches the same path without touching the call site
-    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
-    flipped = {
-        (r.vertex, r.rank_micro)
-        for r in pagerank(edges, iterations=6, plan_boundary=True).collect()
-    }
-    assert flipped == base
+    assert len(
+        [n for n in os.listdir(tmp_path) if n.startswith("pagerank-")]
+    ) == 6
 
     from capex_data_pipeline_spark.cache import clear_staging
 
@@ -1265,16 +1275,19 @@ def test_dedup_clusters_staging_boundary_identical(spark, tmp_path, monkeypatch)
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         "id_a long, id_b long",
     )
+    monkeypatch.delenv("SPARK_GRAFT_BOUNDARY", raising=False)
     base = {
         (r.doc_id, r.cluster_id, r.cluster_size, r.is_keeper)
         for r in dedup_clusters(pairs).collect()
     }
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
     monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path))
     staged = {
         (r.doc_id, r.cluster_id, r.cluster_size, r.is_keeper)
-        for r in dedup_clusters(pairs, boundary="staging").collect()
+        for r in dedup_clusters(pairs).collect()
     }
     assert staged == base
+    assert any(n.startswith("cc-edges-") for n in os.listdir(tmp_path))
 
     from capex_data_pipeline_spark.cache import clear_staging
 

@@ -242,16 +242,38 @@ def test_kcore_canonicalization_hygiene(spark):
     assert got == [(0, 2), (1, 2), (2, 2)]
 
 
-def test_kcore_boundary_modes_agree(spark, tmp_path):
-    """plan_boundary off / localCheckpoint / parquet staging produce
-    identical results (same policy test as pagerank/staging r6).
+def _under_each_boundary(monkeypatch, tmp_path, build):
+    """``build()`` rows with every plan cut as a local checkpoint, then
+    as a staging write (``$SPARK_GRAFT_BOUNDARY``, the one switch);
+    asserts the staged run really wrote staging paths."""
+    import os
 
-    rounds=3 deliberately: each UNboundaried peel round embeds the
-    previous round's plan 5x (degree union 2x + two semi joins 2x),
-    and Catalyst traverses the shared subtree as a TREE — 5^rounds
+    import capex_data_pipeline_spark.cache as cache
+
+    monkeypatch.delenv("SPARK_GRAFT_BOUNDARY", raising=False)
+    local = build()
+    monkeypatch.setenv("SPARK_GRAFT_BOUNDARY", "staging")
+    monkeypatch.setenv("SPARK_GRAFT_STAGING_DIR", str(tmp_path))
+    try:
+        staged = build()
+        assert os.listdir(tmp_path)  # the cuts went through staging
+    finally:
+        cache.clear_staging()
+    return local, staged
+
+
+def test_kcore_boundary_modes_agree(spark, tmp_path, monkeypatch):
+    """The uncut form (rounds=3) and the cut form (until_fixpoint=True:
+    every round cut) agree under both boundary modes, on a graph whose
+    peel converges within 3 rounds (the driver replay's fixpoint equals
+    the 3-round result).
+
+    rounds=3 deliberately: each UNCUT peel round embeds the previous
+    round's plan 5x (degree union 2x + two semi joins 2x), and
+    Catalyst traverses the shared subtree as a TREE — 5^rounds
     rule-pass visits. At rounds=6 the analyzer spins for >10 minutes
-    on a 50-edge graph; that is precisely why the operator defaults
-    the boundary ON past 4 rounds (the q93 lesson, measured here)."""
+    on a 50-edge graph; that is precisely why the operator cuts every
+    round past 4 rounds (the q93 lesson, measured here)."""
     rng = random.Random(7)
     pairs = sorted(
         {
@@ -261,31 +283,16 @@ def test_kcore_boundary_modes_agree(spark, tmp_path):
         }
     )
     df = _edges_df(spark, pairs)
-    base = _rows(
-        kcore_peel(df, k=2, rounds=3, assume_canonical=True, plan_boundary=False)
+    uncut = _rows(kcore_peel(df, k=2, rounds=3, assume_canonical=True))
+    assert uncut == sorted(_py_kcore(pairs, 2).items())
+    local, staged = _under_each_boundary(
+        monkeypatch,
+        tmp_path,
+        lambda: _rows(
+            kcore_peel(df, k=2, until_fixpoint=True, assume_canonical=True)
+        ),
     )
-    local = _rows(
-        kcore_peel(df, k=2, rounds=3, assume_canonical=True, plan_boundary=True)
-    )
-    import capex_data_pipeline_spark.cache as cache
-
-    import os
-
-    old = os.environ.get("SPARK_GRAFT_STAGING_DIR")
-    os.environ["SPARK_GRAFT_STAGING_DIR"] = str(tmp_path)
-    try:
-        staged = _rows(
-            kcore_peel(
-                df, k=2, rounds=3, assume_canonical=True, plan_boundary="staging"
-            )
-        )
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_STAGING_DIR", None)
-        else:
-            os.environ["SPARK_GRAFT_STAGING_DIR"] = old
-        cache.clear_staging()
-    assert base == local == staged
+    assert uncut == local == staged
 
 
 def test_kcore_argument_validation(spark):
@@ -482,45 +489,33 @@ def test_lpa_canonicalization_hygiene(spark):
     ) == _lpa_rows(label_propagation(_edges_df(spark, clean), rounds=2))
 
 
-def test_lpa_boundary_modes_agree(spark, tmp_path):
-    """plan_boundary off / localCheckpoint / parquet staging produce
-    identical labelings (same policy test as kcore/cc)."""
+def test_lpa_boundary_modes_agree(spark, tmp_path, monkeypatch):
+    """The uncut form (rounds=3) and the cut form (until_fixpoint=True)
+    produce identical labelings under both boundary modes (same policy
+    test as kcore), on three chained cliques with pendants whose
+    labels change in each of rounds 1-3 and are fixed from round 3."""
     from capex_data_pipeline_spark.extensions.graph import label_propagation
 
-    rng = random.Random(5)
-    pairs = sorted(
-        {
-            (a, b)
-            for a, b in itertools.combinations(range(24), 2)
-            if rng.random() < 0.14
-        }
+    pairs = (
+        list(itertools.combinations(range(0, 5), 2))
+        + list(itertools.combinations(range(10, 15), 2))
+        + list(itertools.combinations(range(30, 34), 2))
+        + [(4, 10), (14, 30), (20, 0), (21, 12), (35, 33)]
     )
+    # the driver replay converges in exactly 3 rounds
+    assert _py_lpa(pairs, rounds=2) != _py_lpa(pairs, fixpoint=True)
+    assert _py_lpa(pairs, rounds=3) == _py_lpa(pairs, fixpoint=True)
     df = _edges_df(spark, pairs)
-    base = _lpa_rows(
-        label_propagation(df, rounds=3, assume_canonical=True, plan_boundary=False)
+    uncut = _lpa_rows(label_propagation(df, rounds=3, assume_canonical=True))
+    assert uncut == sorted(_py_lpa(pairs, rounds=3).items())
+    local, staged = _under_each_boundary(
+        monkeypatch,
+        tmp_path,
+        lambda: _lpa_rows(
+            label_propagation(df, until_fixpoint=True, assume_canonical=True)
+        ),
     )
-    local = _lpa_rows(
-        label_propagation(df, rounds=3, assume_canonical=True, plan_boundary=True)
-    )
-    import os
-
-    import capex_data_pipeline_spark.cache as cache
-
-    old = os.environ.get("SPARK_GRAFT_STAGING_DIR")
-    os.environ["SPARK_GRAFT_STAGING_DIR"] = str(tmp_path)
-    try:
-        staged = _lpa_rows(
-            label_propagation(
-                df, rounds=3, assume_canonical=True, plan_boundary="staging"
-            )
-        )
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_STAGING_DIR", None)
-        else:
-            os.environ["SPARK_GRAFT_STAGING_DIR"] = old
-        cache.clear_staging()
-    assert base == local == staged
+    assert uncut == local == staged
 
 
 def test_lpa_argument_validation(spark):
@@ -675,7 +670,7 @@ def test_cc_incremental_empty_batch_and_fresh_only(spark):
 # ------------------------------------------------ join strategy
 
 
-def test_checkpoint_cut_frame_keeps_stats_and_broadcasts(spark):
+def test_checkpoint_cut_frame_keeps_stats_and_broadcasts(spark, monkeypatch):
     """The planner fact that lets the graph ops, enrich_false_negatives
     and dedup_clusters join cut frames without a broadcast hint: a
     vertex-sized frame cut by ``cache.plan_boundary`` (eager or lazy)
@@ -685,6 +680,7 @@ def test_checkpoint_cut_frame_keeps_stats_and_broadcasts(spark):
     fails instead of those joins quietly turning into edge shuffles."""
     from capex_data_pipeline_spark.cache import persisted, plan_boundary
 
+    monkeypatch.delenv("SPARK_GRAFT_BOUNDARY", raising=False)
     threshold = (
         spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     )
@@ -698,7 +694,7 @@ def test_checkpoint_cut_frame_keeps_stats_and_broadcasts(spark):
         F.count(F.lit(1)).alias("deg")
     )
     for eager in (True, False):
-        cut = plan_boundary(verts, mode="local", eager=eager, label="pin")
+        cut = plan_boundary(verts, eager=eager, label="pin")
         qe = cut._jdf.queryExecution()
         size = int(qe.optimizedPlan().stats().sizeInBytes())
         assert 0 < size <= threshold, (eager, size)
